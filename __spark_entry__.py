@@ -71,83 +71,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return _contract.QUERIES["scored_documents"](spark, "/root/testdata/sf0.001")
 
 
-# Session-3 additions beyond the original 46 never-driver-verified entries.
-# The driver's correctness window is its first 50 rows, so only 4 of these
-# fit this round: the priority list picks which (skew evidence + the new
-# geo/LLM-pipeline flagships); the rest sort after and get their driver
-# rows next round via the same never-verified-first rule.
-_SESSION3_NEW = (
-    # window priority (4 spare slots after the 46 carried-over entries)
-    "track_simplify", "line_dedup_stats", "contamination_check",
-    "hot_cell_salted_profile",
-    # next round's window candidates
-    "track_stats", "inverted_index", "bm25_top_docs", "pmi_cooccurrence",
-    "url_host_rollup", "crawl_latest_snapshot", "funnel_conversion",
-    "session_paths", "pagerank_cosupply", "outlink_host_graph",
-    "snapshot_diff", "triangle_count", "click_attribution",
-    "gap_fill_daily", "cohort_retention", "cms_heavy_hitters",
-    "daily_anomalies", "rolling_daily_totals",
-    # session-5 additions (also queued behind the round-3 window)
-    "quadkey_tile_counts", "unigram_logprob", "zipf_vocab_fit",
-    "user_growth_daily", "pii_scrub_stats", "bloom_prune_join",
-    # session-6 additions (queued behind the round-3 window; without this
-    # they would land in the `fresh` block and displace the planned picks)
-    "winnowing_fingerprints", "blocklist_filter_stats",
-    "hist_quantile_sketch", "int8_quant_recall", "crawl_schedule_timeline",
-    "frontier_bfs_depths", "html_text_extract", "robots_allow_audit",
-    "ewma_daily_values", "weighted_sample_topk", "corpus_mix_plan",
-    "geohash_cell_counts", "leakage_safe_split", "bot_regularity_profile",
-    "containment_pairs", "mirror_source_matrix", "redirect_resolution",
-    "anchor_text_index", "lang_confusion_matrix", "compaction_bin_plan",
-    "zonemap_prune_audit", "track_crossings", "ks_value_drift",
-    "quantile_normalize_lengths", "title_editdist_pairs",
-    "metric_correlation_matrix",
-    # session-7 additions (same queue discipline)
-    "dup_span_stats", "interval_union_coverage", "encoding_advisor",
-    "cusum_changepoints", "chi2_category_drift", "map_match_points",
-    "unpivot_metrics", "hits_hub_authority", "dow_seasonal_profile",
-    "skyline_pareto_front", "json_key_profile",
-    "grouping_sets_report", "late_arrival_audit", "rrf_fusion", "ngram_novelty_decay",
-    "acf_daily_lags", "zorder_prune_audit", "calibration_bins", "target_encoding_loo", "k_anonymity_audit", "merge_upsert_apply", "graph_reciprocity", "dense_cell_clusters", "quadtree_leaves", "tfidf_cosine_pairs", "stored_query_match", "time_travel_file_state", "symspell_typo_pairs", "stream_disorder_kendall", "cell_compact", "source_diversity_index", "idw_grid_interpolation", "embedding_top_component", "conformal_interval_audit", "kaplan_meier_retention", "mutual_information_profile", "basket_pair_lift", "track_turning_stats", "od_flow_matrix", "dedup_eval_pr", "rake_keyphrases", "host_h_index", "morans_i_autocorrelation", "value_gini_by_type", "burst_episodes", "forecast_backtest_snaive", "bpe_train_merges", "bpe_encode_stats", "neyman_allocation", "lsh_tuning_curve", "abtest_conversion_z", "trigram_like_search", "cluster_modularity", "merkle_partition_tree", "trending_terms", "dedup_funnel_report", "geometric_median_tracks", "mahalanobis_outliers", "did_estimate", "theil_sen_daily_trend", "transition_entropy", "benford_audit", "selectivity_estimate_audit", "partition_skew_audit", "merge_conflict_audit", "join_cardinality_audit", "flow_vector_field", "ripley_k_function", "cluster_canonicals", "rank_biased_overlap", "hill_tail_index", "vocab_coverage_curve",
-    # session-8 additions (same queue discipline)
-    "dbscan_point_clusters", "kde_heatmap", "nn_distance_profile",
-    "roc_auc_eval", "poisson_bootstrap_ci", "ols_multifeature",
-    "subtree_rollup", "ivm_agg_delta", "kcore_peel", "cohens_kappa",
-    "bbox_intersect_pairs", "semdedup_prune", "bigram_logprob_interp",
-    # session-9 additions (same queue discipline)
-    "sequence_packing_plan", "fk_orphan_audit", "scd2_dimension_build",
-    "adamic_adar_linkpred", "track_hausdorff_pairs", "media_waveform_stats",
-    "mor_delete_apply", "mann_whitney_drift", "haversine_band_counts",
-    "degree_assortativity", "textrank_keywords", "raster_slope_aspect",
-    "vacuum_retention_audit", "media_ahash_groups", "pq_quant_recall",
-    "mrl_trunc_recall", "winsorized_value_stats", "cell_trend_hotspots",
-    "bellman_ford_distances", "stay_point_episodes", "radius_of_gyration",
-    # session-10 additions (same queue discipline)
-    "getis_ord_hotspots", "rfm_segments", "item_cf_similarity",
-    "mad_outliers", "co_movement_pairs", "lpa_communities",
-    "geofence_dwell_stats", "lang_balance_resample",
-    "average_precision_eval", "expectations_audit",
-    "dow_adjusted_anomalies", "flow_accumulation_d8",
-    "ndcg_eval", "embedding_drift_check", "holt_linear_forecast",
-    "areal_interpolation", "gravity_model_od", "isotonic_calibration",
-    "feature_hash_collision_audit", "duplicate_txn_flags",
-    "l_diversity_audit", "threshold_optimizer", "ipf_balanced_od",
-    # session-11 additions (same queue discipline)
-    "readability_bands", "spearman_corr", "registered_domain_rollup",
-    "phonetic_blocking_pairs", "markov_steady_state",
-    "dsir_importance_select", "kcenter_coreset", "t_closeness_audit",
-    "brier_decomposition", "hard_sigmoid_logreg", "octagon_hull_area",
-    "fellegi_sunter_weights", "twap_user_values", "js_divergence_sources",
-    "bitmap_day_overlap", "schema_evolution_audit", "ipw_ate_estimate",
-    "silhouette_simplified", "mase_forecast_eval",
-    "conversion_latency_quantiles", "knox_spacetime_test",
-    "theil_decomposition", "psi_score_drift", "cell_term_lift",
-    "ivm_join_delta", "pit_join_orders", "vocab_richness_estimates",
-    "burrows_delta_pairs", "local_clustering_coeff", "jl_projection_audit",
-    "shapley_attribution", "growth_accounting_weekly",
-)
-
-
 # Round-4 driver window (judge's explicit priority list, VERDICT.md "Next
 # round" #3): LLM-pipeline and reference-surface operators first, then the
 # two post-green rewrites (`window_rank`, `value_deciles`) for

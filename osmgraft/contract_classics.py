@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
+from osmgraft.runtime.cut import cut
 
 _TYPES = ("click", "error", "purchase", "signup", "view")
 _CENTS = "CAST(FLOOR(value * 100e0) AS BIGINT)"
@@ -259,7 +260,7 @@ def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = ev.groupBy(
         F.col("user_id").alias("u"), F.col("event_type").alias("ty")
     ).agg(F.count("*").cast("long").alias("c"))
-    cnt = cnt.localCheckpoint()
+    cnt = cut(cnt)
     nu = cnt.agg(
         F.countDistinct("u").cast("long").alias("n_users")
     )
@@ -269,7 +270,7 @@ def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nu))
         .where(F.col("c") * F.col("n_users") > F.col("tot"))
         .select("u", "ty")
-        .localCheckpoint()
+        .transform(cut)
     )
     colsum = flags.groupBy("ty").agg(F.count("*").cast("long").alias("ct"))
     rowsum = flags.groupBy("u").agg(F.count("*").cast("long").alias("r"))
@@ -414,7 +415,7 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"CASE WHEN user_id % 2 = 1 THEN {_CENTS} ELSE 0 END")
             ).cast("long").alias("v"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     nn = daily.agg(F.expr(f"CAST(COUNT(*) AS {_D38})").alias("n"))
     j = daily.select(
@@ -427,7 +428,7 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dj", "dk",
         F.abs(F.col("ju") - F.col("ku")).cast("long").alias("a"),
         F.abs(F.col("jv") - F.col("kv")).cast("long").alias("b"),
-    ).localCheckpoint()
+    ).transform(cut)
     rws = pairs.groupBy("dj").agg(
         F.sum("a").cast("long").alias("ra"), F.sum("b").cast("long").alias("rb")
     )
@@ -638,7 +639,7 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("d")
         )
         .agg(F.sum(F.expr(_CENTS)).cast("long").alias("y"))
-        .localCheckpoint()
+        .transform(cut)
     )
     nn = daily.agg(F.count("*").cast("long").alias("n"))
     i = daily.select(F.col("d").alias("di"), F.col("y").alias("yi"))
@@ -658,7 +659,7 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("td")
         .agg(F.sum("s").cast("long").alias("u"))
-        .localCheckpoint()
+        .transform(cut)
     )
     k = ut.agg(F.max(F.abs(F.col("u"))).cast("long").alias("kk"))
     star = (

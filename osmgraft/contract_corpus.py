@@ -506,7 +506,7 @@ def pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Marginal word counts aggregate the same scan, and the two scalar
     totals broadcast. The window width bounds pair fanout at w x len per
     doc — linear in corpus size, never quadratic. The pair and word
-    count relations are ``localCheckpoint``-ed: each feeds both a scalar
+    count relations are ``cut``: each feeds both a scalar
     total and the scoring join (words feed TWO broadcast copies), and
     without the cut the pair explode+shuffle runs twice and the word agg
     three times (measured 3x the runtime at sf0.1).

@@ -79,6 +79,7 @@ from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
 from osmgraft.contract_cells import _DC_PX, _DC_PY
+from osmgraft.runtime.cut import cut
 
 _D38 = "DECIMAL(38,0)"
 
@@ -158,7 +159,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar — n(n-1)/2 = 435 pairs, never data-sized).  Cites reference
     generate_weekly_report.sh:42-281 (trend sections).
     """
-    daily = _daily_cents(spark, sf_dir).localCheckpoint()
+    daily = cut(_daily_cents(spark, sf_dir))
     a = daily.select(F.col("d").alias("ad"), F.col("y").alias("ay"))
     b = daily.select(F.col("d").alias("bd"), F.col("y").alias("by"))
     s = (
@@ -283,7 +284,7 @@ def cross_correlation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr(f"CASE WHEN user_id % 2 = 1 THEN {_CENTS} ELSE 0 END"))
         .cast("long")
         .alias("v"),
-    ).localCheckpoint()
+    ).transform(cut)
     lags = spark.range(8).select(F.col("id").cast("long").alias("lag"))
     a = halves.select(F.col("d").alias("ad"), "u")
     b = halves.select(F.col("d").alias("bd"), "v")
@@ -394,7 +395,7 @@ def tukey_hsd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"CAST(FLOOR((n * sxx - s * s) * 1.0e0 / n + 0.5e0) AS {_D38})"
         ).alias("ssw"),
-    ).localCheckpoint()
+    ).transform(cut)
     tot = w.agg(
         F.sum("n").alias("nn"),
         F.expr(f"CAST(COUNT(*) AS {_D38})").alias("k"),
@@ -602,7 +603,7 @@ def good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("r"))
     )
     nr = c.groupBy("r").agg(F.count("*").cast("long").alias("n_r"))
-    nr = nr.localCheckpoint()
+    nr = cut(nr)
     tot = nr.agg(
         F.sum(F.expr("r * n_r")).cast("long").alias("n_tokens")
     )

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from osmgraft.analytics.ranking import with_global_rank
 from osmgraft.contract import q, t
 from osmgraft.contract_select import _PB_NAME_SQL, _PB_FIRST, _PB_LAST, _pb_case
+from osmgraft.runtime.cut import cut
 
 
 def _fold_scalar(df: DataFrame, *cols) -> DataFrame:
@@ -591,7 +592,7 @@ def cluster_nmi_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint = sig.groupBy("bucket", "label").agg(
         F.count("*").cast("long").alias("nxy")
     )
-    joint = joint.localCheckpoint()
+    joint = cut(joint)
     mx = joint.groupBy("bucket").agg(F.sum("nxy").cast("long").alias("nx"))
     my = joint.groupBy("label").agg(F.sum("nxy").cast("long").alias("ny"))
     tot = joint.agg(F.sum("nxy").cast("long").alias("n"))
@@ -831,7 +832,7 @@ def bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = (
         members.select(F.explode(F.expr(pos_arr)).alias("pos")).distinct()
     )
-    bits = bits.localCheckpoint()
+    bits = cut(bits)
     # zero internal actions: member/probe counts and the set-bit count
     # fold into the final projection as broadcast one-row cross joins
     halves = docs.agg(
@@ -3235,7 +3236,7 @@ def xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("d")
     mr = daily.select(
         "d", "c", F.abs(F.col("c") - F.lag("c").over(w)).alias("m")
-    ).localCheckpoint()
+    ).transform(cut)
     s = mr.agg(
         F.count("*").cast("long").alias("n_days"),
         F.sum("c").cast("long").alias("sc"),
@@ -3458,7 +3459,7 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
         )
         .distinct()
-        .localCheckpoint()
+        .transform(cut)
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -3597,7 +3598,7 @@ def kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr(f"CAST(x AS {D}) * x")).alias("sxx"),
         F.sum(F.expr(f"CAST(x AS {D}) * y")).alias("sxy"),
         F.sum(F.expr(f"CAST(y AS {D}) * y")).alias("syy"),
-    ).localCheckpoint()
+    ).transform(cut)
     tot = s.agg(
         F.sum("n").alias("tn"), F.sum("sx").alias("tsx0"),
         F.sum("sy").alias("tsy0"), F.sum("sxx").alias("tsxx0"),
@@ -3822,7 +3823,7 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(F.col("d") * 2 >= F.col("mid2"), F.col("cents")).otherwise(0)
         ).cast("long").alias("y"),
-    ).localCheckpoint()
+    ).transform(cut)
     D = "DECIMAL(38,0)"
     s = u.agg(
         F.count("*").cast("long").alias("n"),
@@ -4219,7 +4220,7 @@ def fdr_bh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CASE WHEN p_micro * m <= rnk * {_BH_ALPHA_PPM}"
             " THEN 1 ELSE 0 END"
         ).alias("passes"),
-    ).localCheckpoint()
+    ).transform(cut)
     kmax = crit.where(F.col("passes") == 1).agg(
         F.coalesce(F.max("rnk"), F.lit(0)).alias("k")
     )
@@ -4303,7 +4304,7 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.expr("CAST(FLOOR(value * 100e0) AS BIGINT)"))
         .cast("long").alias("c")
-    ).localCheckpoint()
+    ).transform(cut)
     n = daily.count()
     rk = daily.select(
         "c", F.row_number().over(Window.orderBy("c", "d")).alias("r")
@@ -4411,7 +4412,7 @@ def gap_threshold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = g.groupBy(
         F.expr("CAST(FLOOR(LOG2(gap + 1.0e0)) AS BIGINT)").alias("bin")
-    ).agg(F.count("*").cast("long").alias("n_gaps")).localCheckpoint()
+    ).agg(F.count("*").cast("long").alias("n_gaps")).transform(cut)
     top2 = [
         r.bin
         for r in b.orderBy(F.desc("n_gaps"), "bin").limit(2).collect()
@@ -4643,7 +4644,7 @@ def empirical_variogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "px", "py", "z",
         F.expr(f"CAST(FLOOR(px / {_VG_CELL}.0e0) AS BIGINT)").alias("cx"),
         F.expr(f"CAST(FLOOR(py / {_VG_CELL}.0e0) AS BIGINT)").alias("cy"),
-    ).localCheckpoint()
+    ).transform(cut)
     fan = c.select(
         F.col("event_id").alias("ida"), F.col("px").alias("pxa"),
         F.col("py").alias("pya"), F.col("z").alias("za"),
@@ -4769,7 +4770,7 @@ def eb_shrunk_cell_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = pts.groupBy("cx", "cy").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("conv").cast("long").alias("x"),
-    ).localCheckpoint()
+    ).transform(cut)
     g = cell.agg(
         F.sum("n").cast("long").alias("nt"),
         F.sum("x").cast("long").alias("xt"),
@@ -4920,7 +4921,7 @@ def join_count_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CASE WHEN x * 1000000 > n * p_ppm THEN 1 ELSE 0 END"
         ).alias("black"),
-    ).localCheckpoint()
+    ).transform(cut)
     srow = bmap.agg(
         F.count("*").cast("long").alias("k"),
         F.sum("black").cast("long").alias("nb"),
@@ -5040,7 +5041,7 @@ def recurrence_quantification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = daily.select(
         F.row_number().over(Window.orderBy("d")).alias("i"), "c"
-    ).localCheckpoint()
+    ).transform(cut)
     row = idx.agg(
         F.expr("(MAX(c) - MIN(c)) div 10").alias("e"),
         F.count("*").alias("m"),
@@ -5051,7 +5052,7 @@ def recurrence_quantification(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.join(b, F.col("ib") > F.col("i"))
         .where(F.abs(F.col("c") - F.col("cb")) <= eps)
         .select(F.col("i").alias("ia"), "ib")
-        .localCheckpoint()
+        .transform(cut)
     )
     nxt = rec.select(
         (F.col("ia") - 1).alias("pa"), (F.col("ib") - 1).alias("pb")
@@ -5171,7 +5172,7 @@ def position_based_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN rn = len THEN 400000"
             " ELSE 200000 div (len - 2) END"
         ).alias("w"),
-    ).localCheckpoint()
+    ).transform(cut)
     tot = credit.agg(F.sum("w").alias("tw")).collect()[0]["tw"]
     return (
         credit.groupBy(F.col("et").alias("channel"))
@@ -5277,7 +5278,7 @@ def secretary_rule_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
     seq = ev.select(
         "user_id", "cents", F.row_number().over(w).alias("rn")
-    ).localCheckpoint()
+    ).transform(cut)
     ua = seq.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n"),
         F.expr("CAST(COUNT(*) * 37 div 100 AS BIGINT)").alias("k"),
@@ -5912,7 +5913,7 @@ def bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cents") + 500).alias("cents"),
         F.lit(1).alias("is_corr"),
     )
-    facts = ev.unionAll(corr).localCheckpoint()
+    facts = ev.unionAll(corr).transform(cut)
     rng = facts.agg(
         F.min("valid_t").alias("t0"), F.max("tx_t").alias("t1")
     ).collect()[0]
@@ -6638,7 +6639,7 @@ def lisa_quadrants(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = pts.groupBy("cx", "cy").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("conv").cast("long").alias("x"),
-    ).localCheckpoint()
+    ).transform(cut)
     pbar = cell.agg(
         F.expr("SUM(x) * 1.0e0 / SUM(n)").alias("p")
     ).collect()[0]["p"]
@@ -7025,7 +7026,7 @@ def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.datediff(F.lit(wend), F.col("last_day")) <= 2, 1
         ).otherwise(0).alias("censored"),
-    ).localCheckpoint()
+    ).transform(cut)
     arms = lt.agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
         .cast("long").alias("nt1"),
@@ -7310,7 +7311,7 @@ def dunning_llr_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    pairs = pairs.localCheckpoint()
+    pairs = cut(pairs)
     nn = pairs.count()
     c12 = pairs.groupBy("w1", "w2").agg(
         F.count("*").cast("long").alias("k11")
@@ -7392,7 +7393,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = t(spark, sf_dir, "embeddings").select(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v")
-    ).localCheckpoint()
+    ).transform(cut)
     # zero internal actions: counts, the per-dimension mean-square and
     # the norm sum fold into ONE plan over the checkpointed relation via
     # broadcast one-row cross joins; every arithmetic step is the same
@@ -7549,7 +7550,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"z{k}")
             for k in range(_MP_W)
         ],
-    ).localCheckpoint()
+    ).transform(cut)
     b = z.select(
         F.col("i").alias("ib"),
         *[F.col(f"z{k}").alias(f"w{k}") for k in range(_MP_W)],
@@ -7935,7 +7936,7 @@ def linear_shap_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("x2"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("long").alias("y"),
-    ).localCheckpoint()
+    ).transform(cut)
     D = "DECIMAL(38,0)"
     s = u.agg(
         F.count("*").cast("long").alias("n"),
@@ -8250,7 +8251,7 @@ def frozen_threshold_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # remains the single internal action
     lab = _fold_scalar(ev, F.min("d").alias("d0")).select(
         F.expr("(d - d0) div 7").alias("wk"), "band", "y"
-    ).localCheckpoint()
+    ).transform(cut)
     cand = lab.select(F.col("band").alias("thr")).distinct()
     w0 = lab.where(F.col("wk") == 0).groupBy("band", "y").agg(
         F.count("*").alias("c")
@@ -8473,7 +8474,7 @@ def edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
         )
         .distinct()
-        .localCheckpoint()
+        .transform(cut)
     )
     e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = e.select(F.col("a").alias("y2"), F.col("b").alias("z"))
@@ -8553,7 +8554,7 @@ def value_at_risk_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.expr("CAST(FLOOR(value * 100e0) AS BIGINT)"))
         .cast("long").alias("c")
-    ).localCheckpoint()
+    ).transform(cut)
     n = daily.count()
     rk = daily.select(
         "c", F.row_number().over(Window.orderBy("c", "d")).alias("r")
@@ -8640,7 +8641,7 @@ def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d", "eq",
         F.max("eq").over(w).alias("peak"),
         (F.max("eq").over(w) - F.col("eq")).alias("drawdown"),
-    ).localCheckpoint()
+    ).transform(cut)
     worst = dd.orderBy(F.desc("drawdown"), "d").limit(1).collect()[0]
     peak_day = int(
         dd.where(
@@ -8730,7 +8731,7 @@ def energy_distance_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).select(
         "event_type", F.expr(X_EXPR).alias("px"), F.expr(Y_EXPR).alias("py")
-    ).localCheckpoint()
+    ).transform(cut)
     x = pts.where(F.col("event_type") == "purchase").select("px", "py")
     y = pts.where(F.col("event_type") == "click").select("px", "py")
 
@@ -9051,7 +9052,7 @@ def cliffs_delta_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.expr("CAST(FLOOR(value * 100e0) AS BIGINT)"))
         .cast("long").alias("c")
-    ).localCheckpoint()
+    ).transform(cut)
     we = daily.where(F.expr("(d + 4) % 7 IN (5, 6)")).select("c")
     wd = daily.where(F.expr("(d + 4) % 7 NOT IN (5, 6)")).select(
         F.col("c").alias("cb")
@@ -9146,7 +9147,7 @@ def weibull_rank_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lt = u.select(
         (F.datediff("last_day", "first_day") + 1).cast("long").alias("t")
-    ).localCheckpoint()
+    ).transform(cut)
     n = lt.count()
     rk = lt.select(
         "t", F.row_number().over(Window.orderBy("t")).alias("r")
@@ -9236,7 +9237,7 @@ def posted_price_optimizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     ).select(
         F.expr("CAST(FLOOR(value * 100e0) AS BIGINT)").alias("v")
-    ).localCheckpoint()
+    ).transform(cut)
     cand = bids.select(
         F.expr(f"(v div {_PP_BAND}) * {_PP_BAND}").alias("p")
     ).distinct()
@@ -9320,7 +9321,7 @@ def cache_ttl_hit_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
     gaps = ev.select(
         (F.col("es") - F.lag("es").over(w)).alias("gap")
-    ).where(F.col("gap").isNotNull()).localCheckpoint()
+    ).where(F.col("gap").isNotNull()).transform(cut)
     n = gaps.count()
     ttl = spark.createDataFrame([(s,) for s in _TTL_GRID], "t INT")
     return (
@@ -9488,7 +9489,7 @@ def chow_test_midpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = daily.select(
         (F.col("d") - d0).alias("x"), F.col("c").alias("y"),
         F.expr(f"CASE WHEN d * 2 < {mid2} THEN 1 ELSE 2 END").alias("seg"),
-    ).localCheckpoint()
+    ).transform(cut)
     D = "DECIMAL(38,0)"
 
     def sums(df, seg):
@@ -9766,7 +9767,7 @@ def taylors_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.expr("s1 * 1.0e0 / n").alias("m"),
         F.expr("(s2 * 1.0e0 - s1 * 1.0e0 * s1 / n) / (n - 1)").alias("v"),
-    ).localCheckpoint()
+    ).transform(cut)
     fit = mv.select(
         F.expr("LN(m)").alias("x"), F.expr("LN(v)").alias("y")
     ).agg(
@@ -9834,7 +9835,7 @@ def pareto_8020_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = t(spark, sf_dir, "events").groupBy("user_id").agg(
         F.sum(F.expr("CAST(FLOOR(value * 100e0) AS BIGINT)"))
         .cast("long").alias("v")
-    ).localCheckpoint()
+    ).transform(cut)
     tot = u.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("v").cast("long").alias("s"),

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmgraft.contract import X_EXPR, Y_EXPR, q, t
+from osmgraft.runtime.cut import cut
 
 _CS = 50_000  # raster cell size (same DEM as raster_slope_aspect)
 
@@ -169,7 +170,7 @@ def marching_squares_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.crossJoin(F.broadcast(tot))
         .where(F.col("z") * F.col("n_cells") >= F.col("z_total"))
         .select("cx", "cy")
-        .localCheckpoint()
+        .transform(cut)
     )
     offsets = spark.createDataFrame(
         [(0, 0), (1, 0), (0, 1), (1, 1)], "ox int, oy int"
@@ -259,7 +260,7 @@ def focal_mean_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     convolution pattern — no windowed neighborhood sort, no 8-way join
     fan-out, and the same single-shuffle plan at any raster size.
     """
-    grid = _grid(spark, sf_dir).localCheckpoint()
+    grid = cut(_grid(spark, sf_dir))
     offsets = spark.createDataFrame(
         [(ox, oy) for ox in (-1, 0, 1) for oy in (-1, 0, 1)],
         "ox int, oy int",
@@ -448,7 +449,7 @@ def mst_hub_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("hub")
         .agg(F.min("xi").alias("hx"), F.min("yi").alias("hy"))
-        .localCheckpoint()
+        .transform(cut)
     )
     a = hubs.select(
         F.col("hub").alias("u"), F.col("hx").alias("ax"),
@@ -467,7 +468,7 @@ def mst_hub_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
             ).alias("w"),
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     wprime = F.col("w") * 2048 + 37 * F.col("u") + F.col("v")
     fwd = edge.select("u", "v", wprime.alias("d"))

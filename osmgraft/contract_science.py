@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
 from osmgraft.contract_cells import _DC_PX, _DC_PY
+from osmgraft.runtime.cut import cut
 
 # ---------------------------------------------------------------------------
 # Geary's C contiguity ratio over the cell grid
@@ -2145,7 +2146,7 @@ def closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply the frontier, not the edge list; each round is one
     frontier ⋈ edges equi-join + a (src,node)-keyed MIN partial agg,
     exactly the vertex-program shape GraphX/Pregel runs, with the
-    fixed round budget bounding lineage (localCheckpoint at the end).
+    fixed round budget bounding lineage (a cut at the end).
 
     Reference surface: generalizes the reference's "distance to
     nearest POI" verification scans into whole-graph reach scoring.
@@ -2167,7 +2168,7 @@ def closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     e = e0.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e0.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint()
+    ).transform(cut)
     nodes = e.select(F.col("u").alias("n")).distinct()
     d = nodes.where(F.col("n") % _CCN_SRC_MOD == 0).select(
         F.col("n").alias("src"),
@@ -2183,7 +2184,7 @@ def closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src", "node")
             .agg(F.min("dist").alias("dist"))
         )
-    d = d.localCheckpoint()
+    d = cut(d)
     micro = F.when(
         F.col("dist") > 0,
         F.floor(F.lit(1000000.0) / F.col("dist") + F.lit(0.5)).cast("long"),

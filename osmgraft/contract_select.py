@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
+from osmgraft.runtime.cut import cut
 
 # ---------------------------------------------------------------------------
 # Flesch readability bands
@@ -569,7 +570,7 @@ def markov_steady_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         cm.join(rs, "i")
         .select("i", "j", F.expr("c * 1000000 div tot").alias("p_micro"))
-        .localCheckpoint()
+        .transform(cut)
     )
     v = p.select("i").distinct().select(
         F.col("i").alias("state"), F.lit(200000).cast("long").alias("v")
@@ -584,8 +585,8 @@ def markov_steady_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("state2").alias("state"), "v")
         )
         if r % 4 == 3:
-            v = v.localCheckpoint()
-            prev = prev.localCheckpoint()
+            v = cut(v)
+            prev = cut(prev)
     b = prev.select(F.col("state").alias("state_b"), F.col("v").alias("v_b"))
     return (
         v.join(b, v.state == b.state_b)
@@ -1514,7 +1515,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CASE WHEN fa = fb AND la = lb THEN 1 ELSE 0 END"
         ).alias("is_match"),
-    ).localCheckpoint()
+    ).transform(cut)
     mu = cand.agg(
         (F.sum("is_match") + 1).cast("long").alias("nm"),
         (F.sum(1 - F.col("is_match")) + 1).cast("long").alias("nu"),
@@ -1895,7 +1896,7 @@ def schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         vers.crossJoin(F.broadcast(cols))
         .where(F.expr(f"cid % 6 <= v AND NOT (cid = 7 AND v >= 6)"))
         .select("v", "cid", F.expr(_SE_TYPE).alias("ctype"))
-        .localCheckpoint()
+        .transform(cut)
     )
     c = cat.select(
         F.col("v").alias("cv"), F.col("cid").alias("ccid"),
@@ -2342,7 +2343,7 @@ def knox_spacetime_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)").alias("d"),
     )
     cd = pts.groupBy("cx", "cy", "d").agg(F.count("*").cast("long").alias("c"))
-    cd = cd.localCheckpoint()
+    cd = cut(cd)
     cc = cd.groupBy("cx", "cy").agg(F.sum("c").cast("long").alias("c"))
     dd = cd.groupBy("d").agg(F.sum("c").cast("long").alias("c"))
     b = cd.select(
@@ -3209,7 +3210,7 @@ def local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.where(F.col("u") != F.col("v"))
         .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
         .distinct()
-        .localCheckpoint()
+        .transform(cut)
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -3603,7 +3604,7 @@ def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wk"),
         )
         .distinct()
-        .localCheckpoint()
+        .transform(cut)
     )
     w = Window.partitionBy("user_id").orderBy("wk")
     wa = Window.partitionBy("user_id")

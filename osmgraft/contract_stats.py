@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
+from osmgraft.runtime.cut import cut
 
 _D38 = "DECIMAL(38,0)"
 
@@ -197,7 +198,7 @@ def durbin_watson_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row fit is broadcast.  Cites reference
     generate_weekly_report.sh:42-281 (weekly trend sections).
     """
-    xy = _daily_xy(spark, sf_dir).localCheckpoint()
+    xy = cut(_daily_xy(spark, sf_dir))
     fit = _ols_fit(xy)
     e = _resid(xy, fit)
     l = e.select(
@@ -278,7 +279,7 @@ def breusch_pagan_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ``durbin_watson_autocorr`` — one bounded
     day-keyed agg, broadcast 1-row fit, no windows over raw rows.
     """
-    xy = _daily_xy(spark, sf_dir).localCheckpoint()
+    xy = cut(_daily_xy(spark, sf_dir))
     fit = _ols_fit(xy)
     u = _resid(xy, fit).select(
         "x",
@@ -369,7 +370,7 @@ def cooks_distance_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the rank orders the 30-row bounded daily relation;
     raw rows see one partial agg only.
     """
-    xy = _daily_xy(spark, sf_dir).localCheckpoint()
+    xy = cut(_daily_xy(spark, sf_dir))
     fit = _ols_fit(xy)
     e = _resid(xy, fit)
     sse = e.agg(F.sum(F.expr("ei * ei")).alias("se2"))

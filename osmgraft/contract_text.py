@@ -2727,7 +2727,7 @@ def cluster_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: degrees and labels are key-keyed partial aggs; the
     intra-edge count joins the pair list to the label table twice on the
     doc key; the total is a window over community rows. The pair list is
-    ``localCheckpoint``-ed: it feeds the edge-count scalar, the CC
+    ``cut``: it feeds the edge-count scalar, the CC
     labeller, the degree agg AND the intra-edge join — four consumers
     that would otherwise each re-run the shingle pair join.
     """
@@ -2874,7 +2874,7 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each stage is the already-audited detector plus an
     anti-join against the previous survivor set on the doc key; counts
     are partial aggs. Nothing here exceeds the component plans. Each
-    survivor set is ``localCheckpoint``-ed because the funnel needs a
+    survivor set is ``cut`` because the funnel needs a
     COUNT per stage AND feeds the next stage — without the cut the
     four count actions recompute the shingle pair join twice and stage
     1 three times (measured 2.5x the runtime at sf0.1).

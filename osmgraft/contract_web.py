@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osmgraft.contract import q, t
+from osmgraft.runtime.cut import cut
 
 # ---------------------------------------------------------------------------
 # url normalisation + host rollup
@@ -1260,7 +1261,7 @@ def pagerank_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     order width, never table-quadratic) + one partial-agg count; each
     iteration is ONE equi-join on the 8-byte node key + ONE partial agg —
     the identical propagation shape as ``dedup_clusters``'s CC loop, with
-    ``localCheckpoint`` cutting lineage per round so the plan stays
+    ``cut`` truncating lineage per round so the plan stays
     bounded. Per-iteration ranks snap to 10 dp on both engines (sum order
     across partitions is engine-specific; the snap re-synchronises every
     round — see BENCH/BASELINE.md float discipline).
@@ -1280,7 +1281,7 @@ def pagerank_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         e0.join(deg, "src")
         .select("src", "dst", (F.col("w") / F.col("wsum")).alias("frac"))
-        .localCheckpoint()
+        .transform(cut)
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()  # scalar for the teleport term; one number, any scale
@@ -1298,7 +1299,7 @@ def pagerank_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank")
             )
             .withColumnRenamed("dst", "node")
-            .localCheckpoint()
+            .transform(cut)
         )
     return ranks.select(
         F.col("node").cast("long").alias("suppkey"),
@@ -3036,7 +3037,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each iteration is ONE equi-join of the edge list with a
     node-score table plus a partial-agg shuffle on the receiving key —
     O(iters) passes. The edge list and each iteration's raw-score table
-    are ``localCheckpoint``-ed (the ``pagerank_cosupply`` / ``kcore_peel``
+    are ``cut`` (the ``pagerank_cosupply`` / ``kcore_peel``
     round discipline): without the cut, the normalising MAX referencing
     the same raw relation as the quotient doubles the lineage every
     half-iteration (measured 115 s at sf0.1; ~4 s with the cut). The
@@ -3051,7 +3052,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c")
         )
         .agg(F.count("*").cast("double").alias("w"))
-        .localCheckpoint()
+        .transform(cut)
     )
     h = e.select(F.col("s").alias("node")).distinct().withColumn(
         "score", F.lit(1.0)
@@ -3063,7 +3064,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("c").alias("node"))
             .agg(F.round(F.sum(F.col("score") * F.col("w")), _HITS_SNAP)
                  .alias("raw"))
-            .localCheckpoint()
+            .transform(cut)
         )
         amax = ar.agg(F.max("raw").alias("mx"))
         a = ar.crossJoin(F.broadcast(amax)).select(
@@ -3075,7 +3076,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("s").alias("node"))
             .agg(F.round(F.sum(F.col("score") * F.col("w")), _HITS_SNAP)
                  .alias("raw"))
-            .localCheckpoint()
+            .transform(cut)
         )
         hmax = hr.agg(F.max("raw").alias("mx"))
         h = hr.crossJoin(F.broadcast(hmax)).select(
@@ -5406,7 +5407,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is one degree partial-agg + two semi-join
     prunes on 8-byte keys (the ``dedup_clusters`` discipline,
-    localCheckpoint between rounds); rounds are O(peel depth), and real
+    a cut between rounds); rounds are O(peel depth), and real
     web graphs peel shallowly.
     """
     docs = t(spark, sf_dir, "documents")
@@ -5427,7 +5428,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
         )
         .distinct()
-        .localCheckpoint()
+        .transform(cut)
     )
     prev_count = e.count()
     last_peel_count = prev_count
@@ -5443,7 +5444,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.join(keep.withColumnRenamed("n", "a"), "a")
             .join(keep.withColumnRenamed("n", "b"), "b")
             .select("a", "b")
-            .localCheckpoint()
+            .transform(cut)
         )
         if i == _KC_ROUNDS - 2:
             last_peel_count = e.count()
@@ -5881,7 +5882,7 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = raw.groupBy("u", "v").agg(F.min("w").cast("long").alias("w"))
     e = e0.unionAll(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    ).localCheckpoint()
+    ).transform(cut)
     d = e.sparkSession.range(1).select(
         F.lit(_BF_SRC).cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
@@ -5896,7 +5897,7 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-    d = d.localCheckpoint()
+    d = cut(d)
     n_reached = d.agg(F.count("*").cast("long").alias("n_reached"))
     return (
         d.crossJoin(F.broadcast(n_reached))

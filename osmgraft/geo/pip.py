@@ -251,7 +251,7 @@ class PipIndex:
     """Reusable point-in-polygon index over one boundary set.
 
     Holds the broadcast R-tree plus (for the hybrid path) the classified
-    cell map, materialized once via ``localCheckpoint`` so every join that
+    cell map, materialized once via ``cut`` so every join that
     reuses the index is pure JVM downstream (the map scans as an
     ExistingRDD — no Python stage in the join plan).  At production scale
     the boundary set is a dimension table: build the index once per job
@@ -313,7 +313,7 @@ class PipIndex:
         # round 3); a broadcast + one mapInPandas batch costs ~0.05 s and
         # does not depend on the session's Arrow *conversion* config
         # (pandas UDF transport is always Arrow, even on a vanilla harness
-        # session). localCheckpoint materializes the 4^res rows so joins
+        # session). The cut materializes the 4^res rows so joins
         # that reuse the index scan an ExistingRDD — pure JVM.
         bc_map = spark.sparkContext.broadcast(
             (cells.astype(np.int64), cell_assign, is_boundary)

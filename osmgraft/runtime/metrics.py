@@ -5,16 +5,11 @@ Collectors:
 - `collect_stage_metrics`: per-partition row counts via spark_partition_id
   (one extra pass; the single lineage source — StageRunner manifests call
   it directly).
-- `StageMetricsLog`: JSON-lines sink for per-stage records.
 """
 
 from __future__ import annotations
 
-import json
-import time
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -38,19 +33,3 @@ def collect_stage_metrics(df: DataFrame) -> dict:
         ),
     }
 
-
-class StageMetricsLog:
-    """Append-only JSONL log of stage metrics (driver-side)."""
-
-    def __init__(self, path: str):
-        self.path = Path(path)
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-
-    def record(self, stage: str, df: DataFrame, extra: dict | None = None) -> dict:
-        t0 = time.time()
-        m = collect_stage_metrics(df)
-        m.update({"stage": stage, "collect_sec": round(time.time() - t0, 3),
-                  **(extra or {})})
-        with self.path.open("a") as f:
-            f.write(json.dumps(m) + "\n")
-        return m

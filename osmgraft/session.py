@@ -42,10 +42,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        # reliable-mode materialization cuts (runtime/cut.py) checkpoint
-        # per reused relation; without this Spark never deletes the
-        # checkpoint files and a multi-query session grows the
-        # checkpoint dir monotonically
+        # when the session has a checkpoint dir, every materialization
+        # cut (runtime/cut.py) writes its relation there; without this
+        # Spark never deletes the checkpoint files and a multi-query
+        # session grows the checkpoint dir monotonically
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -301,8 +301,7 @@ def connected_components(
     Each round: one partial-agg min per node, one broadcast-sized
     relabel join (the label table is one row per ORIGINAL node, the map
     one row per surviving node), one edge-contraction join + distinct.
-    Lineage is cut with localCheckpoint; superseded checkpoints are
-    dropped once their successor is materialized. The convergence test
+    Lineage is truncated with ``cut`` every round. The convergence test
     is the contracted edge COUNT (reaches zero), never a label-sum —
     int64-overflow-safe under ANSI mode with hashed ids near ±2^63.
     """
@@ -320,7 +319,6 @@ def connected_components(
         .withColumn("lbl", F.col("id"))
         .transform(cut)
     )
-    retired: list[DataFrame] = []
     for _ in range(max_iter):
         m = und.groupBy("a").agg(F.min("b").alias("mb")).select(
             F.col("a").alias("node"),
@@ -344,9 +342,6 @@ def connected_components(
             .transform(cut)
         )
         n_edges = contracted.count()
-        for r in retired:
-            r.unpersist(False)
-        retired = [labels, und]
         labels, und = relabeled, contracted
         if n_edges == 0:
             break

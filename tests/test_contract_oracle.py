@@ -4,41 +4,11 @@ row count + column names + order-insensitive value hash."""
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
 import pytest
 
 from tests.conftest import SF_CORRECT
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
-        )
-    return con
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6)
-        elif str(df[c].dtype) in ("Int64", "int32", "uint64"):
-            df[c] = df[c].astype("float64")  # unify nullable/int widths
-        elif str(df[c].dtype).startswith("int"):
-            df[c] = df[c].astype("float64")
-        elif str(df[c].dtype).startswith("datetime"):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+from tools.parity_sweep import canon, duck_views
 
 
 def _pairs():
@@ -55,13 +25,13 @@ def test_oracle_match(spark, name, fn, sql):
     if sql is None:
         assert sdf is not None  # rows-only: runs and returns a frame
         return
-    con = _duck(SF_CORRECT)
+    con = duck_views(SF_CORRECT)
     ddf = con.sql(sql).df()
     assert sorted(sdf.columns) == sorted(ddf.columns), (
         f"{name}: columns {sorted(sdf.columns)} != {sorted(ddf.columns)}"
     )
     assert len(sdf) == len(ddf), f"{name}: rows {len(sdf)} != {len(ddf)}"
-    a, b = _canon(sdf), _canon(ddf)
+    a, b = canon(sdf), canon(ddf)
     pd.testing.assert_frame_equal(a, b, check_dtype=False, atol=1e-6,
                                   obj=name)
 

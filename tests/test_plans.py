@@ -6,21 +6,11 @@ aggregation, and the hybrid PIP staying JVM-only for interior cells."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 import osmgraft.contract_cells  # noqa: F401  (registers cell-index queries)
 from osmgraft.contract import QUERIES, SPEC, CELL_RES
 from tests.conftest import SF_CORRECT
-
-
-@pytest.fixture(autouse=True)
-def _cut_mode_local(monkeypatch):
-    """Plan pins are written against the default cut mode: persist keeps
-    lineage (the cached child plan re-exposes Generate/Exchange nodes)
-    and none removes the cut entirely, so an exported OSMGRAFT_CUT_MODE
-    must not leak into these audits."""
-    monkeypatch.setenv("OSMGRAFT_CUT_MODE", "local")
 
 
 def plan_of(df) -> str:
@@ -452,7 +442,7 @@ def test_bm25_topk_is_take_ordered(spark):
 def test_pmi_pairs_generated_in_row(spark):
     """PMI pair generation happens inside the row (per-offset zip_with of
     the token array against its shifted self) — no positional self-join.
-    The pair/word counts are localCheckpoint-ed (each feeds a scalar
+    The pair/word counts are cut (each feeds a scalar
     total AND the scoring join), so the returned plan scans ExistingRDD;
     the audit asserts the scoring stage joins only by broadcast and that
     the checkpointed inputs are in place (the generation itself executed
@@ -662,7 +652,7 @@ def test_hits_iterations_are_hash_joins(spark):
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
-    # the edge list and each iteration's raw scores are localCheckpoint-ed
+    # the edge list and each iteration's raw scores are cut
     # (lineage-doubling fix), so iteration joins executed eagerly inside
     # the checkpoints; the final plan consumes the checkpointed last
     # iteration and must stay scan + 1-row-broadcast normalise + top-k —

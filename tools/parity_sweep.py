@@ -3,9 +3,9 @@ Spark AND DuckDB at an arbitrary scale dir (default sf0.1 — 10x the
 driver's sf0.01 gate, which activates hot-bucket caps, banding paths, and
 rounding-boundary exposure small data never reaches) and compared with the
 driver's canonicalisation (column sort, 6-dp float round, order-insensitive
-row hash).
+row hash). On a mismatch both sides' first rows are printed.
 
-Usage: python tools/parity_sweep.py [sf_dir]
+Usage: python tools/parity_sweep.py [sf_dir] [name ...] [--json out.json]
 """
 
 from __future__ import annotations
@@ -40,6 +40,16 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per registry table in ``sf_dir``."""
+    con = duckdb.connect()
+    for tbl in TABLES:
+        con.execute(
+            f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
+        )
+    return con
+
+
 def main() -> int:
     argv = list(sys.argv[1:])
     json_out = None
@@ -53,24 +63,14 @@ def main() -> int:
     spark = get_spark("parity_sweep")
     import __spark_entry__ as entry
 
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
-        )
+    con = duck_views(sf_dir)
     qs, osql = entry.queries(), entry.oracle_sql()
     only = set(argv[1:])  # optional name filter: sweep only these
     if only:
         qs = {k: v for k, v in qs.items() if k in only}
-    from osmgraft.runtime.cut import release_cuts
-
     n_match = n_fail = n_rows_only = 0
     results: dict[str, dict] = {}
-    # persist-mode cuts: released at the top of each iteration (runs
-    # after `continue` exits too) and once after the loop, so no query's
-    # caches outlive its comparison
     for name, fn in qs.items():
-        release_cuts()
         t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -120,12 +120,14 @@ def main() -> int:
             f"rows={len(s):7d} {time.perf_counter() - t0:5.1f}s",
             flush=True,
         )
+        if not ok:
+            print("spark:\n" + s.head(12).to_string(), flush=True)
+            print("duck:\n" + d.head(12).to_string(), flush=True)
         results[name] = {
             "status": "MATCH" if ok else "MISMATCH",
             "rows": len(s),
             "sec": round(time.perf_counter() - t0, 2),
         }
-    release_cuts()
     print(
         f"\nSWEEP {sf_dir}: {n_match} MATCH, {n_rows_only} rows-only, "
         f"{n_fail} FAIL",

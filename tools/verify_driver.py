@@ -10,11 +10,10 @@ import sys
 
 sys.path.insert(0, ".")
 
-import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from tools.parity_sweep import TABLES, canon
+from tools.parity_sweep import canon, duck_views
 
 
 def main() -> int:
@@ -30,12 +29,7 @@ def main() -> int:
     assert len(rows) > 0
     qs, osql = E.queries(), E.oracle_sql()
     print(f"registry: {len(qs)} oracles: {len(osql)}")
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM "
-            f"'/root/testdata/sf0.01/{tbl}.parquet'"
-        )
+    con = duck_views("/root/testdata/sf0.01")
     fail = 0
     for name in sys.argv[1:]:
         s = canon(qs[name](spark, "/root/testdata/sf0.01").toPandas())
