@@ -9,9 +9,10 @@ Runs: pages → vectorized text→feature extraction → 4 candidate stages
 (filter → score → classify, reference 07_run_all_pipelines.sh) → priority
 dedup-union → final candidates, plus the hex res-`tile_res` tile rollup of
 all extracted points. Stages checkpoint to --workdir with per-partition
-lineage manifests (resume by re-running with the same --workdir and
-fingerprint). Imports only from the shipped zip — no repo-path assumptions
-beyond this file.
+lineage manifests (resume by re-running with the same --workdir). The
+stage fingerprint is derived from the input file listing, so a rewritten
+--pages input recomputes every stage. Imports only from the shipped zip —
+no repo-path assumptions beyond this file.
 
 If --pages is omitted, a deterministic synthetic pages table is generated
 (driver smoke / sandbox mode; no external data).
@@ -30,7 +31,6 @@ def main() -> None:
     ap.add_argument("--workdir", required=True, help="checkpoint/lineage dir")
     ap.add_argument("--out", required=True, help="output dir (parquet)")
     ap.add_argument("--tile-res", type=int, default=8, help="hex tile resolution")
-    ap.add_argument("--fingerprint", default="v1", help="stage resume fingerprint")
     ap.add_argument("--n-synthetic", type=int, default=2000)
     ap.add_argument(
         "--diagnostics",
@@ -96,9 +96,7 @@ def main() -> None:
         os.makedirs(args.out, exist_ok=True)  # local paths; object stores no-op upstream
         with open(f"{args.out}/diagnostics.json", "w") as fh:
             json.dump(diag, fh, indent=1)
-    final = run_reference_pipeline(
-        spark, features, workdir=args.workdir, fingerprint=args.fingerprint
-    )
+    final = run_reference_pipeline(spark, features, workdir=args.workdir)
     final.write.mode("overwrite").parquet(f"{args.out}/candidates")
 
     points = features.where(F.col("x").isNotNull() & F.col("y").isNotNull())

@@ -1,4 +1,4 @@
-"""Broadcast R-tree point-in-polygon join — hybrid cell-grained execution.
+"""Broadcast R-tree point-in-polygon join — cell-grained execution.
 
 The reference's designed proximity/PIP machinery (SCORING_STRATEGY.md:212-220,
 verify_import.py:316 bbox queries) relies on PostGIS GiST. At Spark scale the
@@ -250,14 +250,13 @@ def classify_cells(
 class PipIndex:
     """Reusable point-in-polygon index over one boundary set.
 
-    Holds the broadcast R-tree plus (for the hybrid path) the classified
-    cell map, materialized once via ``cut`` so every join that
-    reuses the index is pure JVM downstream (the map scans as an
-    ExistingRDD — no Python stage in the join plan).  At production scale
-    the boundary set is a dimension table: build the index once per job
-    and amortize it across the whole table scan, exactly as you would a
-    loaded broadcast dim.  ``pip_join`` builds a throwaway one when the
-    caller does not pass ``index=``.
+    Holds the broadcast R-tree plus the classified cell map, materialized
+    once via ``cut`` so every join that reuses the index is pure JVM
+    downstream (the map scans as an ExistingRDD — no Python stage in the
+    join plan).  At production scale the boundary set is a dimension
+    table: build the index once per job and amortize it across the whole
+    table scan, exactly as you would a loaded broadcast dim.  ``pip_join``
+    builds a throwaway one when the caller does not pass ``index=``.
     """
 
     def __init__(
@@ -267,7 +266,7 @@ class PipIndex:
         ids: np.ndarray,
         spec: GridSpec,
         res: int,
-        cellmap: DataFrame | None,
+        cellmap: DataFrame,
         any_boundary_cells: bool,
     ):
         self.spark = spark
@@ -287,25 +286,21 @@ class PipIndex:
         wkb: str = "polygon_wkb",
         spec: GridSpec | None = None,
         res: int = 7,
-        hybrid: bool = True,
     ) -> "PipIndex":
         spark = boundaries.sparkSession
         rows = boundaries.select(boundary_id, wkb).collect()
         ids = np.array([r[0] for r in rows], dtype=np.int64)
         rings = [parse_wkb(bytes(r[1]))[1] for r in rows]
         tree = STRtree(rings)
-        if not hybrid:
-            return cls(spark, tree, ids, spec or GridSpec(), res, None, True)
         spec = spec or GridSpec()
         if res > 8:
-            # the hybrid path materializes a dense 4^res cell map — ~1M
-            # rows at res 10 stalls the driver for minutes (the round-1
+            # the cell map is a dense 4^res classification — ~1M rows at
+            # res 10 stalls the driver for minutes (the round-1
             # createDataFrame lesson). Finer grids should go executor-side
-            # (hexgrid.hex_polyfill_df pattern) or use hybrid=False.
+            # (hexgrid.hex_polyfill_df pattern).
             raise ValueError(
-                f"pip_join hybrid path: res={res} materializes a 4^{res}-cell "
-                "driver map; use res <= 8, hybrid=False, or an executor-side "
-                "cover"
+                f"pip_join: res={res} materializes a 4^{res}-cell driver "
+                "map; use res <= 8 or an executor-side cover"
             )
         cells, cell_assign, is_boundary = classify_cells(tree, ids, spec, res)
         # Build the cell map executor-side: createDataFrame from 4^res
@@ -353,15 +348,14 @@ def pip_join(
     how: str = "inner",
     spec: GridSpec | None = None,
     res: int = 7,
-    hybrid: bool = True,
     index: PipIndex | None = None,
 ) -> DataFrame:
     """Assign each point row the id of the polygon containing it.
 
-    `boundaries` must be small enough to broadcast. With `hybrid=True`
-    (default) the interior-cell majority never leaves the JVM; only the
-    boundary-cell sliver runs the Arrow ray-cast. `how='left'` keeps
-    unmatched points with NULL boundary_id. Pass a prebuilt ``index=``
+    `boundaries` must be small enough to broadcast. The interior-cell
+    majority never leaves the JVM; only the boundary-cell sliver runs the
+    Arrow ray-cast. `how='left'` keeps unmatched points with NULL
+    boundary_id. Pass a prebuilt ``index=``
     (PipIndex.build) to amortize boundary collection + cell classification
     across many joins against the same boundary set.
     """
@@ -370,7 +364,7 @@ def pip_join(
             raise ValueError("pip_join needs either boundaries= or index=")
         index = PipIndex.build(
             boundaries, boundary_id=boundary_id, wkb=wkb,
-            spec=spec, res=res, hybrid=hybrid,
+            spec=spec, res=res,
         )
     bc = index.bc
     res = index.res
@@ -403,9 +397,6 @@ def pip_join(
                 res_pdf = pdf.iloc[pi].copy()
                 res_pdf[boundary_id] = ids_l[ri]
                 yield res_pdf
-
-    if index.cellmap is None:
-        return points.mapInPandas(assign, schema=out_schema)
 
     keyed = with_cell(points, x, y, spec, res, out="_pipcell", keep_ixy=False)
     joined = keyed.join(F.broadcast(index.cellmap), "_pipcell", "left")

@@ -14,6 +14,7 @@ sandbox has no Iceberg runtime jar).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from pathlib import Path
@@ -80,13 +81,18 @@ def run_reference_pipeline(
     spark: SparkSession,
     features: DataFrame,
     workdir: str,
-    fingerprint: str = "v1",
     validate: bool = True,
 ) -> DataFrame:
     """The flagship end-to-end job: 4 candidate stages → dedup-union → final.
 
     Mirrors 07_run_all_pipelines.sh but as one resumable Spark application.
+    The resume fingerprint is the sha256 of the sorted input file listing of
+    ``features``: a rewritten input gets new part-file names, so its stages
+    recompute; an in-memory frame lists no files and gets a constant one.
     """
+    fingerprint = hashlib.sha256(
+        json.dumps(sorted(features.inputFiles())).encode()
+    ).hexdigest()
     runner = StageRunner(spark, workdir)
     staged = {
         kind: runner.run_stage(

@@ -1,15 +1,16 @@
-"""Driver-window rotation semantics (round-3 verdict, What's wrong #1-#3).
+"""The driver-window ordering rule, as a spec.
 
 Pure logic over __spark_entry__._ordered_names — no SparkSession. The
 driver records the FIRST 50 queries() entries each round, so ordering IS
-the verification schedule:
+the verification schedule. One rule over the green rows on disk
+(``_green_rounds``):
 
-- terminal no_oracle names must sort last (they can never hash-match);
-- forced window names retire on their first green row (a past round's
-  window must not re-occupy the slots after its greens land);
-- the two re-verification entries carry stale pre-rewrite greens by
-  design and retire only on a round >= 4 green;
-- a window name whose row the driver failed to record re-queues.
+1. ``_PRIORITY`` names with no green row, in ``_PRIORITY`` order;
+2. other oracle-paired names with no green row;
+3. green names;
+4. rows-only names (no oracle; the driver can never hash-match them).
+
+Synthetic histories are fed by monkeypatching ``_green_rounds``.
 """
 
 from __future__ import annotations
@@ -21,156 +22,129 @@ sys.path.insert(0, ".")
 import __spark_entry__ as E
 from osmgraft import contract as C
 
-REVERIFY = {"window_rank", "value_deciles"}
+ROWS_ONLY = [n for n in C.QUERIES if n not in C.ORACLES]
+# _PRIORITY opens with the round-5 names still lacking a green row; the
+# round-6 window follows
+ROUND5_NAMES = E._PRIORITY[:2]
+ROUND6_NAMES = E._PRIORITY[2:]
 
 
-def _with_history(seen, seen_r4plus, terminal):
-    """Run _ordered_names under a synthetic driver history."""
-    orig = E._driver_history
-
-    def fake():
-        fake.seen_r4plus = frozenset(seen_r4plus)
-        # synthetic histories treat round>=4 greens as round>=5 too:
-        # the r05/r06 tests that need the distinction pass disjoint sets
-        fake.seen_r5plus = frozenset(seen_r4plus)
-        return (frozenset(seen), frozenset(terminal))
-
-    E._driver_history = fake
-    try:
-        return E._ordered_names()
-    finally:
-        E._driver_history = orig
+def _order(monkeypatch, green):
+    """_ordered_names under a synthetic {name: first green round} history."""
+    monkeypatch.setattr(E, "_green_rounds", lambda: dict(green))
+    return E._ordered_names()
 
 
 def test_ordered_names_is_registry_permutation():
     names = E._ordered_names()
     assert sorted(names) == sorted(C.QUERIES)
+    assert list(E.queries()) == names
 
 
-def test_r04_window_fronts_under_r03_history():
-    """Synthetic r03-era history (no r04 rows yet): the r04 window
-    fronts the ordering. The old ``today`` form of this assertion went
-    stale the moment the driver wrote CORRECTNESS_r04.json (r04 names
-    correctly retire on their greens) — round-4 verdict, What's wrong
-    #1; the epoch now lives in the fixture, not the filesystem."""
-    out = _with_history(set(), set(), set())
-    assert out[: len(E._R04_WINDOW)] == list(E._R04_WINDOW)
+def test_priority_names_are_registered_oracle_paired_and_distinct():
+    for n in E._PRIORITY:
+        assert n in C.QUERIES, n
+        assert n in C.ORACLES, n
+    assert len(set(E._PRIORITY)) == len(E._PRIORITY)
 
 
-def test_todays_front_window_is_useful():
-    """Epoch-independent: whatever CORRECTNESS files exist on disk, every
-    slot the driver will actually record (first 50) must be able to
-    produce a useful row — no terminal no_oracle names, and nothing
-    already green unless it is a queued re-verification still awaiting
-    its post-rewrite row."""
-    names = E._ordered_names()
-    verified, terminal = E._driver_history()
-    fresh4 = E._driver_history.seen_r4plus
-    fresh5 = E._driver_history.seen_r5plus
-    unverified = [n for n in names if n not in verified and n not in terminal]
-    front = names[: min(50, len(unverified))]
-    assert not (set(front) & set(terminal))
-    for n in front:
-        if n in REVERIFY:
-            assert n not in fresh4, n
-        elif n == "embedding_neardup_pairs":
-            assert n not in fresh5, n
-        else:
-            assert n not in verified, n
+def test_priority_fronts_an_empty_history(monkeypatch):
+    out = _order(monkeypatch, {})
+    assert out[: len(E._PRIORITY)] == list(E._PRIORITY)
 
 
-def test_terminal_no_oracle_names_sort_last():
-    names = list(C.QUERIES)
-    terminal = {names[0], names[10]}
-    out = _with_history(set(), set(), terminal)
-    assert set(out[-2:]) == terminal
+def test_terminal_no_oracle_names_sort_last(monkeypatch):
+    assert ROWS_ONLY
+    # even a green row does not lift a rows-only name out of the tail
+    out = _order(monkeypatch, {ROWS_ONLY[0]: 1})
+    assert out[-len(ROWS_ONLY):] == ROWS_ONLY
 
 
-def test_window_retires_on_green():
-    greens = set(E._R04_WINDOW)
-    out = _with_history(greens, greens, set())
-    # entire r04 window green in r04 -> r05 window surfaces
-    assert out[0] == E._R05_WINDOW[0]
-    assert not (set(out[:50]) & (greens - REVERIFY))
+def test_window_retires_on_green(monkeypatch):
+    first, second = E._PRIORITY[:2]
+    out = _order(monkeypatch, {first: 7})
+    assert out[0] == second
+    assert first not in out[: len(E._PRIORITY)]
 
 
-def test_reverify_entries_ignore_stale_greens():
-    # verified in an old round (stale), no round>=4 row yet -> still forced
-    out = _with_history(REVERIFY, set(), set())
-    assert out[:50][: len(E._R04_WINDOW)].count("window_rank") == 1
-    assert "value_deciles" in out[:50]
-
-
-def test_reverify_entries_retire_on_round4_green():
-    out = _with_history(REVERIFY, REVERIFY, set())
-    front = out[: len(E._R04_WINDOW)]
-    assert "window_rank" not in front
-    assert "value_deciles" not in front
-
-
-def test_missed_window_row_requeues():
-    greens = set(E._R04_WINDOW) - {"pq_quant_recall"}
-    out = _with_history(greens, greens, set())
-    assert out[0] == "pq_quant_recall"
-    assert out[1] == E._R05_WINDOW[0]
+def test_missed_window_row_requeues(monkeypatch):
+    missed = E._PRIORITY[5]
+    greens = {n: 7 for n in E._PRIORITY if n != missed}
+    out = _order(monkeypatch, greens)
+    assert out[0] == missed
+    # the remaining unverified oracle-paired names follow in registry order
+    unverified = [
+        n for n in C.QUERIES
+        if n in C.ORACLES and n not in greens and n != missed
+    ]
+    assert out[1 : 1 + len(unverified)] == unverified
 
 
 def test_r05_window_names_are_registered_and_unverified_today():
-    verified, terminal = E._driver_history()
-    fresh5 = E._driver_history.seen_r5plus
-    reverify5 = {"embedding_neardup_pairs"}  # r01 green, rewritten round 4
-    for n in E._R05_WINDOW:
+    """The round-5 names in _PRIORITY are registered, oracle-paired and
+    carry no green row from before round 5 in the files on disk."""
+    green = E._green_rounds()
+    for n in ROUND5_NAMES:
         assert n in C.QUERIES, n
-        if n not in reverify5:
-            # pre-r05-driver-run: must be unverified; once the r05 file
-            # lands, any green is recorded as a round >= 5 row
-            assert n not in verified or n in fresh5, (
-                f"{n} green before r05 — drop from _R05_WINDOW"
-            )
-        assert n not in terminal, n
-    assert len(set(E._R05_WINDOW)) == len(E._R05_WINDOW) == 52
+        assert n in C.ORACLES, n
+        assert green.get(n, 5) >= 5, f"{n} green before r05 — drop from _PRIORITY"
 
 
 def test_r06_window_names_are_registered_and_need_evidence():
-    """Epoch-robust like the r05 check: every r06 window name is
-    registered, oracle-capable, and either still unverified or carries
-    a round >= 5 green (the rotation retires it then)."""
-    verified, terminal = E._driver_history()
-    fresh5 = E._driver_history.seen_r5plus
-    for n in E._R06_WINDOW:
+    """The round-6 names in _PRIORITY are registered, oracle-paired,
+    distinct from the round-5 names, and either unverified or green no
+    earlier than round 5 (their first green retires them)."""
+    green = E._green_rounds()
+    for n in ROUND6_NAMES:
         assert n in C.QUERIES, n
-        assert n not in verified or n in fresh5, (
-            f"{n} green before r05 — drop from _R06_WINDOW"
-        )
-        assert n not in terminal, n
-    assert len(set(E._R06_WINDOW)) == len(E._R06_WINDOW) == 52
-    # disjoint from the earlier windows — each name burns one slot ever
-    assert not set(E._R06_WINDOW) & set(E._R05_WINDOW)
-    assert not set(E._R06_WINDOW) & set(E._R04_WINDOW)
+        assert n in C.ORACLES, n
+        assert green.get(n, 5) >= 5, f"{n} green before r05 — drop from _PRIORITY"
+    assert len(set(ROUND6_NAMES)) == len(ROUND6_NAMES) == 52
+    assert not set(ROUND6_NAMES) & set(ROUND5_NAMES)
 
 
-def test_r06_window_queues_behind_unretired_r05_names():
-    """Synthetic: all r04+r05 greens recorded -> r06 fronts; r05 missed
-    one name -> that name leads, r06 follows."""
-    g45 = set(E._R04_WINDOW) | set(E._R05_WINDOW)
-    out = _with_history(g45, g45, set())
-    assert out[0] == E._R06_WINDOW[0]
-    missed = set(E._R05_WINDOW) - {"tfidf_cosine_pairs"}
-    out = _with_history(set(E._R04_WINDOW) | missed,
-                        set(E._R04_WINDOW) | missed, set())
-    assert out[0] == "tfidf_cosine_pairs"
-    assert out[1] == E._R06_WINDOW[0]
+def test_r06_window_queues_behind_unretired_r05_names(monkeypatch):
+    """All round-5 names green -> the round-6 names front; one round-5
+    name missed -> it leads and the round-6 names follow."""
+    out = _order(monkeypatch, {n: 5 for n in ROUND5_NAMES})
+    assert out[: len(ROUND6_NAMES)] == list(ROUND6_NAMES)
+    missed = ROUND5_NAMES[-1]
+    out = _order(monkeypatch, {n: 5 for n in ROUND5_NAMES if n != missed})
+    assert out[0] == missed
+    assert out[1 : 1 + len(ROUND6_NAMES)] == list(ROUND6_NAMES)
 
 
-def test_r05_reverify_entry_queued_despite_old_green():
-    """embedding_neardup_pairs carries an r01 green recorded against the
-    pre-GEMM refine: it must lead the r05 queue DESPITE being verified —
-    until a round >= 5 green retires it (epoch-conditional so the test
-    stays true after the driver writes CORRECTNESS_r05.json)."""
+def test_green_names_follow_unverified_in_registry_order(monkeypatch):
+    paired = [n for n in C.QUERIES if n in C.ORACLES]
+    greens = {n: 1 for n in paired[::2]}
+    out = _order(monkeypatch, greens)
+    body = out[: len(out) - len(ROWS_ONLY)]
+    assert body[-len(greens):] == [n for n in paired if n in greens]
+
+
+def test_green_rounds_takes_first_green_round_and_skips_bad_files(
+    monkeypatch, tmp_path
+):
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        '{"a": {"rows_match": true, "hash_match": false},'
+        ' "b": {"rows_match": true}, "c": "junk"}'
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text("not json")
+    (tmp_path / "CORRECTNESS_r03.json").write_text("[1, 2]")
+    (tmp_path / "CORRECTNESS_r04.json").write_text(
+        '{"a": {"hash_match": true}, "b": {"hash_match": true}}'
+    )
+    monkeypatch.setattr(E, "__file__", str(tmp_path / "__spark_entry__.py"))
+    assert E._green_rounds() == {"a": 4, "b": 1}
+
+
+def test_todays_front_window_is_useful():
+    """Whatever CORRECTNESS files exist on disk, every slot the driver
+    will record (first 50) can produce a useful row: no rows-only name
+    and, while unverified names remain, no green name."""
     names = E._ordered_names()
-    seen, _terminal = E._driver_history()
-    assert "embedding_neardup_pairs" in seen  # r01 evidence exists
-    if "embedding_neardup_pairs" in E._driver_history.seen_r5plus:
-        assert "embedding_neardup_pairs" not in names[:50]
-    else:
-        assert "embedding_neardup_pairs" in names[:60]
+    green = E._green_rounds()
+    unverified = [n for n in names if n in C.ORACLES and n not in green]
+    front = names[: min(50, len(unverified))]
+    assert not set(front) & set(ROWS_ONLY)
+    assert not set(front) & set(green)

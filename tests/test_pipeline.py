@@ -146,6 +146,44 @@ def test_checkpoint_resume_stable(spark, features, tmp_path):
     assert a.exceptAll(b).count() == 0
 
 
+def test_resume_fingerprint_follows_input_files(spark, tmp_path):
+    """The stage fingerprint comes from the input file listing: a re-run on
+    the same parquet reuses every manifest, and a rewritten parquet under
+    the same workdir recomputes instead of serving the stale stages."""
+    src = str(tmp_path / "features")
+    wd = tmp_path / "wd"
+
+    def write(seed):
+        to_spark(spark, gen_osm_features(400, seed=seed), "features").write.mode(
+            "overwrite"
+        ).parquet(src)
+
+    def run(workdir):
+        return sorted(
+            run_reference_pipeline(spark, spark.read.parquet(src), str(workdir))
+            .select("osm_id", "name", "aerospace_score")
+            .collect()
+        )
+
+    def manifests():
+        return {
+            p.parent.name: (p.stat().st_mtime_ns, p.read_text())
+            for p in wd.glob("stage=*/_manifest.json")
+        }
+
+    write(1)
+    old = run(wd)
+    before = manifests()
+    assert len(before) == 5
+    assert run(wd) == old
+    assert manifests() == before
+
+    write(2)
+    new = run(wd)
+    assert new != old
+    assert new == run(tmp_path / "fresh")
+
+
 def test_parallelism_invariance(spark, features, tmp_path):
     """Tile assignments / score aggregates must be identical across
     parallelism levels (north rule) — here: repartitioned inputs."""

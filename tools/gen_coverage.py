@@ -8,8 +8,9 @@ never drift from the registry again:
 - **Where** — module:line of the registered callable (via ``inspect``).
 - **Oracle** — ✓ oracle-paired, or "rows-only" with the documented reason.
 - **Driver** — first round with a green row in CORRECTNESS_r*.json
-  ("r01"/"r02"/"r03"/…), "no_oracle" for the terminal rows-only entries the
-  driver can never hash-match, or "—" (not yet windowed).
+  ("r01"/"r02"/"r03"/…, read by ``__spark_entry__._green_rounds``),
+  "no_oracle" for the rows-only entries the driver can never hash-match,
+  or "—" (not yet windowed).
 - **Tests** — test files under tests/ that reference the query name, plus
   the universal ``test_contract_oracle.py`` parametrization.
 
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import glob
 import inspect
-import json
 import os
 import re
 import sys
@@ -117,27 +117,6 @@ ROWS_ONLY_REASON = {
 }
 
 
-def driver_rounds(repo: str) -> dict[str, str]:
-    green: dict[str, str] = {}
-    no_oracle: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = re.search(r"_r(\d+)\.json$", path).group(1)
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        for name, row in (data or {}).items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") or (
-                row.get("rows_match") and "hash_match" not in row
-            ):
-                green.setdefault(name, f"r{int(rnd):02d}")
-            elif row.get("err") == "no_oracle":
-                no_oracle.add(name)
-    return green | {n: "no_oracle" for n in no_oracle - set(green)}
-
-
 def test_index(repo: str) -> dict[str, list[str]]:
     """query name -> test files mentioning it (word-boundary match)."""
     texts = {}
@@ -154,7 +133,10 @@ def main() -> None:
 
     names = entry._ordered_names()
     oracles = contract.ORACLES
-    rounds = driver_rounds(repo)
+    rounds = {n: f"r{r:02d}" for n, r in entry._green_rounds().items()}
+    rounds |= {
+        n: "no_oracle" for n in names if n not in oracles and n not in rounds
+    }
     tests = test_index(repo)
 
     lines = [
