@@ -5,14 +5,20 @@
         jobs/run_pipeline.py --pages <pages.parquet> --workdir <dir> \
         --out <dir> [--tile-res 8]
 
-Runs: pages → vectorized text→feature extraction → 4 candidate stages
-(filter → score → classify, reference 07_run_all_pipelines.sh) → priority
-dedup-union → final candidates, plus the hex res-`tile_res` tile rollup of
-all extracted points. Stages checkpoint to --workdir with per-partition
-lineage manifests (resume by re-running with the same --workdir). The
-stage fingerprint is derived from the input file listing, so a rewritten
---pages input recomputes every stage. Imports only from the shipped zip —
-no repo-path assumptions beyond this file.
+Runs two stages, each checkpointed to --workdir with a per-partition
+lineage manifest (resume by re-running with the same --workdir):
+- `features`: pages → exact text dedup → vectorized text→feature extraction
+  → widen, staged once, so the candidates, the tile rollup and the
+  diagnostics all read parquet and the Arrow hop runs once;
+- `final_union`: the 4 candidate kinds (filter → score → classify,
+  reference 07_run_all_pipelines.sh) → priority dedup-union → final
+  candidates, in one plan.
+Then the hex res-`tile_res` tile rollup of all extracted points and the
+nearest-POI lookup per candidate. The `features` fingerprint is derived
+from the --pages file listing (or the --n-synthetic size) and
+`final_union`'s from the staged feature files, so a rewritten --pages
+input recomputes every stage. Imports only
+from the shipped zip — no repo-path assumptions beyond this file.
 
 If --pages is omitted, a deterministic synthetic pages table is generated
 (driver smoke / sandbox mode; no external data).
@@ -45,22 +51,31 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("osmgraft-pipeline")
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
 
     from osmgraft.extract.page_extract import extract_features
     from osmgraft.extract.widen import widen_features
     from osmgraft.geo import hexgrid as hg
-    from osmgraft.pipeline.runner import run_reference_pipeline
+    from osmgraft.pipeline.runner import (
+        StageRunner,
+        input_fingerprint,
+        run_reference_pipeline,
+    )
 
     t0 = time.time()
     if args.pages:
         pages = spark.read.parquet(args.pages)
+        pages_fingerprint = input_fingerprint(pages)
     else:
         from osmgraft.datagen.fixtures import gen_pages
         from osmgraft.datagen.spark_io import to_spark
 
         pages = to_spark(spark, gen_pages(args.n_synthetic), "pages")
+        # in memory, no files to list: gen_pages is deterministic, so its
+        # size identifies the input
+        pages_fingerprint = f"synthetic:{args.n_synthetic}"
 
     # training-data hygiene stage: exact text dedup BEFORE extraction —
     # duplicate pages never pay the Arrow extraction cost; the dedup
@@ -84,9 +99,12 @@ def main() -> None:
     # provide when the duplicate IS a re-crawl of the same url
     from osmgraft.text.dedup import dedup_pages_keep_first
 
-    pages = dedup_pages_keep_first(pages)
-
-    features = widen_features(extract_features(pages))
+    # no consumer reads the page text past extraction: the staged features
+    # keep everything else
+    widened = widen_features(extract_features(dedup_pages_keep_first(pages))).drop("text")
+    features = StageRunner(spark, args.workdir).run_stage(
+        "features", lambda: widened, pages_fingerprint
+    )
     if args.diagnostics:
         import os
 
@@ -112,11 +130,12 @@ def main() -> None:
     # nearest-POI lookup per candidate (north-star "cell-partitioned kNN"):
     # candidates carry planar coords as (longitude, latitude) = (x, y)
     from osmgraft.datagen.fixtures import gen_poi_airports
-    from osmgraft.datagen.spark_io import to_spark as _to_spark
+    from osmgraft.datagen.spark_io import POI_SCHEMA
     from osmgraft.geo.cells import GridSpec
     from osmgraft.geo.knn import knn_join
 
-    pois = _to_spark(spark, gen_poi_airports(), "pois")
+    # a LocalRelation (Arrow path): no Python workers just to parallelize 12 rows
+    pois = spark.createDataFrame(gen_poi_airports()[POI_SCHEMA.fieldNames()], POI_SCHEMA)
     cand_pts = final.where(F.col("longitude").isNotNull()).select(
         "osm_id",
         F.col("longitude").alias("x"),

@@ -7,6 +7,15 @@ fingerprint; a re-run skips stages whose manifest is valid (idempotent
 overwrite-by-stage — SURVEY.md §7.3 item 10, north rule "resumable from
 checkpoint with per-partition lineage + metrics").
 
+The shipped job (jobs/run_pipeline.py) runs two stages: `features` (dedup →
+Arrow extraction → widen, staged once so every consumer reads parquet) and
+`final_union` (the four candidate kinds scored and priority-deduped in one
+plan).
+
+The workdir is a URI string (`/local/dir`, `file:///…`, `s3a://…`, `hdfs://…`):
+the parquet goes through Spark and the manifests through the Hadoop
+`FileSystem` of the same URI, so both land in the same place.
+
 Storage is pluggable: Iceberg when a catalog is configured (snapshots give
 the same resume semantics), plain parquet staging dirs otherwise (this
 sandbox has no Iceberg runtime jar).
@@ -17,10 +26,8 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from osmgraft.pipeline.candidates import candidate_stage
 from osmgraft.pipeline.union import assert_final_invariants, priority_dedup_union
@@ -29,36 +36,59 @@ from osmgraft.rules.reference_rules import PRIORITY_ORDER
 MANIFEST = "_manifest.json"
 
 
+def input_fingerprint(df: DataFrame) -> str:
+    """sha256 of the sorted input file listing of `df`: a rewritten input
+    gets new part-file names, so its stages recompute; an in-memory frame
+    lists no files and gets a constant fingerprint."""
+    return hashlib.sha256(json.dumps(sorted(df.inputFiles())).encode()).hexdigest()
+
+
 class StageRunner:
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
-        self.workdir = Path(workdir)
-        self.workdir.mkdir(parents=True, exist_ok=True)
+        self.workdir = str(workdir).rstrip("/")
+        jvm = spark.sparkContext._jvm
+        self._path = jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(self.workdir).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        )
         self.metrics: dict[str, dict] = {}
 
-    def _stage_dir(self, name: str) -> Path:
-        return self.workdir / f"stage={name}"
+    def _stage_dir(self, name: str) -> str:
+        return f"{self.workdir}/stage={name}"
 
-    def is_complete(self, name: str, fingerprint: str) -> bool:
-        mf = self._stage_dir(name) / MANIFEST
-        if not mf.exists():
-            return False
+    def _read_manifest(self, name: str) -> dict | None:
+        path = self._path(f"{self._stage_dir(name)}/{MANIFEST}")
+        if not self._fs.exists(path):
+            return None
+        stream = self._fs.open(path)
         try:
-            m = json.loads(mf.read_text())
-        except json.JSONDecodeError:
-            return False
-        return m.get("fingerprint") == fingerprint and m.get("status") == "ok"
+            raw = stream.readAllBytes()
+        finally:
+            stream.close()
+        try:
+            return json.loads(raw)
+        except ValueError:
+            return None
+
+    def _write_manifest(self, name: str, manifest: dict) -> None:
+        stream = self._fs.create(self._path(f"{self._stage_dir(name)}/{MANIFEST}"), True)
+        try:
+            stream.write(json.dumps(manifest, indent=1).encode())
+        finally:
+            stream.close()
 
     def run_stage(self, name: str, df_fn, fingerprint: str) -> DataFrame:
         """Materialize stage `name` (or reuse the checkpoint if valid)."""
-        sdir = self._stage_dir(name)
-        if self.is_complete(name, fingerprint):
-            self.metrics[name] = json.loads((sdir / MANIFEST).read_text())
-            return self.spark.read.parquet(str(sdir / "data"))
+        data = f"{self._stage_dir(name)}/data"
+        m = self._read_manifest(name)
+        if m and m.get("fingerprint") == fingerprint and m.get("status") == "ok":
+            self.metrics[name] = m
+            return self.spark.read.parquet(data)
         t0 = time.time()
         df = df_fn()
-        df.write.mode("overwrite").parquet(str(sdir / "data"))
-        out = self.spark.read.parquet(str(sdir / "data"))
+        df.write.mode("overwrite").parquet(data)
+        out = self.spark.read.parquet(data)
         # single source of per-partition lineage (round-2 dedup: the
         # runner previously re-implemented this collector)
         from osmgraft.runtime.metrics import collect_stage_metrics
@@ -72,7 +102,7 @@ class StageRunner:
             "partitions": lineage,
             "wall_clock_sec": round(time.time() - t0, 3),
         }
-        (sdir / MANIFEST).write_text(json.dumps(manifest, indent=1))
+        self._write_manifest(name, manifest)
         self.metrics[name] = manifest
         return out
 
@@ -83,29 +113,20 @@ def run_reference_pipeline(
     workdir: str,
     validate: bool = True,
 ) -> DataFrame:
-    """The flagship end-to-end job: 4 candidate stages → dedup-union → final.
+    """The flagship end-to-end job: 4 candidate kinds → dedup-union → final,
+    as one stage, `final_union`.
 
-    Mirrors 07_run_all_pipelines.sh but as one resumable Spark application.
-    The resume fingerprint is the sha256 of the sorted input file listing of
-    ``features``: a rewritten input gets new part-file names, so its stages
-    recompute; an in-memory frame lists no files and gets a constant one.
+    Mirrors 07_run_all_pipelines.sh but as one resumable Spark application:
+    the four `candidate_stage` plans and the priority window fuse into one
+    write. The resume fingerprint is `input_fingerprint(features)`.
     """
-    fingerprint = hashlib.sha256(
-        json.dumps(sorted(features.inputFiles())).encode()
-    ).hexdigest()
     runner = StageRunner(spark, workdir)
-    staged = {
-        kind: runner.run_stage(
-            f"candidates_{kind}",
-            lambda k=kind: candidate_stage(features, k),
-            fingerprint,
-        )
-        for kind in PRIORITY_ORDER
-    }
     final = runner.run_stage(
         "final_union",
-        lambda: priority_dedup_union(staged, PRIORITY_ORDER),
-        fingerprint,
+        lambda: priority_dedup_union(
+            {k: candidate_stage(features, k) for k in PRIORITY_ORDER}, PRIORITY_ORDER
+        ),
+        input_fingerprint(features),
     )
     if validate:
         assert_final_invariants(final)

@@ -1,4 +1,4 @@
-"""Priority dedup-union cascade (reference J1/U3).
+"""Priority dedup-union (reference J1/U3).
 
 The reference inserts polygon candidates first, then each lower-priority
 source with `WHERE osm_id NOT IN (SELECT osm_id FROM <all higher>)`
@@ -6,55 +6,59 @@ source with `WHERE osm_id NOT IN (SELECT osm_id FROM <all higher>)`
 
 Semantics preserved exactly (SURVEY.md §7.3 items 2–3):
 - dedup is **id-level**: one osm_id in polygon staging drops *all* point rows
-  with that id;
-- `NOT IN` ≡ left_anti here because osm_id is never NULL — we assert that, and
-  use `left_anti` so Catalyst plans a broadcast/shuffled hash anti-join rather
-  than the null-aware BroadcastNestedLoopJoin NOT IN would force.
+  with that id; duplicate ids within one kind are all kept;
+- osm_id is never NULL (a precondition: the window treats all NULL ids as
+  one id, while `NOT IN` never matches a NULL).
 
-Scale note: the id-set build side is the (small) candidate output, so each
-anti-join broadcasts; the union is a metadata-only `unionByName`.
+One window pass replaces the cascade of anti-joins: each kind's rows are
+tagged with the kind's priority index, and a row survives when its index is
+`min(index) over (partition by osm_id)`, i.e. no higher-priority kind has
+the id. The union is a metadata-only `unionByName`, so the candidate plans
+run once and shuffle once; an anti-join cascade in the same fused plan would
+recompute each higher-priority branch once for every lower kind.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def priority_dedup_union(staged: dict[str, DataFrame], order: list[str]) -> DataFrame:
     """staged: geom_kind → candidate DataFrame; order: highest priority first."""
-    out: list[DataFrame] = []
-    prior_ids: DataFrame | None = None
-    for kind in order:
-        df = staged[kind]
-        if prior_ids is None:
-            out.append(df)
-            prior_ids = df.select("osm_id").distinct()
-        else:
-            out.append(df.join(F.broadcast(prior_ids), "osm_id", "left_anti"))
-            prior_ids = prior_ids.union(df.select("osm_id")).distinct()
-    return reduce(lambda a, b: a.unionByName(b), out)
+    tagged = [staged[kind].withColumn("_prio", F.lit(i)) for i, kind in enumerate(order)]
+    return (
+        reduce(lambda a, b: a.unionByName(b), tagged)
+        .withColumn("_first", F.min("_prio").over(Window.partitionBy("osm_id")))
+        .where(F.col("_prio") == F.col("_first"))
+        .drop("_prio", "_first")
+    )
 
 
 def assert_final_invariants(final: DataFrame) -> dict[str, int]:
     """CHECK-constraint equivalents (07_run_all_pipelines.sh:245-248 and
     test_aerospace_pipeline.sh:174-195). Returns violation counts; raises on
-    any violation."""
-    checks = {
-        "null_name": final.where(F.col("name").isNull()).count(),
-        "score_below_40": final.where(F.col("aerospace_score") < 40).count(),
-        "bad_tier": final.where(
-            ~F.col("tier_classification").isin(
-                "tier1_candidate", "tier2_candidate",
-                "potential_candidate", "low_probability")
-        ).count(),
-        "null_coords": final.where(
-            F.col("latitude").isNull() | F.col("longitude").isNull()
-        ).count(),
-        "dup_osm_id": final.groupBy("osm_id").count().where("count > 1").count(),
+    any violation. One action: per-id violation counts, then one aggregate
+    over the ids."""
+    per_row = {
+        "null_name": F.col("name").isNull(),
+        "score_below_40": F.col("aerospace_score") < 40,
+        "bad_tier": ~F.col("tier_classification").isin(
+            "tier1_candidate", "tier2_candidate",
+            "potential_candidate", "low_probability"),
+        "null_coords": F.col("latitude").isNull() | F.col("longitude").isNull(),
     }
+    per_id = final.groupBy("osm_id").agg(
+        F.count("*").alias("n"),
+        *(F.count_if(cond).alias(k) for k, cond in per_row.items()),
+    )
+    row = per_id.agg(
+        *(F.coalesce(F.sum(k), F.lit(0)).alias(k) for k in per_row),
+        F.count_if(F.col("n") > 1).alias("dup_osm_id"),
+    ).first()
+    checks = row.asDict()
     bad = {k: v for k, v in checks.items() if v > 0}
     if bad:
         raise AssertionError(f"final-table invariant violations: {bad}")

@@ -5,6 +5,8 @@ recall fixture (known_suppliers_check.sql), dedup-cascade semantics
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -56,23 +58,48 @@ def test_tier_bands_consistent(final):
     assert bad == 0
 
 
+def _cascade_pandas(staged: dict, order) -> Counter:
+    """The reference cascade, row by row: each kind keeps the rows whose
+    osm_id no higher-priority kind has (create_final_table.sql:89-116)."""
+    out, seen = Counter(), set()
+    for kind in order:
+        pdf = staged[kind]
+        out.update(map(tuple, pdf[~pdf["osm_id"].isin(seen)].itertuples(index=False)))
+        seen |= set(pdf["osm_id"])
+    return out
+
+
 def test_priority_cascade_id_level(spark):
     """If an osm_id exists in a higher-priority source, ALL lower-priority
-    rows with that id are dropped (create_final_table.sql:72,89-116)."""
+    rows with that id are dropped (create_final_table.sql:72,89-116); the
+    output equals the reference cascade as a multiset."""
+    import pandas as pd
+
+    cases = [
+        # one id per higher kind drops every lower row with that id
+        ({"polygon": [(1, "a")], "point": [(1, "b"), (1, "c"), (2, "d")],
+          "line": [(2, "e"), (3, "f")], "roads": [(3, "g")]},
+         [(1, "a"), (2, "d"), (3, "f")]),
+        # id 5 in three kinds; duplicate ids within one kind keep every row
+        ({"polygon": [(5, "p")], "point": [(5, "q"), (6, "r"), (6, "s")],
+          "line": [(5, "t"), (6, "u"), (7, "v")], "roads": [(7, "w"), (8, "x"), (8, "x")]},
+         [(5, "p"), (6, "r"), (6, "s"), (7, "v"), (8, "x"), (8, "x")]),
+    ]
     cols = "osm_id long, source_table string, name string"
-    poly = spark.createDataFrame([(1, "planet_osm_polygon", "a")], cols)
-    point = spark.createDataFrame(
-        [(1, "planet_osm_point", "b"), (1, "planet_osm_point", "c"),
-         (2, "planet_osm_point", "d")], cols)
-    line = spark.createDataFrame([(2, "planet_osm_line", "e"),
-                                  (3, "planet_osm_line", "f")], cols)
-    roads = spark.createDataFrame([(3, "planet_osm_roads", "g")], cols)
-    out = priority_dedup_union(
-        {"polygon": poly, "point": point, "line": line, "roads": roads},
-        PRIORITY_ORDER,
-    )
-    rows = {(r.osm_id, r.name) for r in out.collect()}
-    assert rows == {(1, "a"), (2, "d"), (3, "f")}
+    for rows, kept in cases:
+        staged = {kind: [(i, f"planet_osm_{kind}", n) for i, n in rows[kind]]
+                  for kind in PRIORITY_ORDER}
+        out = priority_dedup_union(
+            {kind: spark.createDataFrame(r, cols) for kind, r in staged.items()},
+            PRIORITY_ORDER,
+        ).collect()
+        want = _cascade_pandas(
+            {kind: pd.DataFrame(r, columns=["osm_id", "source_table", "name"])
+             for kind, r in staged.items()},
+            PRIORITY_ORDER,
+        )
+        assert Counter(map(tuple, out)) == want
+        assert Counter((r.osm_id, r.name) for r in out) == Counter(kept)
 
 
 def test_known_supplier_recall(spark, final):
@@ -174,7 +201,7 @@ def test_resume_fingerprint_follows_input_files(spark, tmp_path):
     write(1)
     old = run(wd)
     before = manifests()
-    assert len(before) == 5
+    assert len(before) == 1
     assert run(wd) == old
     assert manifests() == before
 
@@ -182,6 +209,31 @@ def test_resume_fingerprint_follows_input_files(spark, tmp_path):
     new = run(wd)
     assert new != old
     assert new == run(tmp_path / "fresh")
+
+
+def test_uri_workdir_keeps_manifests_under_it(spark, tmp_path, monkeypatch):
+    """A `file://` workdir holds the manifests next to the stage parquet,
+    not under a `file:` directory relative to the cwd, and a second run
+    reuses them unchanged."""
+    features = to_spark(spark, gen_osm_features(400), "features")
+    wd = tmp_path / "wd"
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+
+    def manifests():
+        return {
+            p.parent.name: (p.stat().st_mtime_ns, p.read_text())
+            for p in wd.glob("stage=*/_manifest.json")
+        }
+
+    first = run_reference_pipeline(spark, features, wd.as_uri()).count()
+    before = manifests()
+    assert set(before) == {"stage=final_union"}
+    assert list(cwd.iterdir()) == []
+    assert run_reference_pipeline(spark, features, wd.as_uri()).count() == first
+    assert manifests() == before
+    assert list(cwd.iterdir()) == []
 
 
 def test_parallelism_invariance(spark, features, tmp_path):

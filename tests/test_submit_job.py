@@ -137,7 +137,9 @@ def test_spark_submit_end_to_end(tmp_path):
     assert res["dup_digests"] >= 0  # dedup stage ran and wrote its report
     # stage manifests written (checkpoint-resume surface)
     stages = os.listdir(tmp_path / "wd")
+    assert "stage=features" in stages
     assert "stage=final_union" in stages
+    assert not [s for s in stages if s.startswith("stage=candidates_")]
     diag = json.load(open(tmp_path / "out" / "diagnostics.json"))
     assert diag["manual_vs_compiled_disagreements"] == 0
 
