@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osmgraft.geo.cells import GridSpec, with_cell
-from osmgraft.rules.compiler import RuleSet, compile_score, compile_tier
+from osmgraft.rules.compiler import RuleSet
 from osmgraft.rules.sqlgen import morton_sql, score_sql, tier_sql
 
 # ---------------------------------------------------------------------------
@@ -107,6 +107,17 @@ DOC_SCORER = RuleSet.from_dict("docs_demo", [
     {"kind": "regex", "column": "text", "pattern": "(slow|dup)", "weight": -30},
 ])
 TIER_BANDS = ((150, "tier1_candidate"), (80, "tier2_candidate"), (40, "potential_candidate"))
+DOC_SCORE_DUCK = score_sql(DOC_SCORER, dialect="duckdb")
+
+
+def _scored(docs: DataFrame, rules: RuleSet, bands=None, score: str = "score",
+            tier: str = "tier") -> DataFrame:
+    """docs + the rule score (and the tier label when `bands` is given),
+    from the spark dialect of the SQL the oracles embed."""
+    out = docs.withColumn(score, F.expr(score_sql(rules, dialect="spark")))
+    if bands is None:
+        return out
+    return out.withColumn(tier, F.expr(tier_sql(score, bands, dialect="spark")))
 
 
 # ===========================================================================
@@ -117,10 +128,10 @@ TIER_BANDS = ((150, "tier1_candidate"), (80, "tier2_candidate"), (40, "potential
     "scored_documents",
     oracle=f"""
     SELECT doc_id,
-           {score_sql(DOC_SCORER)} AS score,
-           {tier_sql(score_sql(DOC_SCORER), TIER_BANDS)} AS tier
+           {DOC_SCORE_DUCK} AS score,
+           {tier_sql(DOC_SCORE_DUCK, TIER_BANDS, dialect='duckdb')} AS tier
     FROM documents
-    WHERE {score_sql(DOC_SCORER)} >= 40
+    WHERE {DOC_SCORE_DUCK} >= 40
     ORDER BY score DESC, doc_id LIMIT 200
     """,
 )
@@ -128,8 +139,7 @@ def scored_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive rule scoring + tier ladder (reference C1–C7) on documents."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.withColumn("score", compile_score(DOC_SCORER))
-        .withColumn("tier", compile_tier("score", TIER_BANDS))
+        _scored(docs, DOC_SCORER, TIER_BANDS)
         .where(F.col("score") >= 40)
         .select("doc_id", "score", "tier")
         .orderBy(F.col("score").desc(), "doc_id")
@@ -144,16 +154,17 @@ def scored_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 from osmgraft.rules.yamlspec import load_documents_scoring as _lds
 
 _DOC_SPEC = _lds()
+_DOC_SPEC_DUCK = score_sql(_DOC_SPEC.rules, dialect="duckdb")
 
 
 @q(
     "yaml_scored_documents",
     oracle=f"""
     SELECT doc_id,
-           {score_sql(_DOC_SPEC.rules)} AS score,
-           {tier_sql(score_sql(_DOC_SPEC.rules), _DOC_SPEC.tier_bands)} AS tier
+           {_DOC_SPEC_DUCK} AS score,
+           {tier_sql(_DOC_SPEC_DUCK, _DOC_SPEC.tier_bands, dialect='duckdb')} AS tier
     FROM documents
-    WHERE {score_sql(_DOC_SPEC.rules)} >= {_DOC_SPEC.minimum_score}
+    WHERE {_DOC_SPEC_DUCK} >= {_DOC_SPEC.minimum_score}
     ORDER BY score DESC, doc_id LIMIT 300
     """,
 )
@@ -161,13 +172,12 @@ def yaml_scored_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference C7 end-to-end: the 10-tier YAML rule system (groups fire
     once, condition mappings OR, condition lists AND, prefix codes,
     override_if-suppressed penalties — scoring.yaml:8-357, esp. :304-312)
-    loaded via yamlspec.load_scoring_yaml and compiled to one additive
-    Column; the DuckDB oracle is generated from the same parsed rules by
-    rules.sqlgen, so the two engines cannot drift."""
+    loaded via yamlspec.load_scoring_yaml; rules.sqlgen emits the one
+    additive score from the parsed rules in the spark dialect for this plan
+    and the duckdb dialect for the oracle."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.withColumn("score", compile_score(_DOC_SPEC.rules))
-        .withColumn("tier", compile_tier("score", _DOC_SPEC.tier_bands))
+        _scored(docs, _DOC_SPEC.rules, _DOC_SPEC.tier_bands)
         .where(F.col("score") >= _DOC_SPEC.minimum_score)
         .select("doc_id", "score", "tier")
         .orderBy(F.col("score").desc(), "doc_id")
@@ -178,18 +188,17 @@ def yaml_scored_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _red_flags_oracle() -> str:
     from osmgraft.rules.yamlspec import trigger_sql
 
-    ss = score_sql(_DOC_SPEC.rules)
-    ts = tier_sql("score", _DOC_SPEC.tier_bands)
+    ts = tier_sql("score", _DOC_SPEC.tier_bands, dialect="duckdb")
     arms = "\n    UNION ALL\n".join(
         f"""    SELECT '{tr.name}' AS flag, CAST(COUNT(*) AS BIGINT) AS n,
            string_agg(DISTINCT substring(text, 1, 30), '; '
                       ORDER BY substring(text, 1, 30)) AS examples
-    FROM scored WHERE {trigger_sql(tr)}"""
+    FROM scored WHERE {trigger_sql(tr, dialect='duckdb')}"""
         for tr in _DOC_SPEC.triggers
     )
     return f"""
     WITH scored AS (SELECT text, source, lang,
-                           {ss} AS score,
+                           {_DOC_SPEC_DUCK} AS score,
                            {ts} AS tier
                     FROM documents)
     SELECT flag, n, examples FROM (
@@ -214,9 +223,7 @@ def red_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.rules.yamlspec import trigger_predicate
 
     docs = t(spark, sf_dir, "documents")
-    scored = docs.withColumn("score", compile_score(_DOC_SPEC.rules)).withColumn(
-        "tier", compile_tier("score", _DOC_SPEC.tier_bands)
-    )
+    scored = _scored(docs, _DOC_SPEC.rules, _DOC_SPEC.tier_bands)
     ex = F.substring("text", 1, 30)
     aggs = []
     for i, tr in enumerate(_DOC_SPEC.triggers):
@@ -246,9 +253,9 @@ def red_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "refinement_opportunities",
     oracle=f"""
-    WITH s AS (SELECT lower(text) AS lt, {score_sql(DOC_SCORER)} AS score
+    WITH s AS (SELECT lower(text) AS lt, {DOC_SCORE_DUCK} AS score
                FROM documents
-               WHERE {score_sql(DOC_SCORER)} BETWEEN 40 AND 60),
+               WHERE {DOC_SCORE_DUCK} BETWEEN 40 AND 60),
          w AS (SELECT unnest(string_split(lt, ' ')) AS word, score FROM s),
          g AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
                       CAST(FLOOR(AVG(score) + 0.5) AS BIGINT) AS avg_score
@@ -271,9 +278,7 @@ def refinement_opportunities(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (word)-keyed partial-agg shuffle of the borderline slice only;
     avg snapped floor-half so integer-score averages are engine-exact."""
     docs = t(spark, sf_dir, "documents")
-    scored = docs.withColumn("score", compile_score(DOC_SCORER)).where(
-        F.col("score").between(40, 60)
-    )
+    scored = _scored(docs, DOC_SCORER).where(F.col("score").between(40, 60))
     words = scored.select(
         F.explode(F.split(F.lower("text"), " ")).alias("word"), "score"
     ).where(F.length("word") > 3)
@@ -305,7 +310,6 @@ _SCENARIOS = [
 
 
 def _tier_scenarios_oracle() -> str:
-    ss = score_sql(DOC_SCORER)
     arms = "\n    UNION ALL\n".join(
         f"""    SELECT '{name}' AS scenario,
            CAST(COUNT(*) FILTER (score >= {t1}) AS BIGINT) AS tier1,
@@ -315,7 +319,7 @@ def _tier_scenarios_oracle() -> str:
         for name, (t1, t2, t3) in _SCENARIOS
     )
     return f"""
-    WITH scored AS (SELECT {ss} AS score FROM documents)
+    WITH scored AS (SELECT {DOC_SCORE_DUCK} AS score FROM documents)
     SELECT scenario, tier1, tier2, potential FROM (
 {arms}
     ) ORDER BY scenario
@@ -331,7 +335,7 @@ def tier_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
     stacked to rows (the oracle spells the reference's 3-scan UNION; at
     10^12 rows the single-scan plan is the only sane one)."""
     docs = t(spark, sf_dir, "documents")
-    scored = docs.withColumn("score", compile_score(DOC_SCORER))
+    scored = _scored(docs, DOC_SCORER)
     aggs = []
     for i, (_, (t1, t2, t3)) in enumerate(_SCENARIOS):
         s = F.col("score")
@@ -1953,8 +1957,8 @@ _CRITERIA = {
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, text, lang,
-             {score_sql(DOC_SCORER)} AS aerospace_score,
-             {tier_sql(score_sql(DOC_SCORER), TIER_BANDS)} AS tier_classification
+             {DOC_SCORE_DUCK} AS aerospace_score,
+             {tier_sql(DOC_SCORE_DUCK, TIER_BANDS, dialect='duckdb')} AS tier_classification
       FROM documents)
     SELECT doc_id, aerospace_score, tier_classification
     FROM scored
@@ -1972,9 +1976,7 @@ def criteria_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.analytics.criteria import build_criteria_query
 
     docs = t(spark, sf_dir, "documents")
-    scored = docs.withColumn("aerospace_score", compile_score(DOC_SCORER)).withColumn(
-        "tier_classification", compile_tier("aerospace_score", TIER_BANDS)
-    )
+    scored = _scored(docs, DOC_SCORER, TIER_BANDS, "aerospace_score", "tier_classification")
     cq = build_criteria_query(_CRITERIA, name_col="text", desc_col="lang")
     out = cq.apply(scored).select("doc_id", "aerospace_score", "tier_classification")
     return out.orderBy(F.col("aerospace_score").desc(), "doc_id")

@@ -11,18 +11,17 @@ pruning reaches the Parquet scan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from osmgraft.geo.geometry import planar_area_col, planar_centroid_cols
-from osmgraft.rules.compiler import (
-    compile_confidence,
-    compile_exclusion_filter,
-    compile_keyword_array,
-    compile_score,
-    compile_tier,
-    tags_text,
-)
 from osmgraft.rules import reference_rules as R
+from osmgraft.rules.sqlgen import (
+    filter_sql,
+    keywords_sql,
+    quote,
+    score_sql,
+    tags_text_sql,
+    tier_sql,
+)
 
 CANDIDATE_COLUMNS = [
     # FIXTURES.md §6 golden schema (id/created_at excluded: nondeterministic
@@ -34,12 +33,6 @@ CANDIDATE_COLUMNS = [
     "latitude", "longitude",
 ]
 
-_EXCLUSIONS = {
-    "point": (R.POINT_EXCLUSIONS, R.POINT_OVERRIDE),
-    "polygon": (R.POLYGON_EXCLUSIONS, R.POLYGON_OVERRIDE),
-    "line": (R.LINE_EXCLUSIONS, R.LINE_OVERRIDE),
-}
-
 _SOURCE_TABLE = {
     "point": "planet_osm_point",
     "polygon": "planet_osm_polygon",
@@ -48,68 +41,73 @@ _SOURCE_TABLE = {
 }
 
 
+def candidate_sql(kind: str, threshold: int = R.SCORE_THRESHOLD) -> dict:
+    """The spark-dialect SQL text of one kind's candidate stage: the row
+    filter (F1–F5), the score (C1–C4), its threshold, and the wide projection
+    (F6) with the tier/confidence ladders (C5–C6) and keyword array (C8).
+    The polygon area gate and the centroid coordinates are geometry UDFs and
+    stay outside the text."""
+    if kind == "roads":
+        keep = filter_sql([], R.ROADS_INCLUDE, dialect="spark")
+    else:
+        keep = filter_sql(*R.EXCLUSIONS[kind], dialect="spark")
+    # C8 matched keywords: blob = name [ || operator ] || tags_text, where
+    # name is the projected one (falls back to operator, then brand)
+    blob = ["coalesce(name, operator, tags['brand'], '')", "' '"]
+    if R.KEYWORD_BLOB_INCLUDES_OPERATOR[kind]:
+        blob += ["coalesce(operator, '')", "' '"]
+    blob = f"lower(concat({', '.join(blob)}, {tags_text_sql(dialect='spark')}))"
+    # lat/lon: ST_X/Y for points, the centroid columns for way geometries
+    lat, lon = ("y", "x") if kind == "point" else ("_cy", "_cx")
+    industrial = {
+        "polygon": "coalesce(industrial, tags['craft'])",
+        "point": "tags['craft']",
+    }.get(kind, "industrial")
+    return {
+        "filter": f"geom_kind = {quote(kind, 'spark')} AND {keep} "
+                  f"AND ({R.IDENTITY_PREDICATE[kind]})",
+        "score": score_sql(R.SCORERS[kind], dialect="spark"),
+        "threshold": f"aerospace_score >= {threshold}",
+        # F6 wide projection with renames + defaults (07_pipeline_point.sh:170-208)
+        "project": [
+            "osm_id",
+            f"{quote(_SOURCE_TABLE[kind], 'spark')} AS source_table",
+            "coalesce(name, operator, tags['brand']) AS name",
+            "operator",
+            "aerospace_score",
+            f"{tier_sql(dialect='spark')} AS tier_classification",
+            f"{tier_sql(bands=R.CONFIDENCE_BANDS, default='low', dialect='spark')} "
+            "AS confidence_level",
+            "tags['phone'] AS phone",
+            "tags['email'] AS email",
+            "website",
+            "addr_postcode AS postcode",
+            "addr_street AS street_address",
+            "coalesce(addr_city, tags['addr:town']) AS city",
+            "landuse AS landuse_type",
+            f"{'CAST(NULL AS STRING)' if kind == 'point' else 'building'} AS building_type",
+            f"{industrial} AS industrial_type",
+            f"{'CAST(NULL AS STRING)' if kind == 'roads' else 'office'} AS office_type",
+            "coalesce(tags['description'], tags['note']) AS description",
+            f"{keywords_sql(blob, R.MATCHED_KEYWORDS[kind], dialect='spark')} AS matched_keywords",
+            f"CAST({lat} AS DOUBLE) AS latitude",
+            f"CAST({lon} AS DOUBLE) AS longitude",
+        ],
+    }
+
+
 def candidate_stage(
     features: DataFrame,
     kind: str,
     threshold: int = R.SCORE_THRESHOLD,
 ) -> DataFrame:
     """features (one geom_kind's rows, or a mixed table) → scored candidates."""
-    f = features.where(F.col("geom_kind") == kind)
-
-    # F1–F4: exclusion / inclusion filter
-    if kind == "roads":
-        keep = compile_exclusion_filter([], R.ROADS_INCLUDE)
-    else:
-        excl, override = _EXCLUSIONS[kind]
-        keep = compile_exclusion_filter(excl, override)
-    f = f.where(keep)
-
-    # F5: must-have-identity (+ polygon area gate, 07_pipeline_polygon.sh:143)
-    f = f.where(F.expr(R.IDENTITY_PREDICATE[kind]))
-    if kind == "polygon":
+    sql = candidate_sql(kind, threshold)
+    f = features.where(sql["filter"])
+    if kind == "polygon":  # area gate, 07_pipeline_polygon.sh:143
         f = f.where(planar_area_col("way_wkb") > 50.0)
-
-    # C1–C4 scorer, then threshold BEFORE the wide projection (pushdown)
-    f = f.withColumn("aerospace_score", compile_score(R.SCORERS[kind]))
-    f = f.where(F.col("aerospace_score") >= threshold)
-
-    # C8 matched keywords: blob = name [ || operator ] || tags_text
-    blob_parts = [F.coalesce(F.col("name"), F.lit("")), F.lit(" ")]
-    if R.KEYWORD_BLOB_INCLUDES_OPERATOR[kind]:
-        blob_parts += [F.coalesce(F.col("operator"), F.lit("")), F.lit(" ")]
-    blob = F.lower(F.concat(*blob_parts, tags_text("tags")))
-
-    # lat/lon: ST_X/Y for points, centroid for way geometries
-    if kind == "point":
-        lat, lon = F.col("y"), F.col("x")
-    else:
-        cx, cy = planar_centroid_cols("way_wkb")
-        lat, lon = cy, cx
-
-    # F6 wide projection with renames + defaults (07_pipeline_point.sh:170-208)
-    return f.select(
-        F.col("osm_id"),
-        F.lit(_SOURCE_TABLE[kind]).alias("source_table"),
-        F.coalesce(F.col("name"), F.col("operator"), F.col("tags")["brand"]).alias("name"),
-        F.col("operator"),
-        F.col("aerospace_score"),
-        compile_tier().alias("tier_classification"),
-        compile_confidence().alias("confidence_level"),
-        F.col("tags")["phone"].alias("phone"),
-        F.col("tags")["email"].alias("email"),
-        F.col("website"),
-        F.col("addr_postcode").alias("postcode"),
-        F.col("addr_street").alias("street_address"),
-        F.coalesce(F.col("addr_city"), F.col("tags")["addr:town"]).alias("city"),
-        F.col("landuse").alias("landuse_type"),
-        (F.lit(None).cast("string") if kind == "point" else F.col("building")).alias("building_type"),
-        (F.coalesce(F.col("industrial"), F.col("tags")["craft"])
-         if kind == "polygon"
-         else (F.col("tags")["craft"] if kind == "point" else F.col("industrial"))
-         ).alias("industrial_type"),
-        (F.lit(None).cast("string") if kind == "roads" else F.col("office")).alias("office_type"),
-        F.coalesce(F.col("tags")["description"], F.col("tags")["note"]).alias("description"),
-        compile_keyword_array(blob, R.MATCHED_KEYWORDS[kind]).alias("matched_keywords"),
-        lat.cast("double").alias("latitude"),
-        lon.cast("double").alias("longitude"),
-    )
+    # score, then threshold BEFORE the wide projection (pushdown)
+    f = f.selectExpr("*", f"{sql['score']} AS aerospace_score").where(sql["threshold"])
+    if kind != "point":
+        f = f.withColumns(dict(zip(("_cx", "_cy"), planar_centroid_cols("way_wkb"))))
+    return f.selectExpr(*sql["project"])

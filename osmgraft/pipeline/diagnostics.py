@@ -5,8 +5,9 @@ The reference ships a 12-check "why am I getting 0 candidates" script
 cardinality at each view, a simplified manual score crosscheck against the
 real scorer, threshold-fallout, tag-map health, regex sanity. Here each
 check is one lazy DataFrame; `run_diagnostics` evaluates them in a single
-pass where possible and returns a plain dict so callers (or the CLI job)
-can json.dump it — the Spark analogue of the reference's psql run.
+pass where possible (the per-kind counts share one aggregate) and returns a
+plain dict so callers (or the CLI job) can json.dump it — the Spark analogue
+of the reference's psql run.
 
 Checks are numbered to match the reference's DIAGNOSTIC sections.
 """
@@ -17,7 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmgraft.rules import reference_rules as R
-from osmgraft.rules.compiler import compile_exclusion_filter, compile_score
+from osmgraft.rules.sqlgen import filter_sql, score_sql
+
 
 def _manual_score():
     """diagnose_pipeline.sql:119-142 — deliberately simplified, independent
@@ -69,50 +71,46 @@ def run_diagnostics(features: DataFrame, threshold: int = R.SCORE_THRESHOLD) -> 
         raise RuntimeError("regex dialect drift: rlike != LIKE on literal substring")
     out["regex_dialect_ok"] = True
 
-    # D4: filtered-stage cardinality per kind (:84-104)
-    filtered = {}
-    for kind in ("point", "polygon", "line"):
-        excl, override = {
-            "point": (R.POINT_EXCLUSIONS, R.POINT_OVERRIDE),
-            "polygon": (R.POLYGON_EXCLUSIONS, R.POLYGON_OVERRIDE),
-            "line": (R.LINE_EXCLUSIONS, R.LINE_OVERRIDE),
-        }[kind]
-        filtered[kind] = (
-            features.where(F.col("geom_kind") == kind)
-            .where(compile_exclusion_filter(excl, override))
-            .count()
-        )
-    out["filtered_counts"] = filtered
-
-    # D6: manual simplified score vs the compiled scorer (:119-142;
-    # quick_test_polygon.sql crosscheck). The reference's simplified
-    # formula probes '(aerospace|aviation|aircraft)' but its real scorer's
-    # name branch is '(aerospace|avionics|aero)' — 'aircraft'/'aviation'
-    # rows can legitimately score 0 (observed in the reference semantics).
-    # The hard invariant covers the shared terms only: any name matching
-    # '(aerospace|aero)' MUST get a positive compiled score.
-    poly = features.where(F.col("geom_kind") == "polygon")
-    scored = poly.withColumn("real", compile_score(R.SCORERS["polygon"])).withColumn(
-        "manual", _manual_score()
+    # D4, D6, D9 and D11 in one aggregate. `_s_<kind>` is the kind's
+    # compiled score on its own rows and NULL elsewhere.
+    scores = {
+        kind: f"CASE WHEN geom_kind = '{kind}' THEN {score_sql(rs, dialect='spark')} END"
+        for kind, rs in R.SCORERS.items()
+    }
+    counts = {
+        # D4: filtered-stage cardinality per kind (:84-104)
+        **{
+            f"filtered_{kind}": f"geom_kind = '{kind}' AND {filter_sql(*ex, dialect='spark')}"
+            for kind, ex in R.EXCLUSIONS.items()
+        },
+        # D6: manual simplified score vs the compiled polygon scorer
+        # (:119-142; quick_test_polygon.sql crosscheck). The reference's
+        # simplified formula probes '(aerospace|aviation|aircraft)' but its
+        # real scorer's name branch is '(aerospace|avionics|aero)' —
+        # 'aircraft'/'aviation' rows can legitimately score 0 (observed in
+        # the reference semantics). The hard invariant covers the shared
+        # terms only: any name matching '(aerospace|aero)' MUST get a
+        # positive compiled score.
+        "manual_vs_compiled_disagreements":
+            "lower(coalesce(name, '')) RLIKE '(aerospace|aero)' AND _s_polygon <= 0",
+        # exploratory, reference-faithful (may be > 0)
+        "manual_only_hits": "_manual >= 100 AND _s_polygon <= 0",
+        # D9: threshold fallout — scores in (0, threshold) per kind (:183-190)
+        **{f"fallout_{k}": f"_s_{k} > 0 AND _s_{k} < {threshold}" for k in R.SCORERS},
+        # D11: tag map health (:225-242)
+        "tags_nonempty": "size(tags) > 0",
+    }
+    row = (
+        features.withColumn("_manual", _manual_score())
+        .selectExpr("*", *(f"{s} AS _s_{k}" for k, s in scores.items()))
+        .selectExpr(*(f"count_if({p}) AS {n}" for n, p in counts.items()))
+        .first()
     )
-    out["manual_vs_compiled_disagreements"] = scored.where(
-        name_lc.rlike("(aerospace|aero)") & (F.col("real") <= 0)
-    ).count()
-    out["manual_only_hits"] = scored.where(
-        (F.col("manual") >= 100) & (F.col("real") <= 0)
-    ).count()  # exploratory, reference-faithful (may be > 0)
-
-    # D9: threshold fallout — scores in (0, threshold) per kind (:183-190)
-    fallout = {}
-    for kind in R.SCORERS:
-        sc = features.where(F.col("geom_kind") == kind).withColumn(
-            "s", compile_score(R.SCORERS[kind])
-        )
-        fallout[kind] = sc.where((F.col("s") > 0) & (F.col("s") < threshold)).count()
-    out["threshold_fallout"] = fallout
-
-    # D11: tag map health (:225-242)
-    out["tags_nonempty"] = features.where(F.size(F.col("tags")) > 0).count()
+    out["filtered_counts"] = {k: row[f"filtered_{k}"] for k in R.EXCLUSIONS}
+    out["manual_vs_compiled_disagreements"] = row["manual_vs_compiled_disagreements"]
+    out["manual_only_hits"] = row["manual_only_hits"]
+    out["threshold_fallout"] = {k: row[f"fallout_{k}"] for k in R.SCORERS}
+    out["tags_nonempty"] = row["tags_nonempty"]
 
     # D13: geometry validity audit (verify_import.py:223-231 ST_IsValid
     # counts; round-3 gap-close) — every WKB blob classified by the

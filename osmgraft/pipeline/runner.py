@@ -29,7 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from osmgraft.pipeline.candidates import candidate_stage
+from osmgraft.pipeline.candidates import candidate_sql, candidate_stage
 from osmgraft.pipeline.union import assert_final_invariants, priority_dedup_union
 from osmgraft.rules.reference_rules import PRIORITY_ORDER
 
@@ -118,15 +118,18 @@ def run_reference_pipeline(
 
     Mirrors 07_run_all_pipelines.sh but as one resumable Spark application:
     the four `candidate_stage` plans and the priority window fuse into one
-    write. The resume fingerprint is `input_fingerprint(features)`.
+    write. The resume fingerprint hashes `input_fingerprint(features)` with
+    the four kinds' rule SQL (`candidate_sql`), so an edited rule recomputes.
     """
+    rules = json.dumps([candidate_sql(k) for k in PRIORITY_ORDER])
+    fingerprint = hashlib.sha256((input_fingerprint(features) + rules).encode()).hexdigest()
     runner = StageRunner(spark, workdir)
     final = runner.run_stage(
         "final_union",
         lambda: priority_dedup_union(
             {k: candidate_stage(features, k) for k in PRIORITY_ORDER}, PRIORITY_ORDER
         ),
-        input_fingerprint(features),
+        fingerprint,
     )
     if validate:
         assert_final_invariants(final)

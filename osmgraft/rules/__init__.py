@@ -1,19 +1,22 @@
-from osmgraft.rules.compiler import (
-    RuleSet,
-    ScoreRule,
-    compile_exclusion_filter,
-    compile_keyword_array,
-    compile_score,
-    compile_tier,
-    tags_text,
+from osmgraft.rules.compiler import RuleSet, ScoreRule
+from osmgraft.rules.sqlgen import (
+    filter_sql,
+    keywords_sql,
+    quote,
+    rule_sql,
+    score_sql,
+    tags_text_sql,
+    tier_sql,
 )
 
 __all__ = [
     "RuleSet",
     "ScoreRule",
-    "compile_exclusion_filter",
-    "compile_keyword_array",
-    "compile_score",
-    "compile_tier",
-    "tags_text",
+    "filter_sql",
+    "keywords_sql",
+    "quote",
+    "rule_sql",
+    "score_sql",
+    "tags_text_sql",
+    "tier_sql",
 ]

@@ -1,29 +1,22 @@
-"""Rules engine: declarative rule sets compiled to pyspark Column expressions.
+"""Rules engine data model: declarative rule sets as plain data.
 
 The reference drives its whole scoring pipeline from SQL CASE-chains generated
 out of YAML (reference: scoring.yaml:8-357, README.md:172-187, and the four
-shell scorers 07_pipeline_{point,polygon,line,roads}.sh). This module is the
-Spark-first equivalent: rule sets are plain data (dicts / YAML), compiled once
-into a single `Column` — an additive `when(...)` chain that Catalyst constant-
-folds and whole-stage-codegens. No Python runs per row.
+shell scorers 07_pipeline_{point,polygon,line,roads}.sh). Here a rule set is
+plain data (dicts / YAML → `ScoreRule` / `RuleSet`), and one emitter,
+`osmgraft.rules.sqlgen`, compiles it to SQL text in a `spark` and a `duckdb`
+dialect: the Spark plans parse the text (`F.expr`), the DuckDB oracles embed
+it. Catalyst constant-folds and whole-stage-codegens the additive CASE-chain;
+no Python runs per row.
 
-Semantic notes (SURVEY.md §7.3):
-- PostgreSQL POSIX `~` is case-sensitive; every reference predicate wraps the
-  operand in LOWER(COALESCE(col,'')), which we replicate verbatim.
-- `\\m...\\M` word boundaries (scoring.yaml) map to Java `\\b`.
-- hstore `tags::text` serialization is order-undefined in PG; we serialize
-  deterministically with sorted keys (`tags_text`), and goldens use our
-  serialization.
+PostgreSQL `\\m...\\M` word boundaries (scoring.yaml) map to `\\b`, which
+Java and RE2 both read as a word boundary (SURVEY.md §7.3 item 1).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # data model
@@ -102,170 +95,4 @@ def rule_from_dict(r: dict[str, Any]) -> ScoreRule:
         value=r.get("value"),
         children=tuple(rule_from_dict(c) for c in r.get("children", ())),
         override_if=tuple(rule_from_dict(c) for c in r.get("override_if", ())),
-    )
-
-
-# ---------------------------------------------------------------------------
-# column helpers
-# ---------------------------------------------------------------------------
-
-
-def lower_coalesce(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.coalesce(c, F.lit("")))
-
-
-def tags_text(map_col: str | Column = "tags") -> Column:
-    """Deterministic hstore-style serialization of a MapType column.
-
-    PG renders hstore as `"k"=>"v", ...` in arbitrary order; we sort keys so
-    regex/LIKE over the serialized map is reproducible (SURVEY.md §7.3 #7).
-    Stays entirely JVM-side (higher-order functions, no UDF).
-    """
-    m = F.col(map_col) if isinstance(map_col, str) else map_col
-    return F.coalesce(
-        F.concat_ws(
-            ", ",
-            F.transform(
-                F.array_sort(F.map_keys(m)),
-                lambda k: F.concat(
-                    F.lit('"'), k, F.lit('"=>"'), F.coalesce(m[k], F.lit("")), F.lit('"')
-                ),
-            ),
-        ),
-        F.lit(""),
-    )
-
-
-def _rule_predicate(rule: ScoreRule) -> Column:
-    if rule.kind == "regex":
-        return lower_coalesce(rule.column).rlike(rule.pattern)
-    if rule.kind == "raw_regex":
-        return F.col(rule.column).rlike(rule.pattern)
-    if rule.kind == "in":
-        return F.col(rule.column).isin(list(rule.values))
-    if rule.kind == "not_null":
-        return F.col(rule.column).isNotNull()
-    if rule.kind == "map_has_key":
-        preds = [F.map_contains_key(F.col(rule.column), k) for k in rule.values]
-        return reduce(lambda a, b: a | b, preds)
-    if rule.kind == "map_regex":
-        return F.lower(tags_text(rule.column)).rlike(rule.pattern)
-    if rule.kind == "blob_regex":
-        blob = F.lower(
-            F.concat(
-                F.coalesce(F.col(rule.column or "name"), F.lit("")),
-                F.lit(" "),
-                tags_text("tags"),
-            )
-        )
-        return blob.rlike(rule.pattern)
-    if rule.kind == "expr":
-        return F.expr(rule.pattern)
-    if rule.kind == "contains":
-        # lower the literal too (case-insensitive semantics; the blob side
-        # is lowercased, so an uppercase keyword would never match)
-        return lower_coalesce(rule.column).contains(rule.pattern.lower())
-    if rule.kind == "gt":
-        return F.col(rule.column) > F.lit(rule.value)
-    if rule.kind == "any_of":
-        return reduce(lambda a, b: a | b, map(_rule_predicate, rule.children))
-    if rule.kind == "all_of":
-        return reduce(lambda a, b: a & b, map(_rule_predicate, rule.children))
-    raise ValueError(f"unknown rule kind: {rule.kind}")
-
-
-# ---------------------------------------------------------------------------
-# compilers
-# ---------------------------------------------------------------------------
-
-
-def compile_score(ruleset: RuleSet) -> Column:
-    """Σ CASE WHEN pred THEN weight ELSE 0 END — one Column, codegen-friendly.
-
-    Mirrors the reference's additive scorers (07_pipeline_point.sh:70-115 etc).
-    Rules with `override_if` contribute 0 when any override predicate matches
-    (scoring.yaml:304-312: "penalty UNLESS explicit aerospace") — the
-    override test is the FIRST branch of the CASE, so it wins.
-    """
-    branches = []
-    for r in ruleset.rules:
-        pred = _rule_predicate(r)
-        if r.override_if:
-            ov = reduce(lambda a, b: a | b, map(_rule_predicate, r.override_if))
-            branches.append(
-                F.when(ov, F.lit(0)).when(pred, F.lit(r.weight)).otherwise(F.lit(0))
-            )
-        else:
-            branches.append(F.when(pred, F.lit(r.weight)).otherwise(F.lit(0)))
-    return reduce(lambda a, b: a + b, branches).cast("int")
-
-
-def compile_exclusion_filter(
-    exclusions: list[dict[str, Any]], override: list[dict[str, Any]]
-) -> Column:
-    """(AND of per-column exclusions) OR (override predicates).
-
-    Replicates the reference's filtered views: consumer-noise columns must be
-    NULL / not in a noise list, unless an aerospace override keyword matches
-    (07_pipeline_point.sh:31-49, 07_pipeline_polygon.sh:33-55).
-
-    exclusion item: {column, exclude: [...]} → col IS NULL OR col NOT IN (...)
-                    {column, require_null: true} → col IS NULL
-    override item: a ScoreRule-style dict (weight ignored).
-    """
-    conjuncts: list[Column] = []
-    for e in exclusions:
-        c = F.col(e["column"])
-        if e.get("require_null"):
-            conjuncts.append(c.isNull())
-        else:
-            conjuncts.append(c.isNull() | ~c.isin(list(e["exclude"])))
-    keep = reduce(lambda a, b: a & b, conjuncts) if conjuncts else F.lit(True)
-    if override:
-        ov_rules = RuleSet.from_dict("override", [{**o, "weight": 0} for o in override])
-        ov = reduce(lambda a, b: a | b, [_rule_predicate(r) for r in ov_rules.rules])
-        keep = keep | ov
-    return keep
-
-
-def compile_tier(
-    score_col: str | Column = "aerospace_score",
-    bands: tuple[tuple[int, str], ...] = (
-        (150, "tier1_candidate"),
-        (80, "tier2_candidate"),
-        (40, "potential_candidate"),
-    ),
-    default: str = "low_probability",
-) -> Column:
-    """Threshold ladder → classification label (07_pipeline_point.sh:176-181)."""
-    c = F.col(score_col) if isinstance(score_col, str) else score_col
-    out: Column | None = None
-    for threshold, label in bands:
-        branch = F.when(c >= threshold, F.lit(label))
-        out = branch if out is None else out.when(c >= threshold, F.lit(label))
-    return out.otherwise(F.lit(default))
-
-
-def compile_confidence(
-    score_col: str | Column = "aerospace_score",
-    bands: tuple[tuple[int, str], ...] = (
-        (150, "high"),
-        (100, "medium-high"),
-        (70, "medium"),
-    ),
-    default: str = "low",
-) -> Column:
-    """Confidence ladder (07_pipeline_point.sh:182-187)."""
-    return compile_tier(score_col, bands, default)
-
-
-def compile_keyword_array(blob: Column, keywords: list[str]) -> Column:
-    """ARRAY(SELECT kw FROM (VALUES ...) WHERE blob LIKE '%'||kw||'%').
-
-    Reference C8 (07_pipeline_point.sh:199-203) — correlated array subquery
-    re-expressed as a JVM-side higher-order filter over a literal array.
-    """
-    return F.filter(
-        F.array(*[F.lit(k) for k in keywords]), lambda kw: blob.contains(kw)
     )

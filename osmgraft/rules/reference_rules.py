@@ -108,6 +108,13 @@ ROADS_INCLUDE = [
      "pattern": "highway = 'service' AND man_made IN ('works','factory')"},
 ]
 
+# (exclusions, override) per kind; roads use the inclusion filter above
+EXCLUSIONS = {
+    "point": (POINT_EXCLUSIONS, POINT_OVERRIDE),
+    "polygon": (POLYGON_EXCLUSIONS, POLYGON_OVERRIDE),
+    "line": (LINE_EXCLUSIONS, LINE_OVERRIDE),
+}
+
 # ---------------------------------------------------------------------------
 # Scorers (C1–C4) — 07_pipeline_*.sh STEP 2
 # ---------------------------------------------------------------------------
@@ -345,6 +352,9 @@ KEYWORD_BLOB_INCLUDES_OPERATOR = {"point": False, "polygon": True,
                                   "line": False, "roads": False}
 
 SCORE_THRESHOLD = 40  # 07_pipeline_point.sh:210 etc.
+
+# confidence ladder, default 'low' (07_pipeline_point.sh:182-187)
+CONFIDENCE_BANDS = ((150, "high"), (100, "medium-high"), (70, "medium"))
 
 # priority order of the final dedup-union cascade (07_run_all_pipelines.sh:167-234)
 PRIORITY_ORDER = ["polygon", "point", "line", "roads"]

@@ -3,9 +3,9 @@
 The reference drives its whole pipeline from a 10-tier YAML of weighted
 pattern groups (README.md:172-196 calls the YAML→SQL generator the most
 architecturally important entry point). This module parses that exact YAML
-shape into the engine's RuleSet, which then compiles to BOTH backends —
-a pyspark Column (compiler.compile_score) and DuckDB SQL (sqlgen.score_sql)
-— from one source of truth.
+shape into the engine's RuleSet, which the one emitter (sqlgen.score_sql)
+compiles to SQL text for both engines: the `spark` dialect for the Spark
+plans, the `duckdb` dialect for the oracles.
 
 YAML shape accepted (the reference's own file parses unmodified):
 
@@ -73,8 +73,8 @@ class SuspicionTrigger:
     """One compiled `validation.suspicion_triggers` entry (round-3; the
     block was inert metadata through round 2). A trigger flags rows of the
     SCORED output for manual review: optional score floor, optional tier
-    equality, optional column matcher (reusing the ScoreRule predicate
-    machinery so it compiles to both engines).
+    equality, optional column matcher (a ScoreRule, so sqlgen emits it
+    for both engines).
 
     Reference: scoring.yaml:349-357 declares the triggers;
     power_user_queries.sql:190-237 ('7. SUSPICIOUS RECORDS') and
@@ -299,34 +299,27 @@ def _parse_triggers(validation: dict, cm: ColumnMap) -> tuple[SuspicionTrigger, 
     return tuple(out)
 
 
-def trigger_predicate(trig: SuspicionTrigger, score_col: str = "score", tier_col: str = "tier"):
-    """Spark Column predicate over a scored DataFrame."""
-    from pyspark.sql import functions as F
-
-    from osmgraft.rules.compiler import _rule_predicate
-
-    pred = F.lit(True)
-    if trig.min_score is not None:
-        pred = pred & (F.col(score_col) >= trig.min_score)
-    if trig.tier is not None:
-        pred = pred & (F.col(tier_col) == trig.tier)
-    if trig.matcher is not None:
-        pred = pred & _rule_predicate(trig.matcher)
-    return pred
-
-
-def trigger_sql(trig: SuspicionTrigger, score_expr: str = "score", tier_expr: str = "tier") -> str:
-    """The same predicate as ANSI SQL (DuckDB oracle side)."""
-    from osmgraft.rules.sqlgen import _sql_pred
+def trigger_sql(
+    trig: SuspicionTrigger, score_expr: str = "score", tier_expr: str = "tier", *, dialect: str
+) -> str:
+    """The trigger's predicate over a scored table, as SQL text."""
+    from osmgraft.rules.sqlgen import quote, rule_sql
 
     parts = []
     if trig.min_score is not None:
         parts.append(f"{score_expr} >= {trig.min_score}")
     if trig.tier is not None:
-        parts.append(f"{tier_expr} = '{trig.tier}'")
+        parts.append(f"{tier_expr} = {quote(trig.tier, dialect)}")
     if trig.matcher is not None:
-        parts.append(_sql_pred(trig.matcher))
+        parts.append(rule_sql(trig.matcher, dialect=dialect))
     return " AND ".join(parts) if parts else "TRUE"
+
+
+def trigger_predicate(trig: SuspicionTrigger, score_col: str = "score", tier_col: str = "tier"):
+    """The trigger's predicate as a Spark Column."""
+    from pyspark.sql import functions as F
+
+    return F.expr(trigger_sql(trig, score_col, tier_col, dialect="spark"))
 
 
 def load_scoring_yaml(text: str, cm: ColumnMap | None = None) -> ScoringSpec:
@@ -398,8 +391,8 @@ def load_aerospace_scoring(cm: ColumnMap | None = None) -> ScoringSpec:
 
 
 def load_documents_scoring() -> ScoringSpec:
-    """10-tier system over the documents table — every matcher kind is
-    SQL-expressible, so sqlgen generates the DuckDB oracle from the same
-    parsed rules (used by the yaml_scored_documents contract query)."""
+    """10-tier system over the documents table (used by the
+    yaml_scored_documents contract query, whose Spark plan and DuckDB
+    oracle sqlgen emits from the same parsed rules)."""
     cm = ColumnMap(text_blob="text", postcode="source")
     return load_scoring_yaml(_read_asset("scoring_documents.yaml"), cm)

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from osmgraft.datagen.spark_io import PAGES_SCHEMA
 from osmgraft.extract import extract_features
 from osmgraft.geo.cells import GridSpec, with_cell
-from osmgraft.rules.compiler import RuleSet, compile_score
+from osmgraft.rules.compiler import RuleSet
+from osmgraft.rules.sqlgen import score_sql
 
 
 def read_pages_stream(spark: SparkSession, path: str, max_files: int = 16) -> DataFrame:
@@ -77,9 +78,9 @@ def streaming_scored_counts(
     window: str = "1 hour",
 ) -> DataFrame:
     """Rule-scored candidate counts per window — the streaming face of the
-    batch scoring pipeline (same compiled Column)."""
+    batch scoring pipeline (same emitted rule SQL)."""
     feats = extract_features(pages)
-    scored = feats.withColumn("score", compile_score(scorer))
+    scored = feats.withColumn("score", F.expr(score_sql(scorer, dialect="spark")))
     return (
         scored.where(F.col("score") >= threshold)
         .withWatermark("warc_ts", watermark)

@@ -23,8 +23,8 @@ from osmgraft.extract import extract_features
 from osmgraft.pipeline import candidate_stage, priority_dedup_union
 from osmgraft.pipeline.runner import run_reference_pipeline
 from osmgraft.pipeline.union import assert_final_invariants
-from osmgraft.rules.compiler import compile_score, compile_tier
 from osmgraft.rules.reference_rules import PRIORITY_ORDER, SCORERS
+from osmgraft.rules.sqlgen import score_sql
 
 
 @pytest.fixture(scope="module")
@@ -146,7 +146,7 @@ def test_scorer_spotcheck(spark):
         r.osm_id: r.s
         for kind in ("point", "polygon")
         for r in df.where(F.col("geom_kind") == kind)
-        .select("osm_id", compile_score(SCORERS[kind]).alias("s"))
+        .select("osm_id", F.expr(score_sql(SCORERS[kind], dialect="spark")).alias("s"))
         .collect()
     }
     assert got[1] == 140
@@ -209,6 +209,78 @@ def test_resume_fingerprint_follows_input_files(spark, tmp_path):
     new = run(wd)
     assert new != old
     assert new == run(tmp_path / "fresh")
+
+
+def test_resume_fingerprint_follows_rules(spark, tmp_path, monkeypatch):
+    """The `final_union` fingerprint covers the rule set: unchanged rules
+    reuse the manifest untouched, an edited weight recomputes in the same
+    workdir."""
+    import dataclasses
+
+    from osmgraft.rules.compiler import RuleSet
+
+    src = str(tmp_path / "features")
+    to_spark(spark, gen_osm_features(400), "features").write.parquet(src)
+    wd = tmp_path / "wd"
+    manifest = wd / "stage=final_union" / "_manifest.json"
+
+    def run(workdir):
+        return sorted(
+            run_reference_pipeline(spark, spark.read.parquet(src), str(workdir))
+            .select("osm_id", "aerospace_score")
+            .collect()
+        )
+
+    old = run(wd)
+    before = (manifest.stat().st_mtime_ns, manifest.read_text())
+    assert run(wd) == old
+    assert (manifest.stat().st_mtime_ns, manifest.read_text()) == before
+
+    point = SCORERS["point"]
+    rules = list(point.rules)
+    assert rules[0].label == "direct_aerospace_name"
+    rules[0] = dataclasses.replace(rules[0], weight=1000)
+    monkeypatch.setitem(SCORERS, "point", RuleSet(point.name, tuple(rules)))
+    new = run(wd)
+    assert manifest.read_text() != before[1]
+    assert new != old
+
+
+def test_pipeline_scorers_match_duckdb_oracle(spark, tmp_path):
+    """Each kind's spark-dialect score and row filter through Spark equal
+    the duckdb-dialect text through DuckDB, row for row."""
+    import duckdb
+
+    from osmgraft.rules.reference_rules import EXCLUSIONS, ROADS_INCLUDE
+    from osmgraft.rules.sqlgen import filter_sql
+
+    src = str(tmp_path / "features")
+    to_spark(spark, gen_osm_features(2000), "features").drop("way_wkb").write.parquet(src)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW features AS SELECT * FROM read_parquet('{src}/*.parquet')")
+    scores = set()
+    for kind, rules in SCORERS.items():
+        ex = EXCLUSIONS.get(kind, ([], ROADS_INCLUDE))
+
+        def cols(d):
+            return [f"{score_sql(rules, dialect=d)} AS s", f"{filter_sql(*ex, dialect=d)} AS keep"]
+
+        got = sorted(
+            tuple(r)
+            for r in spark.read.parquet(src)
+            .where(F.col("geom_kind") == kind)
+            .selectExpr("osm_id", *cols("spark"))
+            .collect()
+        )
+        want = sorted(
+            con.sql(
+                f"SELECT osm_id, {', '.join(cols('duckdb'))} FROM features "
+                f"WHERE geom_kind = '{kind}'"
+            ).fetchall()
+        )
+        assert len(got) > 100 and got == want, kind
+        scores |= {s for _, s, _ in got}
+    assert len(scores) > 5
 
 
 def test_uri_workdir_keeps_manifests_under_it(spark, tmp_path, monkeypatch):

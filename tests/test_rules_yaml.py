@@ -12,19 +12,26 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pandas as pd
 import pytest
 import yaml
 from pyspark.sql import functions as F
 
 from osmgraft.datagen import gen_osm_features
 from osmgraft.datagen.spark_io import to_spark
-from osmgraft.rules.compiler import compile_score, compile_tier
+from osmgraft.rules.compiler import RuleSet
+from osmgraft.rules.sqlgen import score_sql, tier_sql
 from osmgraft.rules.yamlspec import (
     ColumnMap,
     _read_asset,
     load_aerospace_scoring,
     load_documents_scoring,
+    load_scoring_yaml,
 )
+
+
+def _score(rules):
+    return F.expr(score_sql(rules, dialect="spark"))
 
 # ---------------------------------------------------------------------------
 # naive reference scorer (independent reimplementation from the YAML dict)
@@ -152,11 +159,45 @@ def test_assets_load_and_shape():
     assert all(r.weight < 0 for r in ov)
 
 
-def test_aerospace_scoring_matches_naive_python(spark):
-    """Full-asset cross-check: Spark compiled Column vs the independent
-    row-at-a-time scorer, over the OSM fixture (800 rows covering every
-    tier, noise class, and override path)."""
+# Extra groups whose literals need quoting: an apostrophe in a pattern, a
+# keyword and an `in` value, a backslash in an `in` value, `\b`, `\.` and
+# `${` (Spark substitutes `${...}` variables in SQL text).
+_QUOTING_SECTION = {
+    "quoting_cases": {
+        "apostrophe_pattern": {"weight": 3, "patterns": ["o'brien"]},
+        "word_boundary": {"weight": 5, "patterns": ["\\bjet\\b"]},
+        "escaped_dot": {"weight": 7, "patterns": ["st\\.\\s*john"]},
+        "apostrophe_keyword": {"weight": 11, "keywords": ["D'Arcy"]},
+        "dollar_brace_keyword": {"weight": 17, "keywords": ["${x}"]},
+        "apostrophe_in": {
+            "weight": 13,
+            "conditions": {"operator": ["O'Brien Ltd", "Back\\slash Co"]},
+        },
+    }
+}
+_QUOTING_ROWS = [  # (name, operator, score of the quoting groups alone)
+    ("O'Brien Aerospace", None, 3),
+    ("Jet Engines St.John", None, 5 + 7),
+    ("Jetstream Stajohn Works", None, 0),
+    ("D'Arcy Precision", "O'Brien Ltd", 3 + 11 + 13),
+    ("Back\\slash Works", "Back\\slash Co", 13),
+    ("St John's Hangar", "O'Brien", 3),
+    ("Pay ${x} Ltd", None, 17),
+]
+
+
+def test_aerospace_scoring_matches_naive_python(spark, tmp_path):
+    """Full-asset cross-check: the spark-dialect score through Spark and
+    the duckdb-dialect score through DuckDB vs the independent row-at-a-time
+    scorer, over the OSM fixture (800 rows covering every tier, noise class,
+    and override path) plus rows for the quoting groups."""
+    import duckdb
+
     pdf = gen_osm_features(800)
+    extra = pdf.head(len(_QUOTING_ROWS)).copy()
+    extra["name"] = [r[0] for r in _QUOTING_ROWS]
+    extra["operator"] = [r[1] for r in _QUOTING_ROWS]
+    pdf = pd.concat([pdf, extra], ignore_index=True)
     # the fixture duplicates osm_ids across kinds by design — re-key unique
     pdf["osm_id"] = np.arange(1, len(pdf) + 1, dtype=np.int64) * 7919
     # deterministic synthetic building area (points → NULL, polygons → m²),
@@ -164,7 +205,7 @@ def test_aerospace_scoring_matches_naive_python(spark):
     pdf["building_area"] = np.where(
         pdf["geom_kind"] == "polygon", (pdf["osm_id"].abs() % 8000).astype(float), np.nan
     )
-    doc = yaml.safe_load(_read_asset("aerospace_scoring.yaml"))
+    doc = {**yaml.safe_load(_read_asset("aerospace_scoring.yaml")), **_QUOTING_SECTION}
     expected = []
     for _, row in pdf.iterrows():
         r = row.to_dict()
@@ -172,7 +213,12 @@ def test_aerospace_scoring_matches_naive_python(spark):
             r["building_area"] = None
         expected.append(naive_score(r, doc))
 
-    spec = load_aerospace_scoring()
+    # the binding load_aerospace_scoring uses
+    cm = ColumnMap(
+        text_blob="name_blob", postcode="addr_postcode", website="website",
+        phone_map="tags", area="building_area", building="building",
+    )
+    spec = load_scoring_yaml(yaml.safe_dump(doc), cm)
     sdf = (
         to_spark(spark, pdf.drop(columns=["building_area"]), "features")
         .withColumn(
@@ -194,20 +240,47 @@ def test_aerospace_scoring_matches_naive_python(spark):
         )
     )
     got = (
-        sdf.withColumn("score", compile_score(spec.rules))
+        sdf.withColumn("score", _score(spec.rules))
         .select("osm_id", "score")
         .toPandas()
         .set_index("osm_id")["score"]
     )
+    src = str(tmp_path / "features")
+    sdf.drop("way_wkb").write.parquet(src)
+    con = duckdb.connect()
+    duck = dict(
+        con.sql(
+            f"SELECT osm_id, {score_sql(spec.rules, dialect='duckdb')} AS score "
+            f"FROM read_parquet('{src}/*.parquet')"
+        ).fetchall()
+    )
     exp = dict(zip(pdf["osm_id"], expected))
     mismatches = [
-        (oid, int(got[oid]), exp[oid]) for oid in exp if int(got[oid]) != exp[oid]
+        (oid, int(got[oid]), duck[oid], exp[oid])
+        for oid in exp
+        if not int(got[oid]) == duck[oid] == exp[oid]
     ]
     assert mismatches == [], mismatches[:10]
+    # every quoting group fires where it should, on both engines
+    quoting = RuleSet(
+        "quoting", tuple(r for r in spec.rules.rules if r.label.startswith("quoting_cases"))
+    )
+    extra_ids = tuple(int(i) for i in pdf["osm_id"].iloc[-len(_QUOTING_ROWS):])
+    want = [r[2] for r in _QUOTING_ROWS]
+    assert [
+        r.s for r in sdf.where(F.col("osm_id").isin(*extra_ids))
+        .select("osm_id", _score(quoting).alias("s")).orderBy("osm_id").collect()
+    ] == want
+    assert [
+        r[0] for r in con.sql(
+            f"SELECT {score_sql(quoting, dialect='duckdb')} FROM read_parquet('{src}/*.parquet') "
+            f"WHERE osm_id IN {extra_ids} ORDER BY osm_id"
+        ).fetchall()
+    ] == want
     # distribution sanity: all three classes present
     tiers = (
-        sdf.withColumn("score", compile_score(spec.rules))
-        .withColumn("tier", compile_tier("score", spec.tier_bands))
+        sdf.withColumn("score", _score(spec.rules))
+        .withColumn("tier", F.expr(tier_sql("score", spec.tier_bands, dialect="spark")))
         .groupBy("tier")
         .count()
         .toPandas()
@@ -238,7 +311,7 @@ def test_override_if_suppresses_penalty(spark):
     )
     got = {
         r["name"]: r["score"]
-        for r in sdf.withColumn("score", compile_score(spec.rules)).collect()
+        for r in sdf.withColumn("score", _score(spec.rules)).collect()
     }
     # aerospace-named shop: +100 direct term; -200 consumer penalty is
     # override-suppressed; -100 clearly_wrong still fires because keyword
@@ -259,15 +332,13 @@ def test_postcode_prefix_semantics(spark):
     'GU14 6XX', not GU1)."""
     spec = load_aerospace_scoring()
     geo = [r for r in spec.rules.rules if r.label.startswith("geographic_clusters")]
-    from osmgraft.rules.compiler import RuleSet
-
     sdf = spark.createDataFrame(
         [(pc,) for pc in ["S1 2AA", "SO16 7PX", "GU14 6XX", "GU1 3QQ",
                           "BS12 4YY", "NE8 1ZZ"]],
         "addr_postcode string",
     )
     got = (
-        sdf.withColumn("geo_score", compile_score(RuleSet("geo", tuple(geo))))
+        sdf.withColumn("geo_score", _score(RuleSet("geo", tuple(geo))))
         .toPandas()
         .set_index("addr_postcode")["geo_score"]
     )
@@ -285,13 +356,12 @@ def test_documents_spec_sql_and_spark_agree_on_fixture(spark):
     smaller, faster twin of the driver's yaml_scored_documents gate."""
     import duckdb
 
-    from osmgraft.rules.sqlgen import score_sql
     from tests.conftest import SF_CORRECT
 
     spec = load_documents_scoring()
     sdf = (
         spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-        .withColumn("score", compile_score(spec.rules))
+        .withColumn("score", _score(spec.rules))
         .select("doc_id", "score")
         .toPandas()
         .sort_values("doc_id")
@@ -302,7 +372,9 @@ def test_documents_spec_sql_and_spark_agree_on_fixture(spark):
         f"CREATE VIEW documents AS SELECT * FROM '{SF_CORRECT}/documents.parquet'"
     )
     ddf = (
-        con.sql(f"SELECT doc_id, {score_sql(spec.rules)} AS score FROM documents")
+        con.sql(
+            f"SELECT doc_id, {score_sql(spec.rules, dialect='duckdb')} AS score FROM documents"
+        )
         .df()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -372,5 +444,6 @@ class TestSuspicionTriggers:
         )
         for r in rows:
             con.execute("INSERT INTO t VALUES (?, ?, ?, ?, ?, 'tier1_candidate')", list(r))
-        got = {r[0] for r in con.sql(f"SELECT doc_id FROM t WHERE {trigger_sql(trig)}").fetchall()}
+        where = trigger_sql(trig, dialect="duckdb")
+        got = {r[0] for r in con.sql(f"SELECT doc_id FROM t WHERE {where}").fetchall()}
         assert got == {1}

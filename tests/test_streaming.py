@@ -11,7 +11,8 @@ from osmgraft.datagen import gen_pages
 from osmgraft.datagen.spark_io import to_spark
 from osmgraft.extract import extract_features
 from osmgraft.geo.cells import with_cell
-from osmgraft.rules.compiler import RuleSet, compile_score
+from osmgraft.rules.compiler import RuleSet
+from osmgraft.rules.sqlgen import score_sql
 from osmgraft.streaming import (
     read_pages_stream,
     streaming_scored_counts,
@@ -95,7 +96,7 @@ def test_streaming_scored_counts(spark, pages_dir, tmp_path):
     total_stream = sum(r.n_candidates for r in rows)
 
     batch = extract_features(spark.read.parquet(pages_dir)).withColumn(
-        "score", compile_score(SCORER)
+        "score", F.expr(score_sql(SCORER, dialect="spark"))
     )
     assert total_stream == batch.where("score >= 60").count()
     assert total_stream > 0
