@@ -7,9 +7,9 @@
 
 Runs two stages, each checkpointed to --workdir with a per-partition
 lineage manifest (resume by re-running with the same --workdir):
-- `features`: pages → exact text dedup → vectorized text→feature extraction
-  → widen, staged once, so the candidates, the tile rollup and the
-  diagnostics all read parquet and the Arrow hop runs once;
+- `features`: pages → exact text dedup → text→feature extraction → widen
+  (page geometry as coordinate arrays), staged once, so the candidates, the
+  tile rollup and the diagnostics all read parquet and extraction runs once;
 - `final_union`: the 4 candidate kinds (filter → score → classify,
   reference 07_run_all_pipelines.sh) → priority dedup-union → final
   candidates, in one plan.
@@ -17,8 +17,9 @@ Then the hex res-`tile_res` tile rollup of all extracted points and the
 nearest-POI lookup per candidate. The `features` fingerprint is derived
 from the --pages file listing (or the --n-synthetic size) and
 `final_union`'s from the staged feature files, so a rewritten --pages
-input recomputes every stage. Imports only
-from the shipped zip — no repo-path assumptions beyond this file.
+input recomputes every stage. Every step is JVM SQL: the job starts no
+Python worker. Imports only from the shipped zip — no repo-path
+assumptions beyond this file.
 
 If --pages is omitted, a deterministic synthetic pages table is generated
 (driver smoke / sandbox mode; no external data).
@@ -78,7 +79,7 @@ def main() -> None:
         pages_fingerprint = f"synthetic:{args.n_synthetic}"
 
     # training-data hygiene stage: exact text dedup BEFORE extraction —
-    # duplicate pages never pay the Arrow extraction cost; the dedup
+    # duplicate pages never pay the extraction cost; the dedup
     # report builds from a slim (url, digest) projection and the keeper
     # selection is row-level (dedup_pages_keep_first), so text moves at
     # most once and a re-crawled url keeps exactly one copy.

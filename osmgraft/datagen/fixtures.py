@@ -92,6 +92,18 @@ def _xy(rng: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
     return np.clip(x, SPEC.x0, SPEC.x1 - 1), np.clip(y, SPEC.y0, SPEC.y1 - 1)
 
 
+def _geometry(shape: str, coords: list) -> dict:
+    """One geometry in both forms the engine reads: `way_wkb` (the registry
+    tables' WKB) and `way_xy` (the pipeline's coordinate array)."""
+    if shape == "point":
+        wkb = point_wkb(*coords[0])
+    elif shape == "line":
+        wkb = linestring_wkb(np.array(coords))
+    else:
+        wkb = polygon_wkb(np.array(coords))
+    return {"way_wkb": wkb, "way_xy": [(float(x), float(y)) for x, y in coords]}
+
+
 def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
     """OSM-like feature rows across the four geom kinds (FIXTURES.md §2)."""
     rng = np.random.default_rng(seed)
@@ -168,24 +180,21 @@ def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
             "x": x,
             "y": y,
         }
-        # geometry: point WKB, or a small ring / path around (x, y)
+        # geometry: a point, or a small ring / path around (x, y)
         if kind == "polygon":
             # some polygons get planar area <= 50 to exercise ST_Area(way)>50
             half = 3.0 if rng.random() < 0.1 else float(rng.uniform(20, 200))
-            ring = np.array([
+            row.update(_geometry("polygon", [
                 [x - half, y - half], [x + half, y - half],
                 [x + half, y + half], [x - half, y + half],
                 [x - half, y - half],
-            ])
-            row["way_wkb"] = polygon_wkb(ring)
+            ]))
         elif kind in ("line", "roads"):
             length = float(rng.uniform(50, 2000))
-            row["way_wkb"] = linestring_wkb(
-                np.array([[x, y], [x + length / 2, y + length / 4],
-                          [x + length, y]])
-            )
+            row.update(_geometry("line", [[x, y], [x + length / 2, y + length / 4],
+                                          [x + length, y]]))
         else:
-            row["way_wkb"] = point_wkb(x, y)
+            row.update(_geometry("point", [[x, y]]))
         rows.append(row)
 
     # duplicate osm_ids across kinds to exercise the priority dedup cascade
@@ -195,13 +204,13 @@ def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
         other = dict(src)
         other["geom_kind"] = "point" if src["geom_kind"] != "point" else "polygon"
         other["x"] = src["x"] + 10
-        other["way_wkb"] = (point_wkb(other["x"], src["y"])
-                            if other["geom_kind"] == "point"
-                            else polygon_wkb(np.array([
-                                [src["x"], src["y"]], [src["x"] + 100, src["y"]],
-                                [src["x"] + 100, src["y"] + 100],
-                                [src["x"], src["y"] + 100], [src["x"], src["y"]],
-                            ])))
+        other.update(_geometry("point", [[other["x"], src["y"]]])
+                     if other["geom_kind"] == "point"
+                     else _geometry("polygon", [
+                         [src["x"], src["y"]], [src["x"] + 100, src["y"]],
+                         [src["x"] + 100, src["y"] + 100],
+                         [src["x"], src["y"] + 100], [src["x"], src["y"]],
+                     ]))
         rows.append(other)
     return pd.DataFrame(rows)
 
@@ -211,7 +220,10 @@ def gen_pages(n: int = 2000, seed: int = SEED) -> pd.DataFrame:
     (BASELINE.json input_hint). The extraction stage must recover the facts
     while keeping `text` byte-identical per url (the per-row invariant)."""
     rng = np.random.default_rng(seed + 1)
-    feats = gen_osm_features(n, seed)
+    # only the columns the text embeds: iterrows builds a Series per row
+    feats = gen_osm_features(n, seed)[
+        ["name", "operator", "addr_postcode", "x", "y", "landuse", "geom_kind", "tags"]
+    ]
     langs = rng.choice(["en", "fr", "de", "es"], size=len(feats),
                        p=[0.94, 0.02, 0.02, 0.02])
     base_ts = np.datetime64("2024-01-01T00:00:00")

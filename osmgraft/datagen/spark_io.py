@@ -18,6 +18,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from osmgraft.geo.geometry import XY_TYPE
+
 _STR_COLS = [
     "geom_kind", "name", "operator", "brand", "amenity", "shop", "tourism",
     "leisure", "highway", "railway", "waterway", "barrier", "building",
@@ -33,6 +35,7 @@ FEATURES_SCHEMA = StructType(
         StructField("x", DoubleType(), True),
         StructField("y", DoubleType(), True),
         StructField("way_wkb", BinaryType(), True),
+        StructField("way_xy", XY_TYPE, True),
     ]
 )
 

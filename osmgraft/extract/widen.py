@@ -2,33 +2,29 @@
 
 The candidate stages (osmgraft.pipeline.candidates) consume the reference's
 wide tag schema (~75 declared columns, config/uk_full_retention.style:5-133)
-plus `osm_id` and a WKB geometry. Pages extracted from Common-Crawl-style
+plus `osm_id` and a planar geometry. Pages extracted from Common-Crawl-style
 text (osmgraft.extract.page_extract) carry a narrow schema with the
 remaining tags in the `tags` map — exactly the reference's hstore catch-all
-(05_import_data.sh:123). This module widens lazily:
+(05_import_data.sh:123). This module widens lazily, in one JVM projection:
 
 - each wide tag column = `element_at(tags, key)` (JVM-side map lookup; the
   Catalyst plan prunes unused ones at the scan);
 - `osm_id` = xxhash64(url) — the deterministic surrogate id (SURVEY.md §7.3
   item 9: the reference's SERIAL id is nondeterministic and excluded from
   goldens);
-- `way_wkb`: geocoded pages have a point location, no footprint. Points get
-  point WKB; pages classified polygon/line get a nominal 20 m square ring /
+- `way_xy array<struct<x, y>>`: the vertices of the geometry
+  (osmgraft.geo.geometry, "coordinate arrays"). Geocoded pages have a point
+  location, no footprint. Points get their one vertex; pages classified
+  polygon/line/roads get a nominal 20 m closed square ring / 2-vertex
   segment at the geocode (keeps the per-kind pipelines live — the polygon
   area gate `ST_Area > 50` at 07_pipeline_polygon.sh:143 passes a nominal
-  400 m² footprint). Built in one vectorized Arrow UDF (numpy byte
-  assembly, no per-row Python parsing).
+  400 m² footprint). NULL when the page has no finite location.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from osmgraft.geo.geometry import linestring_wkb, point_wkb, polygon_wkb
 
 # wide columns sourced from the tags map when absent from the extract schema
 WIDE_TAG_COLS = [
@@ -41,36 +37,31 @@ WIDE_TAG_COLS = [
 _NOMINAL_HALF_M = 10.0  # nominal footprint half-side for non-point pages
 
 
-@pandas_udf("binary")
-def _page_wkb(x: pd.Series, y: pd.Series, kind: pd.Series) -> pd.Series:
-    xs = x.to_numpy(dtype=float)
-    ys = y.to_numpy(dtype=float)
-    ks = kind.to_numpy(dtype=object)
-    h = _NOMINAL_HALF_M
-    out = []
-    for xi, yi, ki in zip(xs, ys, ks):
-        if not np.isfinite(xi) or not np.isfinite(yi):
-            out.append(None)
-        elif ki == "polygon":
-            ring = np.array(
-                [[xi - h, yi - h], [xi + h, yi - h], [xi + h, yi + h],
-                 [xi - h, yi + h], [xi - h, yi - h]]
-            )
-            out.append(polygon_wkb(ring))
-        elif ki in ("line", "roads"):
-            out.append(linestring_wkb(np.array([[xi - h, yi], [xi + h, yi]])))
-        else:
-            out.append(point_wkb(xi, yi))
-    return pd.Series(out)
+def _vertices(*pts: tuple[str, str]) -> str:
+    return "array(" + ", ".join(f"named_struct('x', {x}, 'y', {y})" for x, y in pts) + ")"
+
+
+def _page_xy_sql() -> str:
+    h = f"{_NOMINAL_HALF_M!r}D"
+    lo_x, hi_x, lo_y, hi_y = f"x - {h}", f"x + {h}", f"y - {h}", f"y + {h}"
+    ring = _vertices((lo_x, lo_y), (hi_x, lo_y), (hi_x, hi_y), (lo_x, hi_y), (lo_x, lo_y))
+    # isfinite(x) and isfinite(y): NaN compares above every double in Spark
+    finite = "abs(x) < CAST('Infinity' AS DOUBLE) AND abs(y) < CAST('Infinity' AS DOUBLE)"
+    return (
+        f"CASE WHEN {finite} THEN CASE "
+        f"WHEN geom_kind = 'polygon' THEN {ring} "
+        f"WHEN geom_kind IN ('line', 'roads') THEN {_vertices((lo_x, 'y'), (hi_x, 'y'))} "
+        f"ELSE {_vertices(('x', 'y'))} END END"
+    )
 
 
 def widen_features(extracted: DataFrame) -> DataFrame:
     """page_extract.extract_features output → candidate-stage input schema."""
-    f = extracted
-    for c in WIDE_TAG_COLS:
-        if c not in f.columns:
-            f = f.withColumn(c, F.element_at(F.col("tags"), F.lit(c)))
-    f = f.withColumn("osm_id", F.xxhash64(F.col("url")))
-    return f.withColumn(
-        "way_wkb", _page_wkb(F.col("x"), F.col("y"), F.col("geom_kind"))
-    )
+    wide = {
+        c: F.element_at(F.col("tags"), F.lit(c))
+        for c in WIDE_TAG_COLS
+        if c not in extracted.columns
+    }
+    wide["osm_id"] = F.xxhash64(F.col("url"))
+    wide["way_xy"] = F.expr(_page_xy_sql())
+    return extracted.withColumns(wide)

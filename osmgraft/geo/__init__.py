@@ -4,8 +4,6 @@ from osmgraft.geo.geometry import (
     mercator_cols,
     mercator_np,
     mercator_sql,
-    planar_area_col,
-    planar_centroid_cols,
     planar_length_col,
     polygon_wkb,
     point_wkb,
@@ -19,8 +17,6 @@ __all__ = [
     "cell_col",
     "kring_cells_col",
     "morton_col",
-    "planar_area_col",
-    "planar_centroid_cols",
     "planar_length_col",
     "polygon_wkb",
     "point_wkb",

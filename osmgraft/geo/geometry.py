@@ -1,4 +1,4 @@
-"""Planar geometry math: WKB codec + vectorized area/centroid/length.
+"""Planar geometry math: WKB codec, numpy kernels and their SQL mirrors.
 
 Replaces the PostGIS scalar surface the reference uses — ST_X/ST_Y
 (07_pipeline_point.sh:206-207), ST_Centroid (07_pipeline_polygon.sh:274-275),
@@ -6,9 +6,15 @@ ST_Area (07_pipeline_polygon.sh:143), ST_Length
 (scripts/verify/verify_import.py:339) — with planar (EPSG:3857-style) math,
 matching the reference's Mercator-planar semantics (SURVEY.md §7.3 item 6).
 
-Geometry travels as WKB `binary` columns; math runs as Arrow-batched pandas
-UDFs over numpy (never per-row Python). WKB here is the standard OGC
-little-endian encoding (public format), written/read with `struct`/numpy.
+Geometry travels in one of two forms:
+- WKB `binary` columns where the input is WKB (the registry tables); the
+  math runs as Arrow-batched pandas UDFs over numpy (never per-row Python).
+  WKB here is the standard OGC little-endian encoding (public format),
+  written/read with `struct`/numpy;
+- coordinate arrays `array<struct<x: double, y: double>>` where the JVM
+  builds the geometry (the pipeline's page footprints); area, centroid and
+  validity are higher-order-function SQL that repeats the numpy kernels'
+  floating-point operations in the same order, so no Python worker starts.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
 WKB_POINT = 1
 WKB_LINESTRING = 2
@@ -76,12 +82,15 @@ def shoelace_area(ring: np.ndarray) -> float:
     return 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
 
 
+RING_DEGENERATE_AREA = 1e-12  # |signed area| below which ring_centroid gives up
+
+
 def ring_centroid(ring: np.ndarray) -> tuple[float, float]:
     """Area-weighted polygon centroid (planar, matches ST_Centroid)."""
     x, y = ring[:, 0], ring[:, 1]
     cross = x * np.roll(y, -1) - np.roll(x, -1) * y
     a = cross.sum() / 2.0
-    if abs(a) < 1e-12:  # degenerate: fall back to vertex mean
+    if abs(a) < RING_DEGENERATE_AREA:  # degenerate: fall back to vertex mean
         return float(x[:-1].mean()), float(y[:-1].mean())
     cx = ((x + np.roll(x, -1)) * cross).sum() / (6.0 * a)
     cy = ((y + np.roll(y, -1)) * cross).sum() / (6.0 * a)
@@ -94,36 +103,8 @@ def path_length(coords: np.ndarray) -> float:
 
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (Arrow-batched; the engine's only Python execution surface)
+# pandas UDFs over WKB (the registry tables' geometry)
 # ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(DoubleType())
-def _area_udf(wkb: pd.Series) -> pd.Series:
-    out = np.empty(len(wkb))
-    for i, buf in enumerate(wkb):
-        gtype, coords = parse_wkb(buf)
-        out[i] = shoelace_area(coords) if gtype == WKB_POLYGON else 0.0
-    return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def _centroid_x_udf(wkb: pd.Series) -> pd.Series:
-    return pd.Series([_centroid_of(buf)[0] for buf in wkb])
-
-
-@F.pandas_udf(DoubleType())
-def _centroid_y_udf(wkb: pd.Series) -> pd.Series:
-    return pd.Series([_centroid_of(buf)[1] for buf in wkb])
-
-
-def _centroid_of(buf: bytes) -> tuple[float, float]:
-    gtype, coords = parse_wkb(buf)
-    if gtype == WKB_POINT:
-        return float(coords[0, 0]), float(coords[0, 1])
-    if gtype == WKB_LINESTRING:
-        return float(coords[:, 0].mean()), float(coords[:, 1].mean())
-    return ring_centroid(coords)
 
 
 @F.pandas_udf(DoubleType())
@@ -135,20 +116,74 @@ def _length_udf(wkb: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def planar_area_col(wkb_col: str | Column) -> Column:
-    """ST_Area equivalent (planar m² in the source projection)."""
-    return _area_udf(F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col)
-
-
-def planar_centroid_cols(wkb_col: str | Column) -> tuple[Column, Column]:
-    """(ST_X(ST_Centroid(g)), ST_Y(ST_Centroid(g))) equivalents."""
-    c = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    return _centroid_x_udf(c), _centroid_y_udf(c)
-
-
 def planar_length_col(wkb_col: str | Column) -> Column:
     """ST_Length equivalent (planar)."""
     return _length_udf(F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col)
+
+
+# ---------------------------------------------------------------------------
+# coordinate arrays: SQL mirrors of the numpy kernels
+# ---------------------------------------------------------------------------
+# Spark has no geometry area or centroid function. Over `xy` (a polygon's
+# closed outer ring, a line's path or a point's one vertex) these builders
+# emit SQL that is bit-equal to the numpy kernels because it adds in their
+# order:
+# - np.dot: OpenBLAS's ddot with a strided operand (a ring's x or y column)
+#   keeps four lane sums, term i in lane i % 4 for the first n - n % 4
+#   terms and in lane 0 after them, and returns (l0 + l1) + (l2 + l3);
+# - np.sum / np.mean: a left fold below 8 terms. From 8 terms numpy's
+#   pairwise sum unrolls by 8, and the fold may differ in the last bits.
+#   Every ring the pipeline and the fixtures build has at most 5 vertices.
+# The per-vertex terms are one `transform`, their sums one `aggregate`.
+
+XY_TYPE = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
+
+
+def ring_sql(xy: str) -> str:
+    """struct<area, cx, cy> of the closed ring `xy`: shoelace_area and
+    ring_centroid (the vertex mean of the open ring when degenerate)."""
+    n = f"size({xy})"
+    nxt = f"{xy}[(_i + 1) % {n}]"
+    terms = (
+        f"transform({xy}, (_p, _i) -> named_struct("
+        f"'lane', IF(_i < {n} - {n} % 4, _i % 4, 0), "
+        f"'u', _p.x * {nxt}.y, 'v', {nxt}.x * _p.y, "
+        f"'sx', _p.x + {nxt}.x, 'sy', _p.y + {nxt}.y, "
+        f"'x', IF(_i < {n} - 1, _p.x, 0D), 'y', IF(_i < {n} - 1, _p.y, 0D)))"
+    )
+    lanes = "array(0D, 0D, 0D, 0D)"
+    start = (
+        f"named_struct('u', {lanes}, 'v', {lanes}, 'c', 0D, 'wx', 0D, 'wy', 0D, "
+        "'mx', 0D, 'my', 0D)"
+    )
+    merge = (
+        "(_a, _t) -> named_struct("
+        "'u', transform(_a.u, (_s, _j) -> IF(_j = _t.lane, _s + _t.u, _s)), "
+        "'v', transform(_a.v, (_s, _j) -> IF(_j = _t.lane, _s + _t.v, _s)), "
+        "'c', _a.c + (_t.u - _t.v), "
+        "'wx', _a.wx + _t.sx * (_t.u - _t.v), 'wy', _a.wy + _t.sy * (_t.u - _t.v), "
+        "'mx', _a.mx + _t.x, 'my', _a.my + _t.y)"
+    )
+    dot = "((_a.{0}[0] + _a.{0}[1]) + (_a.{0}[2] + _a.{0}[3]))"
+    half = "(_a.c / 2.0D)"
+    degenerate = f"abs({half}) < {RING_DEGENERATE_AREA!r}"
+    finish = (
+        "_a -> named_struct("
+        f"'area', 0.5D * abs({dot.format('u')} - {dot.format('v')}), "
+        f"'cx', IF({degenerate}, try_divide(_a.mx, {n} - 1), _a.wx / (6.0D * {half})), "
+        f"'cy', IF({degenerate}, try_divide(_a.my, {n} - 1), _a.wy / (6.0D * {half})))"
+    )
+    return f"aggregate({terms}, {start}, {merge}, {finish})"
+
+
+def path_centroid_sql(xy: str) -> str:
+    """struct<cx, cy>: the vertex mean of `xy` (a line's centroid)."""
+    return (
+        f"aggregate({xy}, named_struct('x', 0D, 'y', 0D), "
+        "(_a, _p) -> named_struct('x', _a.x + _p.x, 'y', _a.y + _p.y), "
+        f"_a -> named_struct('cx', try_divide(_a.x, size({xy})), "
+        f"'cy', try_divide(_a.y, size({xy}))))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -239,3 +274,22 @@ def _validity_udf(wkb: pd.Series) -> pd.Series:
 def wkb_validity_col(wkb_col: "str | Column") -> Column:
     """ST_IsValid-style audit reason per geometry (vectorized Arrow pass)."""
     return _validity_udf(F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col)
+
+
+def xy_validity_sql(xy: str = "way_xy", kind: str = "geom_kind") -> str:
+    """wkb_validity_reason over a coordinate array: the same checks in the
+    same order, with polygon semantics where `kind` is 'polygon'. A NULL
+    array (a page without a location) is 'unparseable', as a NULL blob is."""
+    inf = "CAST('Infinity' AS DOUBLE)"
+    open_ring = f"slice({xy}, 1, size({xy}) - 1)"
+    return (
+        f"CASE WHEN {xy} IS NULL THEN 'unparseable' "
+        f"WHEN exists({xy}, _p -> NOT (abs(_p.x) < {inf} AND abs(_p.y) < {inf})) "
+        "THEN 'nonfinite_coord' "
+        f"WHEN coalesce({kind}, '') != 'polygon' THEN 'valid' "
+        f"WHEN size({xy}) < 4 THEN 'too_few_points' "
+        f"WHEN {xy}[0].x != element_at({xy}, -1).x OR {xy}[0].y != element_at({xy}, -1).y "
+        "THEN 'unclosed_ring' "
+        f"WHEN {ring_sql(open_ring)}.area < {ZERO_AREA_EPS!r} THEN 'zero_area' "
+        "ELSE 'valid' END"
+    )

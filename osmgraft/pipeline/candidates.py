@@ -12,12 +12,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from osmgraft.geo.geometry import planar_area_col, planar_centroid_cols
+from osmgraft.geo.geometry import path_centroid_sql, ring_sql
 from osmgraft.rules import reference_rules as R
 from osmgraft.rules.sqlgen import (
     filter_sql,
     keywords_sql,
     quote,
+    raw_sql,
     score_sql,
     tags_text_sql,
     tier_sql,
@@ -44,9 +45,10 @@ _SOURCE_TABLE = {
 def candidate_sql(kind: str, threshold: int = R.SCORE_THRESHOLD) -> dict:
     """The spark-dialect SQL text of one kind's candidate stage: the row
     filter (F1–F5), the score (C1–C4), its threshold, and the wide projection
-    (F6) with the tier/confidence ladders (C5–C6) and keyword array (C8).
-    The polygon area gate and the centroid coordinates are geometry UDFs and
-    stay outside the text."""
+    (F6) with the tier/confidence ladders (C5–C6) and keyword array (C8),
+    and for the way kinds the `way_xy` geometry struct `_g` (polygon: area
+    and centroid, line/roads: vertex mean) that the polygon area gate and
+    the coordinates read."""
     if kind == "roads":
         keep = filter_sql([], R.ROADS_INCLUDE, dialect="spark")
     else:
@@ -57,17 +59,22 @@ def candidate_sql(kind: str, threshold: int = R.SCORE_THRESHOLD) -> dict:
     if R.KEYWORD_BLOB_INCLUDES_OPERATOR[kind]:
         blob += ["coalesce(operator, '')", "' '"]
     blob = f"lower(concat({', '.join(blob)}, {tags_text_sql(dialect='spark')}))"
-    # lat/lon: ST_X/Y for points, the centroid columns for way geometries
-    lat, lon = ("y", "x") if kind == "point" else ("_cy", "_cx")
+    # lat/lon: ST_X/Y for points, the centroid for way geometries
+    if kind == "point":
+        geometry, lat, lon = None, "y", "x"
+    else:
+        geometry = (ring_sql if kind == "polygon" else path_centroid_sql)("way_xy")
+        lat, lon = "_g.cy", "_g.cx"
     industrial = {
         "polygon": "coalesce(industrial, tags['craft'])",
         "point": "tags['craft']",
     }.get(kind, "industrial")
     return {
         "filter": f"geom_kind = {quote(kind, 'spark')} AND {keep} "
-                  f"AND ({R.IDENTITY_PREDICATE[kind]})",
+                  f"AND ({raw_sql(R.IDENTITY_PREDICATE[kind])})",
         "score": score_sql(R.SCORERS[kind], dialect="spark"),
         "threshold": f"aerospace_score >= {threshold}",
+        "geometry": geometry,
         # F6 wide projection with renames + defaults (07_pipeline_point.sh:170-208)
         "project": [
             "osm_id",
@@ -104,10 +111,10 @@ def candidate_stage(
     """features (one geom_kind's rows, or a mixed table) → scored candidates."""
     sql = candidate_sql(kind, threshold)
     f = features.where(sql["filter"])
+    if sql["geometry"]:
+        f = f.selectExpr("*", f"{sql['geometry']} AS _g")
     if kind == "polygon":  # area gate, 07_pipeline_polygon.sh:143
-        f = f.where(planar_area_col("way_wkb") > 50.0)
+        f = f.where("_g.area > 50.0D")
     # score, then threshold BEFORE the wide projection (pushdown)
     f = f.selectExpr("*", f"{sql['score']} AS aerospace_score").where(sql["threshold"])
-    if kind != "point":
-        f = f.withColumns(dict(zip(("_cx", "_cy"), planar_centroid_cols("way_wkb"))))
     return f.selectExpr(*sql["project"])

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.geo.geometry import xy_validity_sql
 from osmgraft.rules import reference_rules as R
 from osmgraft.rules.sqlgen import filter_sql, score_sql
 
@@ -113,14 +114,12 @@ def run_diagnostics(features: DataFrame, threshold: int = R.SCORE_THRESHOLD) -> 
     out["tags_nonempty"] = row["tags_nonempty"]
 
     # D13: geometry validity audit (verify_import.py:223-231 ST_IsValid
-    # counts; round-3 gap-close) — every WKB blob classified by the
-    # vectorized validity kernel (parse / finite / closure / point count /
-    # area); reasons beyond 'valid' demand import investigation
-    from osmgraft.geo.geometry import wkb_validity_col
-
+    # counts; round-3 gap-close) — every geometry classified by the SQL twin
+    # of the WKB validity kernel (finite / point count / closure / area);
+    # reasons beyond 'valid' demand import investigation
     out["geometry_validity"] = {
         r["reason"]: r["n"]
-        for r in features.select(wkb_validity_col("way_wkb").alias("reason"))
+        for r in features.selectExpr(f"{xy_validity_sql()} AS reason")
         .groupBy("reason")
         .agg(F.count("*").alias("n"))
         .collect()

@@ -8,7 +8,7 @@ overwrite-by-stage — SURVEY.md §7.3 item 10, north rule "resumable from
 checkpoint with per-partition lineage + metrics").
 
 The shipped job (jobs/run_pipeline.py) runs two stages: `features` (dedup →
-Arrow extraction → widen, staged once so every consumer reads parquet) and
+extraction → widen, staged once so every consumer reads parquet) and
 `final_union` (the four candidate kinds scored and priority-deduped in one
 plan).
 

@@ -9,7 +9,8 @@ differ only in spelling:
 
 - string literals: Spark unescapes backslashes (`escapedStringLiterals`
   is off by default), so `\\` is written `\\\\` and `'` is written `\\'`, and
-  it substitutes `${...}` variables in SQL text, so `${` is written `$\\{`;
+  it substitutes `${...}` variables in SQL text, so `${` is written `$\\{`
+  (raw SQL fragments, which cannot be escaped, may not contain `${`);
   DuckDB doubles `'` and keeps `\\`. Every literal goes through `quote`;
 - regex match: Java `RLIKE` vs RE2 `regexp_matches` (both unanchored);
 - map key test and lookup: `map_contains_key(m, k)` / `m[k]` vs
@@ -40,6 +41,15 @@ def quote(s: str, dialect: str) -> str:
     if dialect == "duckdb":
         return "'" + s.replace("'", "''") + "'"
     raise ValueError(f"unknown SQL dialect: {dialect!r}")
+
+
+def raw_sql(text: str) -> str:
+    """A raw SQL fragment shared by both dialects (an `expr` rule's pattern,
+    an identity predicate). Spark would substitute a `${...}` in it, and
+    only literals can escape that (`quote`), so `${` is refused."""
+    if "${" in text:
+        raise ValueError(f"raw SQL must not contain '${{' (Spark substitutes it): {text!r}")
+    return text
 
 
 def _rlike(expr: str, pattern: str, dialect: str) -> str:
@@ -101,7 +111,7 @@ def rule_sql(rule: ScoreRule, *, dialect: str) -> str:
         blob = f"lower(concat(coalesce({rule.column or 'name'}, ''), ' ', {text}))"
         return _rlike(blob, rule.pattern, dialect)
     if rule.kind == "expr":
-        return f"({rule.pattern})"
+        return f"({raw_sql(rule.pattern)})"
     if rule.kind == "any_of":
         return _any(rule_sql(c, dialect=dialect) for c in rule.children)
     if rule.kind == "all_of":

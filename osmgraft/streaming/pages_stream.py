@@ -41,7 +41,7 @@ def streaming_tile_counts(
 ) -> DataFrame:
     """Windowed per-cell page counts with late-data watermark.
 
-    extraction (Arrow mapInPandas) → cell assignment (JVM) → event-time
+    extraction (JVM projection) → cell assignment (JVM) → event-time
     window aggregate. ``slide=None`` gives tumbling windows; pass a slide
     shorter than ``window`` for overlapping (hopping) windows — each row
     expands to window/slide window instances before the stateful

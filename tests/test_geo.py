@@ -9,11 +9,14 @@ from pyspark.sql import functions as F
 
 from osmgraft.geo.cells import GridSpec, cell_col, cell_np, parent_cell_col, with_cell
 from osmgraft.geo.geometry import (
+    XY_TYPE,
     parse_wkb,
+    path_centroid_sql,
     path_length,
     point_wkb,
     polygon_wkb,
     ring_centroid,
+    ring_sql,
     shoelace_area,
 )
 from osmgraft.geo.knn import knn_join
@@ -49,6 +52,94 @@ def test_cell_parent_consistency(spark):
         (coarse_direct == coarse_via_parent).alias("ok")
     ).where("NOT ok").count()
     assert bad == 0
+
+
+def test_xy_sql_bit_equals_numpy_kernels(spark):
+    """ring_sql and path_centroid_sql over `way_xy` equal the numpy kernels
+    bit for bit: the fixture's rings and paths, seeded rings of 3-7
+    vertices, and a collinear ring, whose zero area takes ring_centroid's
+    vertex-mean fallback."""
+    from osmgraft.datagen import gen_osm_features
+
+    feats = gen_osm_features(2000)
+    geoms = list(zip(feats["geom_kind"], feats["way_xy"]))
+    rings = [np.array(xy) for k, xy in geoms if k == "polygon"]
+    paths = [np.array(xy) for k, xy in geoms if k in ("line", "roads")]
+    rng = np.random.default_rng(3)
+    for n in range(3, 8):
+        for _ in range(40):
+            pts = rng.uniform(3e5, 7e5, size=(n - 1, 2))
+            rings.append(np.vstack([pts, pts[:1]]))
+    flat = np.array([[351000.1, 402000.3], [351000.1, 402100.7],
+                     [351000.1, 402055.9], [351000.1, 402000.3]])
+    x, y = flat[:, 0], flat[:, 1]
+    assert abs((x * np.roll(y, -1) - np.roll(x, -1) * y).sum() / 2.0) < 1e-12
+    rings.append(flat)
+    assert len(rings) > 500 and len(paths) > 300
+
+    def frame(geoms):
+        return spark.createDataFrame(
+            [(i, [tuple(map(float, p)) for p in g]) for i, g in enumerate(geoms)],
+            f"i int, xy {XY_TYPE.simpleString()}",
+        )
+
+    def bits(v):
+        return np.float64(v).tobytes()
+
+    def stats(geoms, sql):
+        return {r.i: r.g for r in frame(geoms).selectExpr("i", f"{sql} AS g").collect()}
+
+    got = stats(rings, ring_sql("xy"))
+    for i, ring in enumerate(rings):
+        cx, cy = ring_centroid(ring)
+        assert bits(got[i].area) == bits(shoelace_area(ring)), ring
+        assert (bits(got[i].cx), bits(got[i].cy)) == (bits(cx), bits(cy)), ring
+    got = stats(paths, path_centroid_sql("xy"))
+    for i, path in enumerate(paths):
+        assert bits(got[i].cx) == bits(path[:, 0].mean()), path
+        assert bits(got[i].cy) == bits(path[:, 1].mean()), path
+
+
+def test_xy_validity_sql_matches_wkb_kernel(spark):
+    """The SQL validity twin over (way_xy, geom_kind) gives the reason
+    wkb_validity_reason gives the same geometry as WKB, one case per
+    reason; a NULL geometry is 'unparseable' on both."""
+    from osmgraft.geo.geometry import (
+        linestring_wkb,
+        wkb_validity_reason,
+        xy_validity_sql,
+    )
+
+    square = [[0, 0], [30, 0], [30, 30], [0, 30], [0, 0]]
+    cases = [
+        ("polygon", square),  # valid
+        ("polygon", [[0, 0], [30, 0], [float("nan"), 30], [0, 0]]),  # nonfinite_coord
+        ("polygon", [[0, 0], [30, 0], [0, 0]]),  # too_few_points
+        ("polygon", square[:-1] + [[1, 0]]),  # unclosed_ring
+        ("polygon", [[0, 0], [10, 10], [20, 20], [0, 0]]),  # zero_area
+        ("line", [[0, 0], [5, 5]]),  # valid (no ring checks)
+        ("point", [[1, float("inf")]]),  # nonfinite_coord
+        ("point", [[1, 2]]),  # valid
+        ("polygon", None),  # unparseable
+    ]
+
+    def wkb(kind, xy):
+        if xy is None:
+            return None
+        c = np.asarray(xy, dtype=float)
+        return {"polygon": polygon_wkb, "line": linestring_wkb}.get(
+            kind, lambda c: point_wkb(*c[0]))(c)
+
+    df = spark.createDataFrame(
+        [(i, k, None if xy is None else [tuple(map(float, p)) for p in xy])
+         for i, (k, xy) in enumerate(cases)],
+        f"i int, geom_kind string, way_xy {XY_TYPE.simpleString()}",
+    )
+    got = {r.i: r.reason for r in df.selectExpr("i", f"{xy_validity_sql()} AS reason").collect()}
+    want = {i: wkb_validity_reason(wkb(k, xy)) for i, (k, xy) in enumerate(cases)}
+    assert got == want
+    assert set(want.values()) == {"unparseable", "nonfinite_coord", "too_few_points",
+                                  "unclosed_ring", "zero_area", "valid"}
 
 
 def test_wkb_roundtrip_and_math():

@@ -5,6 +5,7 @@ recall fixture (known_suppliers_check.sql), dedup-cascade semantics
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import numpy as np
@@ -401,22 +402,83 @@ def test_quality_scores_empty_text_no_ansi_crash(spark):
     assert {r.doc_id for r in language_id(docs).collect()} == {1, 2}
 
 
+def _parse_page(text: str | None) -> dict:
+    """Plain-Python reading of the page microformat: the reference the JVM
+    extractor (osmgraft.extract.page_extract) must reproduce."""
+    if text is None:
+        return {"name": None, "operator": None, "addr_postcode": None, "x": None,
+                "y": None, "landuse": None, "geom_kind": None, "tags": {}}
+
+    def field(key):
+        m = re.search(key + r"=([^|]*?) \|", text)
+        return m.group(1).strip() if m else None
+
+    def num(s):
+        try:
+            return float(s)
+        except ValueError:
+            return None
+
+    loc = re.search(r"loc=\(([-\d.]+),([-\d.]+)\)", text)
+    kind = re.search(r"kind=(\w+)", text)
+    parts = text.split(" | ")
+    tags = {}
+    for tok in parts[-1].split(" "):
+        if "=" in tok:
+            k, _, v = tok.partition("=")
+            tags[k] = v
+    return {
+        "name": None if parts[0] == "Unknown Business" else parts[0],
+        "operator": field("operator") or None,
+        "addr_postcode": None if field("postcode") == "N/A" else field("postcode"),
+        "x": num(loc.group(1)) if loc else None,
+        "y": num(loc.group(2)) if loc else None,
+        "landuse": field("landuse") or None,
+        "geom_kind": kind.group(1) if kind else None,
+        "tags": tags,
+    }
+
+
 def test_extract_tolerates_null_text(spark):
-    """Review finding: a NULL text row crashed the Arrow extract kernel."""
+    """Review finding: a NULL text row crashed the Arrow extract kernel. The
+    JVM extractor equals the plain-Python parser on generated pages plus
+    edge rows (NULL, empty and delimiter-free text; repeated, `=`-bearing
+    and blank tag tokens; blank and N/A fields; a short float and
+    malformed locations), tag order included."""
     import datetime as dt
 
-    from osmgraft.extract import extract_features
-
+    edges = [
+        None,
+        "",
+        "no delimiter here",
+        "Acme Ltd | operator=acme | postcode=BS1 2AA | loc=1000.0,2000.0 | "
+        "landuse=industrial | kind=point | building=yes",
+        "a | a=1 a=2 b=x=y =z c=",
+        "Unknown Business | operator= | postcode=N/A | loc=(1.5,-2.) | landuse= | "
+        "kind=line | ",
+        "X | operator=  acme\t | postcode= | loc=(1.2.3,5) | kind=pölygon | k=v",
+        "Y | | | a=1 | | b=2",
+    ]
+    pdf = gen_pages(300)
+    rows = list(zip(pdf["url"], pdf["text"])) + [
+        (f"https://edge/{i}", t) for i, t in enumerate(edges)
+    ]
     pages = spark.createDataFrame(
-        [("https://a", dt.datetime(2024, 1, 1), None, None, "en"),
-         ("https://b", dt.datetime(2024, 1, 1), None,
-          "Acme Ltd | operator=acme | postcode=BS1 2AA | loc=1000.0,2000.0 | "
-          "landuse=industrial | kind=point | building=yes", "en")],
+        [(u, dt.datetime(2024, 1, 1), None, t, "en") for u, t in rows],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    rows = {r.url: r for r in extract_features(pages).collect()}
-    assert rows["https://a"].tags == {}
-    assert rows["https://b"].name == "Acme Ltd"
+    ext = extract_features(pages).selectExpr("*", "map_keys(tags) AS tag_keys")
+    got = {r.url: r.asDict() for r in ext.collect()}
+    assert len(got) == len(rows)
+    for url, text in rows:
+        want = _parse_page(text)
+        row = {k: got[url][k] for k in want}
+        assert row == want, (text, row)
+        # collect() hands maps over as hash maps: the order is in map_keys
+        assert got[url]["tag_keys"] == list(want["tags"]), text
+        assert got[url]["text"] == text
+    assert got["https://edge/0"]["tags"] == {}
+    assert got["https://edge/3"]["name"] == "Acme Ltd"
 
 
 def test_connected_components_hashed_ids_no_overflow(spark):

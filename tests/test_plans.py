@@ -1283,3 +1283,34 @@ def test_track_crossings_dedup_is_a_filter_not_a_shuffle(spark):
     # one partial+final pair for the rollup, one for the top-k ordering —
     # a distinct over the pair stream would add a third HashAggregate pair
     assert plan.count("HashAggregate") <= 4, plan
+
+
+def test_pipeline_job_plans_have_no_python(spark, tmp_path):
+    """The two stage plans of jobs/run_pipeline.py, composed as the job
+    composes them (dedup → extract → widen, then the four candidate kinds
+    and the priority union over the staged features), run no Python
+    worker: no EvalPython or *InPandas node in either executed plan."""
+    from osmgraft.datagen import gen_pages
+    from osmgraft.datagen.spark_io import to_spark
+    from osmgraft.extract.page_extract import extract_features
+    from osmgraft.extract.widen import widen_features
+    from osmgraft.pipeline.candidates import candidate_stage
+    from osmgraft.pipeline.union import priority_dedup_union
+    from osmgraft.rules.reference_rules import PRIORITY_ORDER
+    from osmgraft.text.dedup import dedup_pages_keep_first
+
+    src = str(tmp_path / "pages")
+    to_spark(spark, gen_pages(200), "pages").write.parquet(src)
+    widened = widen_features(
+        extract_features(dedup_pages_keep_first(spark.read.parquet(src)))
+    ).drop("text")
+    staged = str(tmp_path / "features")
+    widened.write.parquet(staged)
+    features = spark.read.parquet(staged)
+    final = priority_dedup_union(
+        {k: candidate_stage(features, k) for k in PRIORITY_ORDER}, PRIORITY_ORDER
+    )
+    assert final.count() > 0
+    for df in (widened, final):
+        plan = plan_of(df)
+        assert "EvalPython" not in plan and "InPandas" not in plan, plan

@@ -447,3 +447,20 @@ class TestSuspicionTriggers:
         where = trigger_sql(trig, dialect="duckdb")
         got = {r[0] for r in con.sql(f"SELECT doc_id FROM t WHERE {where}").fetchall()}
         assert got == {1}
+
+
+def test_raw_sql_with_variable_reference_is_refused(monkeypatch):
+    """Spark substitutes `${...}` in the SQL text it parses, which only
+    literals can escape: an `expr` rule or an identity predicate that
+    carries one raises instead of scoring differently on the two engines."""
+    from osmgraft.pipeline.candidates import candidate_sql
+    from osmgraft.rules import reference_rules as R
+
+    rule = yaml.safe_load("""{"kind": "expr", "pattern": "name = '${x}'", "weight": 10}""")
+    rules = RuleSet.from_dict("yaml_expr", [rule])
+    for dialect in ("spark", "duckdb"):
+        with pytest.raises(ValueError, match=r"\$\{"):
+            score_sql(rules, dialect=dialect)
+    monkeypatch.setitem(R.IDENTITY_PREDICATE, "point", "name = '${spark.app.name}'")
+    with pytest.raises(ValueError, match=r"\$\{"):
+        candidate_sql("point")

@@ -64,9 +64,9 @@ def test_widen_features_schema(spark):
 
     pages = to_spark(spark, gen_pages(300), "pages")
     wide = widen_features(extract_features(pages))
-    for c in WIDE_TAG_COLS + ["osm_id", "way_wkb"]:
+    for c in WIDE_TAG_COLS + ["osm_id", "way_xy"]:
         assert c in wide.columns, c
-    rows = wide.select("url", "osm_id", "geom_kind", "way_wkb", "x").collect()
+    rows = wide.select("url", "osm_id", "geom_kind", "way_xy", "x", "y").collect()
     assert len(rows) == pages.count()  # widening is row-preserving
     # osm_id deterministic per url
     again = {
@@ -75,16 +75,20 @@ def test_widen_features_schema(spark):
     }
     for r in rows:
         assert again[r["url"]] == r["osm_id"]
-    # WKB kind byte layout: geom type code at offset 1 matches geom_kind
-    import struct
-
+    # vertices per kind: a point, a 2-vertex segment, a closed 20 m square
     for r in rows:
         if r["x"] is None:
-            assert r["way_wkb"] is None
+            assert r["way_xy"] is None
             continue
-        code = struct.unpack_from("<I", r["way_wkb"], 1)[0]
-        want = {"polygon": 3, "line": 2, "roads": 2}.get(r["geom_kind"], 1)
-        assert code == want, (r["geom_kind"], code)
+        xy = [(p["x"], p["y"]) for p in r["way_xy"]]
+        x, y = r["x"], r["y"]
+        if r["geom_kind"] == "polygon":
+            assert xy == [(x - 10, y - 10), (x + 10, y - 10), (x + 10, y + 10),
+                          (x - 10, y + 10), (x - 10, y - 10)]
+        elif r["geom_kind"] in ("line", "roads"):
+            assert xy == [(x - 10, y), (x + 10, y)]
+        else:
+            assert xy == [(x, y)], r["geom_kind"]
 
 
 def test_widen_polygon_area_passes_gate(spark):
@@ -92,14 +96,14 @@ def test_widen_polygon_area_passes_gate(spark):
     from osmgraft.datagen.spark_io import to_spark
     from osmgraft.extract.page_extract import extract_features
     from osmgraft.extract.widen import widen_features
-    from osmgraft.geo.geometry import planar_area_col
+    from osmgraft.geo.geometry import ring_sql
 
     pages = to_spark(spark, gen_pages(500), "pages")
     wide = widen_features(extract_features(pages))
     polys = wide.where(F.col("geom_kind") == "polygon").where(F.col("x").isNotNull())
-    areas = polys.select(planar_area_col("way_wkb").alias("a")).toPandas()["a"]
-    if len(areas):
-        assert np.allclose(areas, 400.0)  # nominal 20 m square
+    areas = polys.selectExpr(f"{ring_sql('way_xy')}.area AS a").toPandas()["a"]
+    assert len(areas) > 0
+    assert np.allclose(areas, 400.0)  # nominal 20 m square
 
 
 @pytest.mark.slow
