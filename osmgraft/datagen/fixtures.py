@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 
 from osmgraft.geo.cells import GridSpec
-from osmgraft.geo.geometry import linestring_wkb, point_wkb, polygon_wkb
+from osmgraft.geo.geometry import polygon_wkb
 
 SEED = 42
 SPEC = GridSpec()  # 700km × 700km planar extent
@@ -92,16 +92,10 @@ def _xy(rng: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
     return np.clip(x, SPEC.x0, SPEC.x1 - 1), np.clip(y, SPEC.y0, SPEC.y1 - 1)
 
 
-def _geometry(shape: str, coords: list) -> dict:
-    """One geometry in both forms the engine reads: `way_wkb` (the registry
-    tables' WKB) and `way_xy` (the pipeline's coordinate array)."""
-    if shape == "point":
-        wkb = point_wkb(*coords[0])
-    elif shape == "line":
-        wkb = linestring_wkb(np.array(coords))
-    else:
-        wkb = polygon_wkb(np.array(coords))
-    return {"way_wkb": wkb, "way_xy": [(float(x), float(y)) for x, y in coords]}
+def _way_xy(coords: list) -> list[tuple[float, float]]:
+    """`way_xy`, the coordinate array the candidate stages read: a point's
+    one vertex, a line's path or a polygon's closed ring."""
+    return [(float(x), float(y)) for x, y in coords]
 
 
 def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
@@ -184,17 +178,16 @@ def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
         if kind == "polygon":
             # some polygons get planar area <= 50 to exercise ST_Area(way)>50
             half = 3.0 if rng.random() < 0.1 else float(rng.uniform(20, 200))
-            row.update(_geometry("polygon", [
+            row["way_xy"] = _way_xy([
                 [x - half, y - half], [x + half, y - half],
                 [x + half, y + half], [x - half, y + half],
                 [x - half, y - half],
-            ]))
+            ])
         elif kind in ("line", "roads"):
             length = float(rng.uniform(50, 2000))
-            row.update(_geometry("line", [[x, y], [x + length / 2, y + length / 4],
-                                          [x + length, y]]))
+            row["way_xy"] = _way_xy([[x, y], [x + length / 2, y + length / 4], [x + length, y]])
         else:
-            row.update(_geometry("point", [[x, y]]))
+            row["way_xy"] = _way_xy([[x, y]])
         rows.append(row)
 
     # duplicate osm_ids across kinds to exercise the priority dedup cascade
@@ -204,13 +197,13 @@ def gen_osm_features(n: int = 4000, seed: int = SEED) -> pd.DataFrame:
         other = dict(src)
         other["geom_kind"] = "point" if src["geom_kind"] != "point" else "polygon"
         other["x"] = src["x"] + 10
-        other.update(_geometry("point", [[other["x"], src["y"]]])
-                     if other["geom_kind"] == "point"
-                     else _geometry("polygon", [
-                         [src["x"], src["y"]], [src["x"] + 100, src["y"]],
-                         [src["x"] + 100, src["y"] + 100],
-                         [src["x"], src["y"] + 100], [src["x"], src["y"]],
-                     ]))
+        other["way_xy"] = (_way_xy([[other["x"], src["y"]]])
+                           if other["geom_kind"] == "point"
+                           else _way_xy([
+                               [src["x"], src["y"]], [src["x"] + 100, src["y"]],
+                               [src["x"] + 100, src["y"] + 100],
+                               [src["x"], src["y"] + 100], [src["x"], src["y"]],
+                           ]))
         rows.append(other)
     return pd.DataFrame(rows)
 

@@ -34,7 +34,6 @@ FEATURES_SCHEMA = StructType(
         StructField("tags", MapType(StringType(), StringType()), True),
         StructField("x", DoubleType(), True),
         StructField("y", DoubleType(), True),
-        StructField("way_wkb", BinaryType(), True),
         StructField("way_xy", XY_TYPE, True),
     ]
 )

@@ -79,7 +79,7 @@ def parse_wkb(buf: bytes) -> tuple[int, np.ndarray]:
 
 def shoelace_area(ring: np.ndarray) -> float:
     x, y = ring[:, 0], ring[:, 1]
-    return 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
+    return 0.5 * abs((x * np.roll(y, -1) - np.roll(x, -1) * y).sum())
 
 
 RING_DEGENERATE_AREA = 1e-12  # |signed area| below which ring_centroid gives up
@@ -127,13 +127,9 @@ def planar_length_col(wkb_col: str | Column) -> Column:
 # Spark has no geometry area or centroid function. Over `xy` (a polygon's
 # closed outer ring, a line's path or a point's one vertex) these builders
 # emit SQL that is bit-equal to the numpy kernels because it adds in their
-# order:
-# - np.dot: OpenBLAS's ddot with a strided operand (a ring's x or y column)
-#   keeps four lane sums, term i in lane i % 4 for the first n - n % 4
-#   terms and in lane 0 after them, and returns (l0 + l1) + (l2 + l3);
-# - np.sum / np.mean: a left fold below 8 terms. From 8 terms numpy's
-#   pairwise sum unrolls by 8, and the fold may differ in the last bits.
-#   Every ring the pipeline and the fixtures build has at most 5 vertices.
+# order: np.sum and np.mean fold left below 8 terms (from 8 terms numpy's
+# pairwise sum unrolls by 8, and the fold may differ in the last bits).
+# Every ring the pipeline and the fixtures build has at most 5 vertices.
 # The per-vertex terms are one `transform`, their sums one `aggregate`.
 
 XY_TYPE = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
@@ -146,30 +142,21 @@ def ring_sql(xy: str) -> str:
     nxt = f"{xy}[(_i + 1) % {n}]"
     terms = (
         f"transform({xy}, (_p, _i) -> named_struct("
-        f"'lane', IF(_i < {n} - {n} % 4, _i % 4, 0), "
-        f"'u', _p.x * {nxt}.y, 'v', {nxt}.x * _p.y, "
+        f"'c', _p.x * {nxt}.y - {nxt}.x * _p.y, "
         f"'sx', _p.x + {nxt}.x, 'sy', _p.y + {nxt}.y, "
         f"'x', IF(_i < {n} - 1, _p.x, 0D), 'y', IF(_i < {n} - 1, _p.y, 0D)))"
     )
-    lanes = "array(0D, 0D, 0D, 0D)"
-    start = (
-        f"named_struct('u', {lanes}, 'v', {lanes}, 'c', 0D, 'wx', 0D, 'wy', 0D, "
-        "'mx', 0D, 'my', 0D)"
-    )
+    start = "named_struct('c', 0D, 'wx', 0D, 'wy', 0D, 'mx', 0D, 'my', 0D)"
     merge = (
         "(_a, _t) -> named_struct("
-        "'u', transform(_a.u, (_s, _j) -> IF(_j = _t.lane, _s + _t.u, _s)), "
-        "'v', transform(_a.v, (_s, _j) -> IF(_j = _t.lane, _s + _t.v, _s)), "
-        "'c', _a.c + (_t.u - _t.v), "
-        "'wx', _a.wx + _t.sx * (_t.u - _t.v), 'wy', _a.wy + _t.sy * (_t.u - _t.v), "
+        "'c', _a.c + _t.c, 'wx', _a.wx + _t.sx * _t.c, 'wy', _a.wy + _t.sy * _t.c, "
         "'mx', _a.mx + _t.x, 'my', _a.my + _t.y)"
     )
-    dot = "((_a.{0}[0] + _a.{0}[1]) + (_a.{0}[2] + _a.{0}[3]))"
     half = "(_a.c / 2.0D)"
     degenerate = f"abs({half}) < {RING_DEGENERATE_AREA!r}"
     finish = (
         "_a -> named_struct("
-        f"'area', 0.5D * abs({dot.format('u')} - {dot.format('v')}), "
+        "'area', 0.5D * abs(_a.c), "
         f"'cx', IF({degenerate}, try_divide(_a.mx, {n} - 1), _a.wx / (6.0D * {half})), "
         f"'cy', IF({degenerate}, try_divide(_a.my, {n} - 1), _a.wy / (6.0D * {half})))"
     )

@@ -256,7 +256,7 @@ def test_pipeline_scorers_match_duckdb_oracle(spark, tmp_path):
     from osmgraft.rules.sqlgen import filter_sql
 
     src = str(tmp_path / "features")
-    to_spark(spark, gen_osm_features(2000), "features").drop("way_wkb").write.parquet(src)
+    to_spark(spark, gen_osm_features(2000), "features").write.parquet(src)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW features AS SELECT * FROM read_parquet('{src}/*.parquet')")
     scores = set()

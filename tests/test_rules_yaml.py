@@ -246,7 +246,7 @@ def test_aerospace_scoring_matches_naive_python(spark, tmp_path):
         .set_index("osm_id")["score"]
     )
     src = str(tmp_path / "features")
-    sdf.drop("way_wkb").write.parquet(src)
+    sdf.write.parquet(src)
     con = duckdb.connect()
     duck = dict(
         con.sql(
