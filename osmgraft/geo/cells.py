@@ -164,15 +164,22 @@ def morton_np(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
     return _spread_bits_np(ix) | (_spread_bits_np(iy) << np.uint64(1))
 
 
+def grid_ix_np(x: np.ndarray, spec: GridSpec, res: int) -> np.ndarray:
+    """Column index of x at `res`, clamped to the grid (grid_ix_col's twin)."""
+    ix = np.floor((x - spec.x0) / spec.cell_width(res)).astype(np.int64)
+    return np.clip(ix, 0, (1 << res) - 1)
+
+
+def grid_iy_np(y: np.ndarray, spec: GridSpec, res: int) -> np.ndarray:
+    """Row index of y at `res`, clamped to the grid (grid_iy_col's twin)."""
+    iy = np.floor((y - spec.y0) / spec.cell_height(res)).astype(np.int64)
+    return np.clip(iy, 0, (1 << res) - 1)
+
+
 def cell_np(
     x: np.ndarray, y: np.ndarray, spec: GridSpec, res: int
 ) -> np.ndarray:
-    n = 1 << res
-    ix = np.clip(
-        np.floor((x - spec.x0) / spec.cell_width(res)).astype(np.int64), 0, n - 1
-    )
-    iy = np.clip(
-        np.floor((y - spec.y0) / spec.cell_height(res)).astype(np.int64), 0, n - 1
-    )
+    ix = grid_ix_np(x, spec, res)
+    iy = grid_iy_np(y, spec, res)
     m = morton_np(ix, iy)
     return ((m << np.uint64(RES_BITS)) | np.uint64(res)).astype(np.int64)

@@ -185,8 +185,8 @@ def _cube_round_cols(qf: Column, rf: Column) -> tuple[Column, Column]:
 
 def hex_cell_col(x: Column, y: Column, res: int) -> Column:
     """Hex cell id as a pure-JVM expression (whole-stage codegen; the
-    default hot path — the Arrow-UDF form exists for kernels that are
-    already inside pandas, e.g. the R-tree PIP refine)."""
+    default hot path — the numpy form exists for kernels that are
+    already inside pandas)."""
     e = edge_m(res)
     qf = (x * F.lit(K_Q_X) - y * F.lit(K_Q_Y)) / F.lit(e)
     rf = (y * F.lit(K_R_Y)) / F.lit(e)
@@ -324,18 +324,17 @@ def polyfill_np(ring: np.ndarray, res: int) -> np.ndarray:
 
 def point_in_ring_col(cx: Column, cy: Column, ring: np.ndarray) -> Column:
     """Even-odd ray cast as a pure JVM expression for a plan-time-constant
-    ring: one crossing test per edge (expression size O(edges)). Same rule
-    as the numpy ray cast in osmgraft.geo.pip."""
-    ring = np.asarray(ring, dtype=float)
+    ring: one crossing term per edge (expression size O(edges)), the
+    numpy ray cast's own term (osmgraft.geo.pip.crossing), so both agree
+    bit for bit."""
+    from osmgraft.geo.pip import crossing
+
+    ring = np.asarray(ring, dtype=float).tolist()
     crossings = None
     for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
         if y1 == y2:
             continue  # horizontal edges never cross the horizontal ray
-        cond = (
-            ((F.lit(y1) > cy) != (F.lit(y2) > cy))
-            & (cx < (cy - F.lit(y1)) * F.lit((x2 - x1) / (y2 - y1)) + F.lit(x1))
-        )
-        c = cond.cast("int")
+        c = crossing(cx, cy, x1, y1, x2, y2).cast("int")
         crossings = c if crossings is None else crossings + c
     return (crossings % 2 == 1) if crossings is not None else F.lit(False)
 

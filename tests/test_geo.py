@@ -308,3 +308,196 @@ def test_ray_cast_big_boundary_banded_path():
     xr = rng.uniform(-2.0, 18.0, 3000)
     yr = rng.uniform(-2.0, 18.0, 3000)
     assert (_ray_cast(L, xr, yr) == ref_loop(L, xr, yr)).all()
+
+
+# ---------------------------------------------------------------------------
+# PIP cell map: classification, JVM crossing term, exactness of pip_join
+# ---------------------------------------------------------------------------
+
+
+def _wavy_tiling(seed: int, n: int = 4, size: float = 7e5, wiggle: int = 16) -> list:
+    """n×n tiles of [0, size]² with jittered corners; neighbours share each
+    wavy polyline exactly, so every point inside has one owner."""
+    rng = np.random.default_rng(seed)
+    step = size / n
+    v = np.stack(np.meshgrid(np.arange(n + 1), np.arange(n + 1), indexing="ij"), -1) * step
+    v[1:-1, 1:-1] += rng.uniform(-0.15, 0.15, (n - 1, n - 1, 2)) * step
+    t = np.linspace(0.0, 1.0, wiggle + 1)[:, None]
+
+    def edge(a, b, border):
+        p = a + (b - a) * t
+        if not border:
+            normal = np.array([a[1] - b[1], b[0] - a[0]]) / np.hypot(*(b - a))
+            wave = np.sin(np.pi * t) * np.sin(2 * np.pi * rng.integers(2, 5) * t + rng.uniform(0, 6.3))
+            p = p + 0.04 * step * wave * normal
+        return p
+
+    hz = {(i, j): edge(v[i, j], v[i + 1, j], j in (0, n)) for i in range(n) for j in range(n + 1)}
+    vt = {(i, j): edge(v[i, j], v[i, j + 1], i in (0, n)) for i in range(n + 1) for j in range(n)}
+    return [
+        np.vstack([hz[i, j][:-1], vt[i + 1, j][:-1], hz[i, j + 1][::-1][:-1], vt[i, j][::-1]])
+        for j in range(n) for i in range(n)
+    ]
+
+
+def _coastline(n: int = 30000, seed: int = 11) -> np.ndarray:
+    """A 30 k-vertex wiggly closed ring inside the default extent."""
+    rng = np.random.default_rng(seed)
+    ang = np.linspace(0, 2 * np.pi, n, endpoint=False)
+    rad = 2e5 * (1.0 + 0.35 * np.sin(ang * 97) + 0.1 * rng.random(n))
+    ring = np.column_stack([3.5e5 + rad * np.cos(ang), 3.5e5 + rad * np.sin(ang)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _concave() -> list:
+    """An L, a comb and a diagonal sliver."""
+    L = np.array([[1e5, 1e5], [4e5, 1e5], [4e5, 2e5], [2e5, 2e5], [2e5, 5e5],
+                  [1e5, 5e5], [1e5, 1e5]])
+    comb = [[4.5e5, 3e5]]
+    for k in range(5):
+        x = 4.5e5 + k * 4e4
+        comb += [[x + 2e4, 3e5], [x + 2e4, 6.5e5], [x + 3e4, 6.5e5], [x + 3e4, 3e5]]
+    comb += [[6.7e5, 3e5], [6.7e5, 2.5e5], [4.5e5, 2.5e5], [4.5e5, 3e5]]
+    sliver = np.array([[2.5e5, 2.6e5], [6.9e5, 0.3e5], [6.9e5, 0.5e5], [2.5e5, 2.6e5]])
+    return [L, np.array(comb), sliver]
+
+
+def _boundary_by_edge_loop(rings, spec, res):
+    """Boundary flags from the per-edge loop classify_cells replaced."""
+    n = 1 << res
+    w, h = spec.cell_width(res), spec.cell_height(res)
+    boundary = np.zeros((n, n), dtype=bool)
+    for ring in rings:
+        for (ex1, ey1), (ex2, ey2) in zip(ring[:-1], ring[1:]):
+            ix0 = max(0, int(np.floor((min(ex1, ex2) - spec.x0) / w)))
+            ix1 = min(n - 1, int(np.floor((max(ex1, ex2) - spec.x0) / w)))
+            iy0 = max(0, int(np.floor((min(ey1, ey2) - spec.y0) / h)))
+            iy1 = min(n - 1, int(np.floor((max(ey1, ey2) - spec.y0) / h)))
+            gx, gy = np.meshgrid(
+                np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1), indexing="ij"
+            )
+            gx, gy = gx.ravel(), gy.ravel()
+            bx0, by0 = spec.x0 + gx * w, spec.y0 + gy * h
+            t0, t1 = np.zeros(len(gx)), np.ones(len(gx))
+            ok = np.ones(len(gx), dtype=bool)
+            for p, qlo, qhi in ((ex2 - ex1, bx0 - ex1, bx0 + w - ex1),
+                                (ey2 - ey1, by0 - ey1, by0 + h - ey1)):
+                if p == 0:
+                    ok &= (qlo < 0) & (0 < qhi)
+                else:
+                    ta, tb = qlo / p, qhi / p
+                    lo, hi = (ta, tb) if p > 0 else (tb, ta)
+                    t0, t1 = np.maximum(t0, lo), np.minimum(t1, hi)
+            crossed = ok & (t0 < t1)
+            boundary[gx[crossed], gy[crossed]] = True
+    return boundary.ravel()
+
+
+@pytest.mark.parametrize("shape", ["wavy", "concave", "coastline"])
+def test_classify_cells_matches_edge_loop(shape):
+    """The one-pass classification flags exactly the cells the per-edge
+    loop flagged, at res 4-8."""
+    from osmgraft.geo.pip import classify_cells
+
+    rings = {"wavy": lambda: _wavy_tiling(3), "concave": _concave,
+             "coastline": lambda: [_coastline()]}[shape]()
+    tree = STRtree(rings)
+    ids = np.arange(len(rings), dtype=np.int64)
+    for res in range(4, 9):
+        _, _, flags, _ = classify_cells(tree, ids, SPEC, res)
+        ref = _boundary_by_edge_loop(rings, SPEC, res)
+        assert flags.any() and (flags == ref).all(), f"{shape} res {res}"
+
+
+def test_point_in_ring_col_bit_equals_ray_cast(spark):
+    """The JVM crossing term rounds as numpy's: points a few ulps either side
+    of skewed edges get the same side from point_in_ring_col and _ray_cast.
+    The slope-first form it replaced rounds differently on some of them."""
+    from osmgraft.geo.hexgrid import point_in_ring_col
+
+    ring = np.array([[0.1, 0.3], [7.7, 1.9], [9.3, 8.1], [3.3, 6.7], [-2.9, 9.1], [0.1, 0.3]])
+    rng = np.random.default_rng(21)
+    xs, ys = [], []
+    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+        t = rng.uniform(0.01, 0.99, 60)
+        yy = y1 + (y2 - y1) * t
+        xint = (x2 - x1) * (yy - y1) / (y2 - y1) + x1
+        for k in range(-3, 4):
+            xs.append(xint + k * np.spacing(xint))
+            ys.append(yy)
+    x, y = np.concatenate(xs), np.concatenate(ys)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(x, y))], "i long, x double, y double"
+    )
+    got = np.array([
+        r[0] for r in df.orderBy("i").select(
+            point_in_ring_col(F.col("x"), F.col("y"), ring)).collect()
+    ])
+    assert (got == _ray_cast(ring, x, y)).all()
+    x1, y1, x2, y2 = ring[1, 0], ring[1, 1], ring[2, 0], ring[2, 1]
+    sel = slice(7 * 60, 14 * 60)  # the second edge's points
+    slope_first = (y[sel] - y1) * ((x2 - x1) / (y2 - y1)) + x1
+    assert (slope_first != (x2 - x1) * (y[sel] - y1) / (y2 - y1) + x1).any()
+
+
+def _overlapping() -> list:
+    rng = np.random.default_rng(4)
+    rings = []
+    for _ in range(12):
+        cx, cy = rng.uniform(1e5, 6e5, 2)
+        hw, hh = rng.uniform(3e4, 1.5e5, 2)
+        rings.append(np.array([[cx - hw, cy - hh], [cx + hw, cy - hh], [cx + hw * 0.3, cy + hh],
+                               [cx - hw, cy + hh * 0.7], [cx - hw, cy - hh]]))
+    return rings + [rings[3].copy(), rings[7][::-1].copy()]  # exact duplicates
+
+
+def _past_extent() -> list:
+    """Rings reaching past every side of the grid extent."""
+    return [
+        np.array([[-1e5, -5e4], [2e5, -8e4], [2.5e5, 3e5], [-6e4, 2e5], [-1e5, -5e4]]),
+        np.array([[6e5, 4e5], [8e5, 3.5e5], [7.9e5, 7.8e5], [5.5e5, 7.5e5], [6e5, 4e5]]),
+        np.array([[8.1e5, 1e5], [9e5, 1e5], [9e5, 2e5], [8.1e5, 1e5]]),  # all outside
+    ]
+
+
+@pytest.mark.parametrize(
+    "shape,res",
+    [("wavy", 7), ("overlapping", 6), ("past_extent", 5), ("coastline", 7)],
+)
+def test_pip_join_matches_strtree(spark, shape, res):
+    """pip_join equals STRtree.contains row for row: `left` takes the first
+    containing ring in STR order, `inner` every containing ring. Points
+    spread past the extent; NULL and NaN coordinates own nothing."""
+    rings = {"wavy": lambda: _wavy_tiling(5), "overlapping": _overlapping,
+             "past_extent": _past_extent, "coastline": lambda: [_coastline()]}[shape]()
+    ids = np.arange(100, 100 + len(rings), dtype=np.int64)
+    rng = np.random.default_rng(res)
+    n = 20000
+    x = rng.uniform(-1e5, 8e5, n)
+    y = rng.uniform(-1e5, 8e5, n)
+    x[:4], y[:4] = [np.nan, 3e5, np.nan, np.nan], [3e5, np.nan, np.nan, np.nan]
+    nulls = {4: (None, 3e5), 5: (3e5, None), 6: (None, None)}
+    pts = spark.createDataFrame(
+        [(i, *nulls.get(i, (float(a), float(b)))) for i, (a, b) in enumerate(zip(x, y))],
+        "pid long, x double, y double",
+    )
+    bounds = spark.createDataFrame(
+        [(int(b), bytearray(polygon_wkb(r))) for b, r in zip(ids, rings)],
+        "boundary_id long, polygon_wkb binary",
+    )
+    x[4:7], y[4:7] = np.nan, np.nan
+    pi, ri = STRtree(rings).contains(x, y)
+    first = np.full(n, -1, dtype=np.int64)
+    first[pi[::-1]] = ids[ri[::-1]]
+
+    from osmgraft.geo.pip import PipIndex
+
+    index = PipIndex.build(bounds, spec=SPEC, res=res)
+    assert index.any_boundary_cells
+    left = pip_join(pts, how="left", index=index).select("pid", "boundary_id").toPandas()
+    assert len(left) == n
+    got = np.full(n, -2, dtype=np.int64)
+    got[left["pid"].to_numpy()] = left["boundary_id"].fillna(-1).to_numpy(np.int64)
+    assert (got == first).all(), np.flatnonzero(got != first)[:10]
+    inner = pip_join(pts, how="inner", index=index).select("pid", "boundary_id").collect()
+    assert sorted((r[0], r[1]) for r in inner) == sorted(zip(pi.tolist(), ids[ri].tolist()))

@@ -47,6 +47,45 @@ def test_pip_interior_path_has_no_python(spark):
     assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
 
 
+def test_pip_boundary_cells_one_scan_no_python(spark, tmp_path, monkeypatch):
+    """A tiling with boundary cells: building the index from parquet-backed
+    boundaries runs no Python node (the cell map is an Arrow table the JVM
+    reads), and both join modes plan one scan of the points and no Python
+    node (the boundary cells ray-cast in the same projection)."""
+    import numpy as np
+
+    from osmgraft.geo import pip
+    from osmgraft.geo.geometry import polygon_wkb
+
+    rings = [
+        np.array([[0, 0], [4e5, 0], [3e5, 7e5], [0, 7e5], [0, 0]], dtype=float),
+        np.array([[4e5, 0], [7e5, 0], [7e5, 7e5], [3e5, 7e5], [4e5, 0]], dtype=float),
+    ]
+    spark.createDataFrame(
+        [(i, bytearray(polygon_wkb(r))) for i, r in enumerate(rings)],
+        "boundary_id long, polygon_wkb binary",
+    ).write.parquet(str(tmp_path / "bounds"))
+    spark.range(1000).selectExpr("id", "rand(1) * 7e5 AS x", "rand(2) * 7e5 AS y") \
+        .write.parquet(str(tmp_path / "points"))
+    cut_plans = []
+    real_cut = pip.cut
+
+    def recording_cut(df):
+        cut_plans.append(plan_of(df))
+        return real_cut(df)
+
+    monkeypatch.setattr(pip, "cut", recording_cut)
+    index = pip.PipIndex.build(spark.read.parquet(str(tmp_path / "bounds")))
+    assert index.any_boundary_cells and len(cut_plans) == 1
+    assert "EvalPython" not in cut_plans[0] and "InPandas" not in cut_plans[0], cut_plans[0]
+    for how in ("left", "inner"):
+        df = pip.pip_join(spark.read.parquet(str(tmp_path / "points")), how=how, index=index)
+        plan = plan_of(df)
+        assert "EvalPython" not in plan and "InPandas" not in plan, plan
+        assert plan.count("FileScan parquet") == 1, plan
+        assert df.count() == 1000
+
+
 def test_filter_pushdown_reaches_parquet(spark):
     """Predicate + column pruning must reach the scan (PushedFilters /
     ReadSchema) — free Catalyst wins the engine relies on (SURVEY.md §4)."""
