@@ -120,9 +120,7 @@ def main() -> None:
 
     points = features.where(F.col("x").isNotNull() & F.col("y").isNotNull())
     tiles = (
-        points.withColumn(
-            "hex_cell", hg.hex_cell_col(F.col("x"), F.col("y"), args.tile_res)
-        )
+        points.withColumn("hex_cell", F.expr(hg.hex_cell_sql("x", "y", args.tile_res)))
         .groupBy("hex_cell")
         .agg(F.count("*").alias("n_pages"))
     )

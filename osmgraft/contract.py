@@ -20,9 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from osmgraft.geo.cells import GridSpec, with_cell
+from osmgraft.geo.cells import GridSpec, cell_sql, with_cell
 from osmgraft.rules.compiler import RuleSet
-from osmgraft.rules.sqlgen import morton_sql, score_sql, tier_sql
+from osmgraft.rules.sqlgen import score_sql, tier_sql
 
 # ---------------------------------------------------------------------------
 # registry plumbing
@@ -1617,22 +1617,17 @@ def event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 6. geospatial: cells, PIP tiling, kNN, DWithin, bbox (J4, J7, north star)
 # ===========================================================================
 
-_IX = f"CAST(LEAST(127, GREATEST(0, FLOOR(x / {CELL_W}))) AS BIGINT)"
-_IY = f"CAST(LEAST(127, GREATEST(0, FLOOR(y / {CELL_W}))) AS BIGINT)"
-
 @q(
     "cell_assign_counts",
     oracle=f"""
-    WITH pts AS ({_pts_cte()}),
-         g AS (SELECT {_IX} AS ix, {_IY} AS iy FROM pts)
-    SELECT (({morton_sql('ix', 'iy')} << 5) | {CELL_RES}) AS cell,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM g GROUP BY cell ORDER BY cell
+    WITH pts AS ({_pts_cte()})
+    SELECT {cell_sql('x', 'y', SPEC, CELL_RES)} AS cell, CAST(COUNT(*) AS BIGINT) AS n
+    FROM pts GROUP BY cell ORDER BY cell
     """,
 )
 def cell_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order cell assignment (H3/S2-equivalent tiling) + per-cell rollup.
-    The oracle recomputes the Morton interleave in raw SQL bit arithmetic."""
+    The oracle runs the same cell-id SQL text in DuckDB."""
     pts = _event_points(spark, sf_dir)
     cells = with_cell(pts, "x", "y", SPEC, CELL_RES, out="cell", keep_ixy=False)
     return cells.groupBy("cell").agg(F.count("*").alias("n")).orderBy("cell")

@@ -5,14 +5,12 @@ These are the north-star "H3 (res 7-10) and S2 cell indexing" surface
 + bbox window queries (07_pipeline_point.sh:215,
 scripts/verify/verify_import.py:316) and tile-aggregation outputs.
 
-Oracle discipline (same as osmgraft.contract): the hex oracles are
-*generated from the same numeric literals* as the Spark plan
-(osmgraft.geo.hexgrid SQL backend), so DuckDB recomputes bit-identical
-cell ids. S2's Hilbert traversal is not SQL-expressible; it is validated
-two ways instead: (a) property tests in tests/test_cellindexes.py, and
-(b) `s2_bbox_refine` — an oracle-paired query whose S2 cover+refine result
-must equal a plain SQL bbox count (exercises the cover's superset
-guarantee end-to-end).
+Oracle discipline (same as osmgraft.contract): the hex oracles embed the
+*same SQL text* the Spark plan parses (osmgraft.geo.hexgrid's emitters),
+so DuckDB recomputes bit-identical cell ids. Spark assigns S2 cells with
+the Arrow UDF; the oracle walks the Hilbert curve in SQL through the
+inlined lookup table (`_s2_assign_cte`), and `s2_bbox_refine` checks the
+cover's superset guarantee against a plain SQL bbox count.
 """
 
 from __future__ import annotations
@@ -40,13 +38,10 @@ S2_LEVEL = 12
 
 
 def _hex_oracle_counts(res: int) -> str:
-    pre, qf, rf = hg.hex_qr_sql("x", "y", res)
-    pack = hg.hex_round_pack_sql(qf, rf, res)
     return f"""
-    WITH pts AS ({_pts_cte()}),
-         g AS ({pre} FROM pts)
-    SELECT {pack} AS hex_cell, CAST(COUNT(*) AS BIGINT) AS n
-    FROM g GROUP BY hex_cell ORDER BY hex_cell
+    WITH pts AS ({_pts_cte()})
+    SELECT {hg.hex_cell_sql("x", "y", res)} AS hex_cell, CAST(COUNT(*) AS BIGINT) AS n
+    FROM pts GROUP BY hex_cell ORDER BY hex_cell
     """
 
 
@@ -54,11 +49,10 @@ def _hex_oracle_counts(res: int) -> str:
 def hex_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aperture-7 hex tiling (H3-style res 8) + per-cell rollup — the hex
     half of the north-star tile assignment. Pure JVM whole-stage codegen
-    (hexgrid.hex_cell_col); the oracle recomputes the identical axial
-    cube-round arithmetic in DuckDB from the same literals."""
+    (hexgrid.hex_cell_sql); the oracle runs the same text in DuckDB."""
     pts = _event_points(spark, sf_dir)
     return (
-        pts.withColumn("hex_cell", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_RES))
+        pts.withColumn("hex_cell", F.expr(hg.hex_cell_sql("x", "y", HEX_RES)))
         .groupBy("hex_cell")
         .agg(F.count("*").alias("n"))
         .orderBy("hex_cell")
@@ -66,21 +60,14 @@ def hex_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hex_parent_oracle() -> str:
-    # fine-res assignment (ints q, r), then the parent of the *cell center*
-    # at the coarse res — chained through the same literal constants.
-    pre9, qf, rf = hg.hex_qr_sql("x", "y", HEX_FINE)
-    qi, ri = hg.hex_round_qr_sql(qf, rf)
-    cx, cy = hg.hex_center_sql("qi", "ri", HEX_FINE)
-    pre7, qf7, rf7 = hg.hex_qr_sql("cx", "cy", HEX_COARSE)
-    pack7 = hg.hex_round_pack_sql(qf7, rf7, HEX_COARSE)
+    # fine-res assignment, then the parent of the *cell center* at the
+    # coarse res — the same two emitters the Spark plan parses.
     return f"""
     WITH pts AS ({_pts_cte()}),
-         g AS ({pre9} FROM pts),
-         i AS (SELECT {qi} AS qi, {ri} AS ri FROM g),
-         c AS (SELECT {cx} AS cx, {cy} AS cy FROM i),
-         p AS ({pre7} FROM c)
-    SELECT {pack7} AS parent_cell, CAST(COUNT(*) AS BIGINT) AS n
-    FROM p GROUP BY parent_cell ORDER BY parent_cell
+         g AS (SELECT {hg.hex_cell_sql("x", "y", HEX_FINE)} AS hc FROM pts)
+    SELECT {hg.hex_parent_sql("hc", HEX_FINE, HEX_COARSE)} AS parent_cell,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM g GROUP BY parent_cell ORDER BY parent_cell
     """
 
 
@@ -92,9 +79,9 @@ def hex_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and the parent hop are JVM expressions — the rollup is one
     partial-agg shuffle on the coarse cell id."""
     pts = _event_points(spark, sf_dir)
-    fine = pts.withColumn("hc", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_FINE))
+    fine = pts.withColumn("hc", F.expr(hg.hex_cell_sql("x", "y", HEX_FINE)))
     return (
-        fine.withColumn("parent_cell", hg.hex_parent_col(F.col("hc"), HEX_FINE, HEX_COARSE))
+        fine.withColumn("parent_cell", F.expr(hg.hex_parent_sql("hc", HEX_FINE, HEX_COARSE)))
         .groupBy("parent_cell")
         .agg(F.count("*").alias("n"))
         .orderBy("parent_cell")
@@ -236,7 +223,7 @@ def s2_bbox_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lat_lo, lat_hi, lng_lo, lng_hi = _BB
     pts = s2.with_s2_cell(_geo_points(spark, sf_dir), "lat", "lng", S2_LEVEL)
     cover = s2.normalize_cover(s2.cover_rect(lat_lo, lat_hi, lng_lo, lng_hi, 9))
-    pruned = pts.where(s2.s2_range_predicate(F.col("s2_cell"), cover))
+    pruned = pts.where(s2.s2_range_predicate("s2_cell", cover))
     refined = pruned.where(
         F.col("lat").between(lat_lo, lat_hi) & F.col("lng").between(lng_lo, lng_hi)
     )
@@ -245,17 +232,17 @@ def s2_bbox_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hex_kring_oracle() -> str:
     # ring membership ⇔ hex distance ≤ 2 between integer axial coords —
-    # recomputed per side in SQL from the shared literals, then a tiny
-    # cross join (the POI side is events % 9973).
-    pre_p, qfp, rfp = hg.hex_qr_sql("x", "y", HEX_RES)
-    qp, rp = hg.hex_round_qr_sql(qfp, rfp)
+    # each side's cell unpacked in SQL, then a tiny cross join (the POI
+    # side is events % 9973).
+    cell = hg.hex_cell_sql("x", "y", HEX_RES)
+    q, r = hg.hex_axial_sql("c")
     return f"""
     WITH pts AS ({_pts_cte()}),
          pois AS ({_pts_cte(9973)}),
-         a AS ({pre_p} FROM pts),
-         ai AS (SELECT {qp} AS q1, {rp} AS r1 FROM a),
-         b AS ({pre_p} FROM pois),
-         bi AS (SELECT event_id AS poi_id, {qp} AS q2, {rp} AS r2 FROM b)
+         a AS (SELECT {cell} AS c FROM pts),
+         ai AS (SELECT {q} AS q1, {r} AS r1 FROM a),
+         b AS (SELECT event_id, {cell} AS c FROM pois),
+         bi AS (SELECT event_id AS poi_id, {q} AS q2, {r} AS r2 FROM b)
     SELECT poi_id, CAST(COUNT(*) AS BIGINT) AS n_near
     FROM ai CROSS JOIN bi
     WHERE (ABS(q1 - q2) + ABS(r1 - r2) + ABS((q1 - q2) + (r1 - r2))) / 2 <= 2
@@ -270,13 +257,16 @@ def hex_kring_poi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring (JVM array + explode), big side joins on its single cell id —
     a broadcast equi-join, no geometry shuffle, no Python."""
     pts = _event_points(spark, sf_dir)
-    pts = pts.withColumn("hex_cell", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_RES))
+    pts = pts.withColumn("hex_cell", F.expr(hg.hex_cell_sql("x", "y", HEX_RES)))
     pois = _event_points(spark, sf_dir, modulus=9973).withColumnRenamed(
         "event_id", "poi_id"
     )
-    pois = pois.withColumn("hc", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_RES))
+    pois = pois.withColumn("hc", F.expr(hg.hex_cell_sql("x", "y", HEX_RES)))
     ring = pois.select(
-        "poi_id", F.explode(hg.hex_kring_col(F.col("hc"), HEX_RES, 2)).alias("hex_cell")
+        "poi_id",
+        F.explode(F.expr(hg.hex_kring_sql("hc", 2, dialect="spark"))).alias(
+            "hex_cell"
+        ),
     )
     return (
         pts.join(F.broadcast(ring), "hex_cell")
@@ -290,15 +280,13 @@ def _geo_hex_oracle() -> str:
     from osmgraft.geo.geometry import mercator_sql
 
     xs, ys = mercator_sql("lat", "lng")
-    pre, qf, rf = hg.hex_qr_sql("mx", "my", HEX_COARSE)
-    pack = hg.hex_round_pack_sql(qf, rf, HEX_COARSE)
     return f"""
     WITH pts AS ({_pts_cte()}),
          g AS (SELECT {LAT_EXPR} AS lat, {LNG_EXPR} AS lng FROM pts),
-         m AS (SELECT {xs} AS mx, {ys} AS my FROM g),
-         h AS ({pre} FROM m)
-    SELECT {pack} AS hex_cell, CAST(COUNT(*) AS BIGINT) AS n
-    FROM h GROUP BY hex_cell ORDER BY hex_cell
+         m AS (SELECT {xs} AS mx, {ys} AS my FROM g)
+    SELECT {hg.hex_cell_sql("mx", "my", HEX_COARSE)} AS hex_cell,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM m GROUP BY hex_cell ORDER BY hex_cell
     """
 
 
@@ -307,17 +295,17 @@ def geo_pages_hex_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-star chain end-to-end in one JVM-only plan: geocoded pages
     (lat/lng) → Web-Mercator projection (reference CRS,
     05_import_data.sh:131) → aperture-7 hex tiling at res 7 → per-tile
-    rollup. The oracle recomputes projection + hex assignment in DuckDB
-    from the same constants; transcendental steps (tan/ln) agree because
-    both engines use correctly-rounded IEEE doubles over identical
-    expression order."""
-    from osmgraft.geo.geometry import mercator_cols
+    rollup. The oracle runs the same projection + hex text in DuckDB. The
+    engines' tan/ln are not both correctly rounded: the projected y differs
+    by one ulp on ~7 % of random points (tests/test_cellindexes.py), so a
+    cell can flip only for a point within an ulp of a hex edge."""
+    from osmgraft.geo.geometry import mercator_sql
 
     pts = _geo_points(spark, sf_dir)
-    mx, my = mercator_cols(F.col("lat"), F.col("lng"))
+    mx, my = mercator_sql("lat", "lng")
     return (
-        pts.select(mx.alias("mx"), my.alias("my"))
-        .withColumn("hex_cell", hg.hex_cell_col(F.col("mx"), F.col("my"), HEX_COARSE))
+        pts.select(F.expr(mx).alias("mx"), F.expr(my).alias("my"))
+        .withColumn("hex_cell", F.expr(hg.hex_cell_sql("mx", "my", HEX_COARSE)))
         .groupBy("hex_cell")
         .agg(F.count("*").alias("n"))
         .orderBy("hex_cell")
@@ -327,10 +315,8 @@ def geo_pages_hex_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hex_vec_oracle() -> str:
     import math
 
-    pre, qf, rf = hg.hex_qr_sql("x", "y", HEX_COARSE)
-    qi, ri = hg.hex_round_qr_sql(qf, rf)
     e = hg.edge_m(HEX_COARSE)
-    cx, cy = hg.hex_center_sql("qi", "ri", HEX_COARSE)
+    cx, cy = hg.hex_center_sql("hex_cell", HEX_COARSE)
     verts = ", ".join(
         # "+ 0.0" maps an IEEE -0.0 to +0.0 — DuckDB can round a tiny
         # negative offset to -0.0 where Spark lands on +0.0 (equal by ==,
@@ -341,11 +327,10 @@ def _hex_vec_oracle() -> str:
     )
     return f"""
     WITH pts AS ({_pts_cte()}),
-         g AS ({pre} FROM pts),
-         i AS (SELECT {qi} AS qi, {ri} AS ri FROM g),
-         a AS (SELECT qi, ri, CAST(COUNT(*) AS BIGINT) AS n FROM i GROUP BY qi, ri),
-         c AS (SELECT {hg.hex_pack_sql('qi', 'ri', HEX_COARSE)} AS hex_cell, n,
-                      {cx} AS cx, {cy} AS cy FROM a)
+         a AS (SELECT {hg.hex_cell_sql("x", "y", HEX_COARSE)} AS hex_cell,
+                      CAST(COUNT(*) AS BIGINT) AS n
+               FROM pts GROUP BY hex_cell),
+         c AS (SELECT hex_cell, n, {cx} AS cx, {cy} AS cy FROM a)
     SELECT hex_cell, n, {verts} FROM c ORDER BY hex_cell
     """
 
@@ -361,12 +346,10 @@ def hex_tile_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = hg.edge_m(HEX_COARSE)
     pts = _event_points(spark, sf_dir)
-    cells = pts.withColumn(
-        "hex_cell", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_COARSE)
-    )
+    cells = pts.withColumn("hex_cell", F.expr(hg.hex_cell_sql("x", "y", HEX_COARSE)))
     agg = cells.groupBy("hex_cell").agg(F.count("*").alias("n"))
-    cx, cy = hg.hex_center_cols(F.col("hex_cell"), HEX_COARSE)
-    out = agg.withColumn("cx", cx).withColumn("cy", cy)
+    cx, cy = hg.hex_center_sql("hex_cell", HEX_COARSE)
+    out = agg.withColumns({"cx": F.expr(cx), "cy": F.expr(cy)})
     cols = [F.col("hex_cell"), F.col("n")]
     for k in range(6):
         ang = math.radians(60.0 * k + 30.0)
@@ -454,16 +437,11 @@ def _in_L_sql(x: str, y: str) -> str:
 
 
 def _polyfill_oracle() -> str:
-    pre, qf, rf = hg.hex_qr_sql("x", "y", HEX_COARSE)
-    qi, ri = hg.hex_round_qr_sql(qf, rf)
-    e = hg.edge_m(HEX_COARSE)
-    cx, cy = hg.hex_center_sql("qi", "ri", HEX_COARSE)
+    cx, cy = hg.hex_center_sql("hex_cell", HEX_COARSE)
     return f"""
     WITH pts AS ({_pts_cte()}),
-         g AS ({pre} FROM pts),
-         i AS (SELECT {qi} AS qi, {ri} AS ri FROM g),
-         c AS (SELECT {hg.hex_pack_sql('qi', 'ri', HEX_COARSE)} AS hex_cell,
-                      {cx} AS cx, {cy} AS cy FROM i)
+         g AS (SELECT {hg.hex_cell_sql("x", "y", HEX_COARSE)} AS hex_cell FROM pts),
+         c AS (SELECT hex_cell, {cx} AS cx, {cy} AS cy FROM g)
     SELECT hex_cell, CAST(COUNT(*) AS BIGINT) AS n
     FROM c WHERE {_in_L_sql('cx', 'cy')}
     GROUP BY hex_cell ORDER BY hex_cell
@@ -485,18 +463,16 @@ def hex_polyfill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
          [100000, 160000], [40000, 160000], [40000, 40000]], dtype=float
     )
     pts = _event_points(spark, sf_dir)
-    cells = pts.withColumn("hex_cell", hg.hex_cell_col(F.col("x"), F.col("y"), HEX_COARSE))
+    cells = pts.withColumn("hex_cell", F.expr(hg.hex_cell_sql("x", "y", HEX_COARSE)))
     # Rollup first, then apply the center-containment rule to the (small)
     # aggregated cell set. The checkpoint is a deliberate codegen barrier:
     # referencing center math derived from the cell id *through* the agg
     # makes Catalyst inline the full assignment expression many times into
     # one fused stage, and janino compile time balloons (measured 0.5s →
-    # 3.5s with codegen on). Post-barrier the key is a plain column. The
-    # alternative cover-as-data path is hexgrid.hex_polyfill_df (executor-
-    # side cover generation for partition pruning on cell-sorted tables).
+    # 3.5s with codegen on). Post-barrier the key is a plain column.
     agg = cells.groupBy("hex_cell").agg(F.count("*").alias("n")).transform(cut)
-    cx, cy = hg.hex_center_cols(F.col("hex_cell"), HEX_COARSE)
-    return agg.where(hg.point_in_ring_col(cx, cy, ring)).orderBy("hex_cell")
+    cx, cy = hg.hex_center_sql("hex_cell", HEX_COARSE)
+    return agg.where(hg.point_in_ring_col(F.expr(cx), F.expr(cy), ring)).orderBy("hex_cell")
 
 
 def _s2_vec_oracle(level: int) -> str:
@@ -593,10 +569,9 @@ _S2_COARSE = 10
 
 
 def _s2_parent_oracle() -> str:
-    lsb = s2.lsb_for_level(_S2_COARSE)
     return f"""
     WITH {_s2_assign_cte(S2_LEVEL)}
-    SELECT CAST((s2_cell & {-lsb}) | {lsb} AS BIGINT) AS parent_cell,
+    SELECT {s2.s2_parent_sql("s2_cell", _S2_COARSE)} AS parent_cell,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM asgn GROUP BY parent_cell ORDER BY parent_cell
     """
@@ -613,7 +588,7 @@ def s2_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _geo_points(spark, sf_dir)
     fine = s2.with_s2_cell(pts, "lat", "lng", S2_LEVEL, out="s2_cell")
     return (
-        fine.withColumn("parent_cell", s2.s2_parent_col(F.col("s2_cell"), _S2_COARSE))
+        fine.withColumn("parent_cell", F.expr(s2.s2_parent_sql("s2_cell", _S2_COARSE)))
         .groupBy("parent_cell")
         .agg(F.count("*").alias("n"))
         .orderBy("parent_cell")

@@ -226,15 +226,13 @@ _HOT_RES = 7
 
 
 def _hot_cell_oracle() -> str:
-    pre, qf, rf = hg.hex_qr_sql("x", "y", _HOT_RES)
-    pack = hg.hex_round_pack_sql(qf, rf, _HOT_RES)
     from osmgraft.contract import X_EXPR, Y_EXPR
 
     return f"""
     WITH pts AS (SELECT event_id, user_id, {X_EXPR} AS x, {Y_EXPR} AS y
                  FROM events),
-         g AS ({pre} FROM pts)
-    SELECT {pack} AS hex_cell,
+         g AS (SELECT user_id, {hg.hex_cell_sql("x", "y", _HOT_RES)} AS hex_cell FROM pts)
+    SELECT hex_cell,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
     FROM g GROUP BY hex_cell ORDER BY hex_cell
@@ -262,7 +260,7 @@ def hot_cell_salted_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.expr(X_EXPR).alias("x"), F.expr(Y_EXPR).alias("y")
     )
     cells = ev.select(
-        hg.hex_cell_col(F.col("x"), F.col("y"), _HOT_RES).alias("hex_cell"),
+        F.expr(hg.hex_cell_sql("x", "y", _HOT_RES)).alias("hex_cell"),
         "user_id",
     )
     out = salted_aggregate(

@@ -14,7 +14,7 @@ from osmgraft.contract import (
     q,
     t,
 )
-from osmgraft.rules.sqlgen import morton_sql
+from osmgraft.geo.cells import cell_sql, parent_cell_sql, with_cell
 
 # ---------------------------------------------------------------------------
 # embedding-cosine near-duplicates (exact, oracle-paired)
@@ -63,14 +63,10 @@ _PYR_COARSE = 4
     "cell_pyramid",
     oracle=f"""
     WITH pts AS ({_pts_cte()}),
-         g AS (SELECT
-                 CAST(LEAST(127, GREATEST(0, FLOOR(x / {SPEC.cell_width(CELL_RES)}))) AS BIGINT) AS ix,
-                 CAST(LEAST(127, GREATEST(0, FLOOR(y / {SPEC.cell_width(CELL_RES)}))) AS BIGINT) AS iy
-               FROM pts),
-         fine AS (SELECT (({morton_sql('ix', 'iy')} << 5) | {CELL_RES}) AS cell,
+         fine AS (SELECT {cell_sql('x', 'y', SPEC, CELL_RES)} AS cell,
                          CAST(COUNT(*) AS BIGINT) AS n
-                  FROM g GROUP BY cell)
-    SELECT ((((cell >> 5) >> {2 * (CELL_RES - _PYR_COARSE)}) << 5) | {_PYR_COARSE}) AS parent_cell,
+                  FROM pts GROUP BY cell)
+    SELECT {parent_cell_sql('cell', CELL_RES, _PYR_COARSE)} AS parent_cell,
            CAST(COUNT(*) AS BIGINT) AS n_children,
            CAST(SUM(n) AS BIGINT) AS n_points
     FROM fine GROUP BY parent_cell ORDER BY parent_cell
@@ -78,10 +74,8 @@ _PYR_COARSE = 4
 )
 def cell_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution rollup: fine-cell counts re-aggregated to a coarse
-    parent resolution via parent_cell_col (H3 to_parent pyramid — the
+    parent resolution via parent_cell_sql (H3 to_parent pyramid — the
     hypertable-rollup pattern, one pass per level over already-reduced data)."""
-    from osmgraft.geo.cells import parent_cell_col, with_cell
-
     pts = _event_points(spark, sf_dir)
     fine = (
         with_cell(pts, "x", "y", SPEC, CELL_RES, out="cell", keep_ixy=False)
@@ -90,7 +84,7 @@ def cell_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         fine.groupBy(
-            parent_cell_col(F.col("cell"), CELL_RES, _PYR_COARSE).alias("parent_cell")
+            F.expr(parent_cell_sql("cell", CELL_RES, _PYR_COARSE)).alias("parent_cell")
         )
         .agg(
             F.count("*").alias("n_children"),

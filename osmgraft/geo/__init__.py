@@ -1,7 +1,7 @@
-from osmgraft.geo.cells import GridSpec, cell_col, kring_cells_col, morton_col
+from osmgraft.geo.cells import GridSpec, cell_sql, kring_cells_sql, morton_sql, with_cell
 from osmgraft.geo.geometry import (
-    inv_mercator_cols,
-    mercator_cols,
+    inv_mercator_np,
+    inv_mercator_sql,
     mercator_np,
     mercator_sql,
     planar_length_col,
@@ -14,13 +14,20 @@ from osmgraft.geo import hexgrid, s2
 
 __all__ = [
     "GridSpec",
-    "cell_col",
-    "kring_cells_col",
-    "morton_col",
+    "cell_sql",
+    "kring_cells_sql",
+    "morton_sql",
+    "with_cell",
+    "inv_mercator_np",
+    "inv_mercator_sql",
+    "mercator_np",
+    "mercator_sql",
     "planar_length_col",
     "polygon_wkb",
     "point_wkb",
     "STRtree",
     "pip_join",
     "knn_join",
+    "hexgrid",
+    "s2",
 ]

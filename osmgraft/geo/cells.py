@@ -18,10 +18,11 @@ Cell id layout: ``(morton(ix, iy) << 5) | resolution`` with resolution
 §7.3 item 6). Z-order keeps spatially-near cells numerically near, so
 sorted writes cluster hotspots together and range scans cover bboxes.
 
-Two implementations, bit-for-bit identical:
-- **JVM-native Column expressions** (default; whole-stage codegen, no
-  Python in the hot path),
-- **numpy** (for use inside pandas-UDF geometry kernels and tests).
+Two forms, bit-for-bit identical:
+- **SQL text** (`cell_sql`, `parent_cell_sql`, `kring_cells_sql`): Spark
+  parses it with `F.expr` (whole-stage codegen, no Python in the hot path)
+  and the DuckDB oracles embed the same text;
+- **numpy** (the driver-side kernel and the reference in tests).
 """
 
 from __future__ import annotations
@@ -29,8 +30,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osmgraft.geo.hexgrid import lit_sql
 
 _MASKS = (
     0x0000FFFF0000FFFF,
@@ -63,47 +66,74 @@ class GridSpec:
 
 
 # ---------------------------------------------------------------------------
-# JVM-native (Column) implementation
+# SQL text — one emitter that Spark parses (F.expr) and DuckDB oracles embed
 # ---------------------------------------------------------------------------
 
 
-def _spread_bits_col(v: Column) -> Column:
-    """Interleave-ready bit spread (x -> x with a 0 bit between every bit)."""
-    for shift, mask in zip(_SHIFTS, _MASKS):
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
+def morton_sql(ix: str, iy: str) -> str:
+    """Morton/Z-order interleave of two <=26-bit integer expressions: bit i
+    of ix moves to bit 2i and bit i of iy to bit 2i+1, as one flat OR of
+    masked products. The text stays flat on purpose: Spark's parser slows
+    down (and grows its cache) exponentially with parenthesis depth, which
+    the nested mask-and-shift form (morton_np) would reach. `*` binds
+    tighter than `|` in both engines."""
+    terms = []
+    for i in range(MAX_RES):
+        terms.append(f"(CAST({ix} AS BIGINT) & {1 << i}) * {1 << i}")
+        terms.append(f"(CAST({iy} AS BIGINT) & {1 << i}) * {2 << i}")
+    return "(" + " | ".join(terms) + ")"
 
 
-def morton_col(ix: Column, iy: Column) -> Column:
-    """Morton/Z-order interleave of two <=26-bit integer columns (JVM-side)."""
-    return _spread_bits_col(ix.cast("long")).bitwiseOR(
-        F.shiftleft(_spread_bits_col(iy.cast("long")), 1)
-    )
-
-
-def grid_ix_col(x: Column, spec: GridSpec, res: int) -> Column:
+def _grid_index_sql(v: str, origin: float, size: float, res: int) -> str:
     n = 1 << res
-    ix = F.floor((x - F.lit(spec.x0)) / F.lit(spec.cell_width(res)))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), ix)).cast("long")
+    floor = f"FLOOR(({v} - {lit_sql(origin)}) / {lit_sql(size)})"
+    return f"CAST(GREATEST(0, LEAST({n - 1}, {floor})) AS BIGINT)"
 
 
-def grid_iy_col(y: Column, spec: GridSpec, res: int) -> Column:
-    n = 1 << res
-    iy = F.floor((y - F.lit(spec.y0)) / F.lit(spec.cell_height(res)))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), iy)).cast("long")
+def grid_ix_sql(x: str, spec: GridSpec, res: int) -> str:
+    """Column index of x at `res`, clamped to the grid."""
+    return _grid_index_sql(x, spec.x0, spec.cell_width(res), res)
 
 
-def cell_col(x: Column, y: Column, spec: GridSpec, res: int) -> Column:
-    """Cell id at `res` for planar coordinates — pure JVM expressions."""
-    m = morton_col(grid_ix_col(x, spec, res), grid_iy_col(y, spec, res))
-    return F.shiftleft(m, RES_BITS).bitwiseOR(F.lit(res))
+def grid_iy_sql(y: str, spec: GridSpec, res: int) -> str:
+    """Row index of y at `res`, clamped to the grid."""
+    return _grid_index_sql(y, spec.y0, spec.cell_height(res), res)
 
 
-def parent_cell_col(cell: Column, res: int, parent_res: int) -> Column:
+def _pack_sql(ix: str, iy: str, res: int) -> str:
+    return f"({morton_sql(ix, iy)} * {1 << RES_BITS} | {res})"
+
+
+def cell_sql(x: str, y: str, spec: GridSpec, res: int) -> str:
+    """Cell id at `res` for planar coordinates."""
+    return _pack_sql(grid_ix_sql(x, spec, res), grid_iy_sql(y, spec, res), res)
+
+
+def parent_cell_sql(cell: str, res: int, parent_res: int) -> str:
     """Coarsen a cell id (H3 `h3_to_parent` equivalent)."""
     drop = 2 * (res - parent_res)
-    m = F.shiftright(cell, RES_BITS)
-    return F.shiftleft(F.shiftright(m, drop), RES_BITS).bitwiseOR(F.lit(parent_res))
+    # shifts and `|` group left to right in DuckDB and by precedence in Spark
+    return f"({cell} >> {RES_BITS + drop} << {RES_BITS} | {parent_res})"
+
+
+def kring_cells_sql(ix: str, iy: str, res: int, k: int, *, dialect: str) -> str:
+    """Array of cell ids in the Chebyshev k-ring around (ix, iy), row by
+    row, cells off the grid dropped. Used to expand the *small* join side
+    (POIs/airports) so the big side joins on its single cell id (reference
+    J4 → cell-partitioned semi-join)."""
+    n = 1 << res
+    jx, jy = f"{ix} + _dx", f"{iy} + _dy"
+    cell = (
+        f"CASE WHEN {jx} >= 0 AND {jx} < {n} AND {jy} >= 0 AND {jy} < {n} "
+        f"THEN {_pack_sql(jx, jy, res)} END"
+    )
+    if dialect == "spark":
+        offs = f"sequence({-k}, {k})"
+        rows = f"transform({offs}, _dx -> transform({offs}, _dy -> {cell}))"
+        return f"filter(flatten({rows}), _c -> _c IS NOT NULL)"
+    offs = f"range({-k}, {k + 1})"
+    rows = f"list_transform({offs}, _dx -> list_transform({offs}, _dy -> {cell}))"
+    return f"list_filter(flatten({rows}), _c -> _c IS NOT NULL)"
 
 
 def with_cell(
@@ -115,37 +145,14 @@ def with_cell(
     out: str = "cell",
     keep_ixy: bool = True,
 ) -> DataFrame:
-    """Attach ix/iy/cell columns. ix/iy are kept so k-ring expansion never
-    needs to de-interleave the Morton code."""
-    df = df.withColumn(f"{out}_ix", grid_ix_col(F.col(x), spec, res)).withColumn(
-        f"{out}_iy", grid_iy_col(F.col(y), spec, res)
-    )
-    m = morton_col(F.col(f"{out}_ix"), F.col(f"{out}_iy"))
-    df = df.withColumn(out, F.shiftleft(m, RES_BITS).bitwiseOR(F.lit(res)))
-    return df if keep_ixy else df.drop(f"{out}_ix", f"{out}_iy")
-
-
-def kring_cells_col(ix: Column, iy: Column, res: int, k: int) -> Column:
-    """Array of cell ids in the Chebyshev k-ring around (ix, iy).
-
-    JVM-side: flatten(transform(sequence)) — no Python, no UDF. Used to
-    expand the *small* join side (POIs/airports) so the big side joins on
-    its single cell id (reference J4 → cell-partitioned semi-join).
-    """
-    n = 1 << res
-    offs = F.sequence(F.lit(-k), F.lit(k))
-
-    def one_row(dx: Column) -> Column:
-        jx = ix + dx
-        return F.transform(
-            offs,
-            lambda dy: F.when(
-                (jx >= 0) & (jx < n) & (iy + dy >= 0) & (iy + dy < n),
-                F.shiftleft(morton_col(jx, iy + dy), RES_BITS).bitwiseOR(F.lit(res)),
-            ),
-        )
-
-    return F.filter(F.flatten(F.transform(offs, one_row)), lambda c: c.isNotNull())
+    """Attach ix/iy/cell columns. The interleave reads the ix/iy columns
+    (not one copy of the floor expression per bit); ix/iy are kept so k-ring
+    expansion never needs to de-interleave the Morton code."""
+    ix, iy = f"{out}_ix", f"{out}_iy"
+    df = df.withColumns(
+        {ix: F.expr(grid_ix_sql(x, spec, res)), iy: F.expr(grid_iy_sql(y, spec, res))}
+    ).withColumn(out, F.expr(_pack_sql(ix, iy, res)))
+    return df if keep_ixy else df.drop(ix, iy)
 
 
 # ---------------------------------------------------------------------------
@@ -165,13 +172,13 @@ def morton_np(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
 
 
 def grid_ix_np(x: np.ndarray, spec: GridSpec, res: int) -> np.ndarray:
-    """Column index of x at `res`, clamped to the grid (grid_ix_col's twin)."""
+    """Column index of x at `res`, clamped to the grid (grid_ix_sql's twin)."""
     ix = np.floor((x - spec.x0) / spec.cell_width(res)).astype(np.int64)
     return np.clip(ix, 0, (1 << res) - 1)
 
 
 def grid_iy_np(y: np.ndarray, spec: GridSpec, res: int) -> np.ndarray:
-    """Row index of y at `res`, clamped to the grid (grid_iy_col's twin)."""
+    """Row index of y at `res`, clamped to the grid (grid_iy_sql's twin)."""
     iy = np.floor((y - spec.y0) / spec.cell_height(res)).astype(np.int64)
     return np.clip(iy, 0, (1 << res) - 1)
 

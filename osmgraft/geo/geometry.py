@@ -28,6 +28,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
+from osmgraft.geo.hexgrid import lit_sql
+
 WKB_POINT = 1
 WKB_LINESTRING = 2
 WKB_POLYGON = 3
@@ -176,27 +178,11 @@ def path_centroid_sql(xy: str) -> str:
 # ---------------------------------------------------------------------------
 # Web-Mercator (EPSG:3857) bridge — the reference's storage CRS
 # (05_import_data.sh:131 `--proj 3857`). Links the geographic S2 path
-# (lat/lng) to the planar hex/Z-order/area math. Spherical formula, JVM
-# expressions; numpy twin for UDF kernels; e-notation SQL for oracles.
+# (lat/lng) to the planar hex/Z-order/area math. Spherical formula: numpy
+# kernels, and e-notation SQL text that Spark and the oracles both run.
 # ---------------------------------------------------------------------------
 
 WEB_MERCATOR_R = 6378137.0
-
-
-def mercator_cols(lat: Column, lng: Column) -> tuple[Column, Column]:
-    """(lat, lng) degrees -> EPSG:3857 meters, pure JVM expressions."""
-    x = F.lit(WEB_MERCATOR_R) * F.radians(lng)
-    y = F.lit(WEB_MERCATOR_R) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / F.lit(2.0)))
-    return x, y
-
-
-def inv_mercator_cols(x: Column, y: Column) -> tuple[Column, Column]:
-    """EPSG:3857 meters -> (lat, lng) degrees, pure JVM expressions."""
-    lng = F.degrees(x / F.lit(WEB_MERCATOR_R))
-    lat = F.degrees(
-        F.lit(2.0) * F.atan(F.exp(y / F.lit(WEB_MERCATOR_R))) - F.lit(math.pi / 2.0)
-    )
-    return lat, lng
 
 
 def mercator_np(lat: "np.ndarray", lng: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
@@ -205,12 +191,28 @@ def mercator_np(lat: "np.ndarray", lng: "np.ndarray") -> tuple["np.ndarray", "np
     return x, y
 
 
+def inv_mercator_np(x: "np.ndarray", y: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
+    lat = np.degrees(2.0 * np.arctan(np.exp(y / WEB_MERCATOR_R)) - np.pi / 2.0)
+    lng = np.degrees(x / WEB_MERCATOR_R)
+    return lat, lng
+
+
 def mercator_sql(lat_sql: str, lng_sql: str) -> tuple[str, str]:
-    """SQL mirror (DuckDB) of mercator_cols — same op order and constants."""
-    r = f"{WEB_MERCATOR_R!r}e0"
+    """(lat, lng) degrees -> EPSG:3857 meters (mercator_np's op order and
+    constants)."""
+    r = lit_sql(WEB_MERCATOR_R)
     x = f"({r} * radians({lng_sql}))"
-    y = f"({r} * ln(tan({math.pi / 4.0!r}e0 + radians({lat_sql}) / 2.0)))"
+    y = f"({r} * ln(tan({lit_sql(math.pi / 4.0)} + radians({lat_sql}) / {lit_sql(2.0)})))"
     return x, y
+
+
+def inv_mercator_sql(x_sql: str, y_sql: str) -> tuple[str, str]:
+    """EPSG:3857 meters -> (lat, lng) degrees (inv_mercator_np's twin)."""
+    r = lit_sql(WEB_MERCATOR_R)
+    lat = (
+        f"degrees({lit_sql(2.0)} * atan(exp(({y_sql}) / {r})) - {lit_sql(math.pi / 2.0)})"
+    )
+    return lat, f"degrees(({x_sql}) / {r})"
 
 
 # ---------------------------------------------------------------------------

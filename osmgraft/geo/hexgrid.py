@@ -17,15 +17,15 @@ meters — matching the reference's planar geometry throughout,
   H3, hex apertures admit no exact nesting; the parent of a cell is the
   coarser cell containing its center).
 
-Three bit-identical backends, all built from the same numeric literals:
+Two bit-identical forms, built from the same numeric literals:
 
-1. **JVM Column expressions** (default hot path — whole-stage codegen, no
-   Python);
-2. **numpy** (for Arrow/pandas-UDF geometry kernels);
-3. **SQL text generator** (`hex_qr_sql`) so DuckDB oracles recompute the
-   same assignment — same floor/abs/CASE structure, same double literals,
-   hence identical IEEE-754 results (rounding is `floor(v + 0.5)`
-   everywhere; never `round()`, whose tie/half mode differs per engine).
+1. **numpy** (driver-side kernels and the reference in tests);
+2. **SQL text** (`hex_cell_sql`, `hex_center_sql`, `hex_parent_sql`,
+   `hex_kring_sql`): Spark parses it with `F.expr` (whole-stage codegen,
+   no Python) and the DuckDB oracles embed the same text — same
+   floor/abs/CASE structure, same double literals, hence identical
+   IEEE-754 results (rounding is `floor(v + 0.5)` everywhere; never
+   `round()`, whose tie/half mode differs per engine).
 
 Not bit-compatible with Uber H3 ids (that scheme's icosahedral base-cell
 tables are gratuitous on a planar CRS); compatible in capability.
@@ -34,10 +34,10 @@ tables are gratuitous on a planar CRS); compatible in capability.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# --- shared numeric literals (single source of truth for all 3 backends) ---
+# --- shared numeric literals (single source of truth for both forms) ---
 RES7_EDGE_M = 1409.5  # H3 res-7 mean hex edge, meters
 EDGE0_M = RES7_EDGE_M * 7.0**3.5  # aperture-7 ladder anchor (res 0)
 K_Q_X = 0.5773502691896258  # sqrt(3)/3
@@ -164,162 +164,82 @@ def boundary_np(ids: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# JVM Column backend (same literals, same op order — bit-identical)
-# ---------------------------------------------------------------------------
-
-
-def _cube_round_cols(qf: Column, rf: Column) -> tuple[Column, Column]:
-    sf = -qf - rf
-    rq = F.floor(qf + F.lit(0.5))
-    rr = F.floor(rf + F.lit(0.5))
-    rs = F.floor(sf + F.lit(0.5))
-    dq = F.abs(rq.cast("double") - qf)
-    dr = F.abs(rr.cast("double") - rf)
-    ds = F.abs(rs.cast("double") - sf)
-    fix_q = (dq > dr) & (dq > ds)
-    fix_r = (~fix_q) & (dr > ds)
-    q = F.when(fix_q, -rr - rs).otherwise(rq).cast("long")
-    r = F.when(fix_r, -rq - rs).otherwise(rr).cast("long")
-    return q, r
-
-
-def hex_cell_col(x: Column, y: Column, res: int) -> Column:
-    """Hex cell id as a pure-JVM expression (whole-stage codegen; the
-    default hot path — the numpy form exists for kernels that are
-    already inside pandas)."""
-    e = edge_m(res)
-    qf = (x * F.lit(K_Q_X) - y * F.lit(K_Q_Y)) / F.lit(e)
-    rf = (y * F.lit(K_R_Y)) / F.lit(e)
-    q, r = _cube_round_cols(qf, rf)
-    return (
-        F.shiftleft(F.lit(res).cast("long"), 56)
-        .bitwiseOR(F.shiftleft(q + F.lit(OFF), 28))
-        .bitwiseOR(r + F.lit(OFF))
-    )
-
-
-def hex_center_cols(cell: Column, res: int) -> tuple[Column, Column]:
-    e = edge_m(res)
-    q = (F.shiftright(cell, 28).bitwiseAND(F.lit((1 << 28) - 1)) - F.lit(OFF)).cast(
-        "double"
-    )
-    r = (cell.bitwiseAND(F.lit((1 << 28) - 1)) - F.lit(OFF)).cast("double")
-    x = F.lit(e * SQRT3) * (q + r * F.lit(0.5))
-    y = F.lit(e * 1.5) * r
-    return x, y
-
-
-def hex_parent_col(cell: Column, res: int, parent_res: int) -> Column:
-    x, y = hex_center_cols(cell, res)
-    return hex_cell_col(x, y, parent_res)
-
-
-def hex_kring_col(cell: Column, res: int, k: int) -> Column:
-    """Array of ids at hex distance ≤ k — JVM-side (expand the small join
-    side; the big side keeps its single equi-join key)."""
-    q = F.shiftright(cell, 28).bitwiseAND(F.lit((1 << 28) - 1)) - F.lit(OFF)
-    r = cell.bitwiseAND(F.lit((1 << 28) - 1)) - F.lit(OFF)
-    base = F.shiftleft(F.lit(res).cast("long"), 56)
-    offs = [
-        (dq, dr)
-        for dq in range(-k, k + 1)
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1)
-    ]
-    return F.array(
-        *[
-            base.bitwiseOR(F.shiftleft(q + F.lit(dq + OFF), 28)).bitwiseOR(
-                r + F.lit(dr + OFF)
-            )
-            for dq, dr in offs
-        ]
-    )
-
-
-def with_hex_cell(df: DataFrame, x: str, y: str, res: int, out: str = "hex_cell") -> DataFrame:
-    return df.withColumn(out, hex_cell_col(F.col(x), F.col(y), res))
-
-
-# ---------------------------------------------------------------------------
-# SQL backend (DuckDB oracle generator — same literals/structure)
+# SQL text — one emitter that Spark parses (F.expr) and DuckDB oracles embed
 # ---------------------------------------------------------------------------
 
 
 def lit_sql(v: float) -> str:
-    """Float literal in e-notation: DuckDB types bare decimal literals as
-    DECIMAL, whose decimal->double conversion can be 1 ulp off the correctly
-    rounded parse; e-notation literals are typed DOUBLE directly, keeping
-    the oracle bit-identical to the JVM/numpy backends."""
+    """Float literal in e-notation: both engines type bare decimal literals
+    as DECIMAL (Spark: `0.5` is DECIMAL(1,1)), whose decimal->double
+    conversion can be 1 ulp off the correctly rounded parse; e-notation
+    literals are typed DOUBLE directly, keeping the text bit-identical to
+    the numpy kernels."""
     r = repr(float(v))
     return r if ("e" in r or "E" in r) else f"{r}e0"
 
 
-def hex_qr_sql(x_sql: str, y_sql: str, res: int) -> tuple[str, str, str]:
-    """Returns (pre_cte_sql, q_expr, r_expr): SQL recomputing the axial
-    cube-rounded coordinates. Caller embeds `pre_cte_sql` as a projection
-    CTE, then groups on the packed id built from q/r."""
-    e = lit_sql(edge_m(res))
-    pre = (
-        f"SELECT *, (({x_sql}) * {lit_sql(K_Q_X)} - ({y_sql}) * {lit_sql(K_Q_Y)}) / {e} AS qf, "
-        f"(({y_sql}) * {lit_sql(K_R_Y)}) / {e} AS rf"
+# The emitters keep grouping parentheses to the few that precedence needs:
+# Spark's parser slows down (and grows its cache) exponentially with their
+# nesting depth. Inputs are column names or emitter outputs. `+ - * / %`
+# bind tighter than `<<`, `>>`, `&`, `|` in both engines; among those four,
+# DuckDB groups left to right and Spark by precedence.
+
+
+def hex_axial_sql(cell: str) -> tuple[str, str]:
+    """Integer axial (q, r) of a packed cell id: with the res bits dropped
+    the id is (q + OFF) * 2^28 + r + OFF, and `>>` floors, so no group is
+    needed."""
+    return (
+        f"{cell} % {1 << 56} - {OFF << 28} >> 28",
+        f"{cell} % {1 << 28} - {OFF}",
     )
-    return pre, "qf", "rf"
 
 
-def hex_round_qr_sql(qf: str, rf: str) -> tuple[str, str]:
-    """SQL expressions for the cube-rounded integer axial coords — same
-    floor/abs/CASE structure as the numpy and Column backends."""
-    sf = f"(-({qf}) - ({rf}))"
-    rq = f"FLOOR(({qf}) + 0.5)"
-    rr = f"FLOOR(({rf}) + 0.5)"
-    rs = f"FLOOR({sf} + 0.5)"
-    dq = f"ABS({rq} - ({qf}))"
-    dr = f"ABS({rr} - ({rf}))"
-    ds = f"ABS({rs} - {sf})"
-    fix_q = f"({dq} > {dr} AND {dq} > {ds})"
-    fix_r = f"(NOT {fix_q} AND {dr} > {ds})"
+def hex_cell_sql(x: str, y: str, res: int) -> str:
+    """(x, y) planar meters -> hex cell id at `res`: cube rounding with the
+    numpy kernel's floor/abs/CASE structure and literals (rounding is
+    `floor(v + 0.5)`; never `round()`, whose tie mode differs per engine)."""
+    e, half = lit_sql(edge_m(res)), lit_sql(0.5)
+    qf = f"({x} * {lit_sql(K_Q_X)} - {y} * {lit_sql(K_Q_Y)}) / {e}"
+    rf = f"{y} * {lit_sql(K_R_Y)} / {e}"
+    sf = f"(-{qf} - {rf})"  # -(a) / e == -(a / e): negation is exact
+    rq, rr, rs = (f"FLOOR({v} + {half})" for v in (qf, rf, sf))
+    dq, dr, ds = f"ABS({rq} - {qf})", f"ABS({rr} - {rf})", f"ABS({rs} - {sf})"
+    fix_q = f"{dq} > {dr} AND {dq} > {ds}"
     q = f"CAST(CASE WHEN {fix_q} THEN -{rr} - {rs} ELSE {rq} END AS BIGINT)"
-    r = f"CAST(CASE WHEN {fix_r} THEN -{rq} - {rs} ELSE {rr} END AS BIGINT)"
-    return q, r
+    r = (
+        f"CAST(CASE WHEN {fix_q} THEN {rr} WHEN {dr} > {ds} THEN -{rq} - {rs} "
+        f"ELSE {rr} END AS BIGINT)"
+    )
+    return f"({res << 56} | ({q} + {OFF} << 28) | {r} + {OFF})"
 
 
-def hex_pack_sql(q: str, r: str, res: int) -> str:
-    return f"((CAST({res} AS BIGINT) << 56) | ((({q}) + {OFF}) << 28) | (({r}) + {OFF}))"
-
-
-def hex_round_pack_sql(qf: str, rf: str, res: int) -> str:
-    """SQL expression: cube-round (qf, rf) and pack into the 63-bit id."""
-    q, r = hex_round_qr_sql(qf, rf)
-    return hex_pack_sql(q, r, res)
-
-
-# ---------------------------------------------------------------------------
-# polyfill — polygon → hex cell cover (H3 polyfill equivalent)
-# ---------------------------------------------------------------------------
-
-
-def polyfill_np(ring: np.ndarray, res: int) -> np.ndarray:
-    """Hex cells at `res` whose center lies inside the polygon (H3's
-    polyfill containment rule). Candidate generation walks the polygon's
-    bbox in axial space (O(area/cell_area)); containment is the same
-    even-odd ray cast the PIP engine uses (osmgraft.geo.pip). Output is the
-    pruning cover for boundary-polygon queries: `cell IN polyfill(poly)`
-    replaces the geometry test for interior work at scale."""
-    from osmgraft.geo.pip import _ray_cast
-
-    ring = np.asarray(ring, dtype=float)
-    xs, ys = ring[:, 0], ring[:, 1]
+def hex_center_sql(cell: str, res: int) -> tuple[str, str]:
+    """(cx, cy) of a res-`res` cell's center (center_np's twin)."""
+    q, r = (f"CAST({v} AS DOUBLE)" for v in hex_axial_sql(cell))
     e = edge_m(res)
-    # axial bbox with one-cell margin
-    corners_q = (K_Q_X * np.array([xs.min(), xs.max()]) - K_Q_Y * np.array([ys.min(), ys.max()])[::-1]) / e
-    q_lo = int(np.floor(min(corners_q))) - 2
-    q_hi = int(np.ceil(max(corners_q))) + 2
-    r_lo = int(np.floor((K_R_Y * ys.min()) / e)) - 2
-    r_hi = int(np.ceil((K_R_Y * ys.max()) / e)) + 2
-    qq, rr = np.meshgrid(np.arange(q_lo, q_hi + 1), np.arange(r_lo, r_hi + 1), indexing="ij")
-    ids = pack_np(qq.ravel().astype(np.int64), rr.ravel().astype(np.int64), res)
-    cx, cy = center_np(ids)
-    inside = _ray_cast(ring, cx, cy)
-    return np.sort(ids[inside])
+    # unparenthesized products: as an operand they group the same way
+    return f"{lit_sql(e * SQRT3)} * ({q} + {r} * {lit_sql(0.5)})", f"{lit_sql(e * 1.5)} * {r}"
+
+
+def hex_parent_sql(cell: str, res: int, parent_res: int) -> str:
+    """Coarser cell containing this cell's center (parent_np's twin)."""
+    return hex_cell_sql(*hex_center_sql(cell, res), parent_res)
+
+
+def hex_kring_sql(cell: str, k: int, *, dialect: str) -> str:
+    """Array of ids at hex distance ≤ k, in kring_np's column order (expand
+    the small join side; the big side keeps its single equi-join key).
+
+    Each neighbour is the id plus a constant: the biased q/r fields do not
+    carry while |q|, |r| < 2^27 - k. That also keeps `>>` out of the text:
+    after an ARRAY keyword, Spark's lexer reads `>>` as two `>` tokens."""
+    ids = ", ".join(
+        f"{cell} + {(dq << 28) + dr}"
+        for dq in range(-k, k + 1)
+        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1)
+    )
+    return f"array({ids})" if dialect == "spark" else f"[{ids}]"
 
 
 def point_in_ring_col(cx: Column, cy: Column, ring: np.ndarray) -> Column:
@@ -337,45 +257,3 @@ def point_in_ring_col(cx: Column, cy: Column, ring: np.ndarray) -> Column:
         c = crossing(cx, cy, x1, y1, x2, y2).cast("int")
         crossings = c if crossings is None else crossings + c
     return (crossings % 2 == 1) if crossings is not None else F.lit(False)
-
-
-def hex_polyfill_df(spark, ring: np.ndarray, res: int) -> DataFrame:
-    """Distributed polyfill: DataFrame(hex_cell) of cells whose center lies
-    in the polygon. Candidates are generated executor-side (spark.range
-    over the axial bbox — no driver materialization, so a country-sized
-    polygon at fine res costs no py4j transfer), containment is the JVM
-    ray cast. Broadcast the (small) result against the fact table's cell
-    column; at cluster scale write it once and partition-prune on it."""
-    ring = np.asarray(ring, dtype=float)
-    xs, ys = ring[:, 0], ring[:, 1]
-    e = edge_m(res)
-    q_lo = int(np.floor((K_Q_X * xs.min() - K_Q_Y * ys.max()) / e)) - 2
-    q_hi = int(np.ceil((K_Q_X * xs.max() - K_Q_Y * ys.min()) / e)) + 2
-    r_lo = int(np.floor((K_R_Y * ys.min()) / e)) - 2
-    r_hi = int(np.ceil((K_R_Y * ys.max()) / e)) + 2
-    nr = r_hi - r_lo + 1
-    cand = spark.range((q_hi - q_lo + 1) * nr).select(
-        (F.col("id") / nr).cast("long") + F.lit(q_lo),
-        (F.col("id") % nr) + F.lit(r_lo),
-    ).toDF("q", "r")
-    cx = (F.col("q").cast("double") + F.col("r").cast("double") * F.lit(0.5)) * F.lit(e * SQRT3)
-    cy = F.col("r").cast("double") * F.lit(e * 1.5)
-    inside = point_in_ring_col(cx, cy, ring)
-    return cand.where(inside).select(
-        F.shiftleft(F.lit(res).cast("long"), 56)
-        .bitwiseOR(F.shiftleft(F.col("q") + F.lit(OFF), 28))
-        .bitwiseOR(F.col("r") + F.lit(OFF))
-        .alias("hex_cell")
-    )
-
-
-def hex_center_sql(qi: str, ri: str, res: int) -> tuple[str, str]:
-    """SQL (cx, cy) cell-center expressions from integer axial (qi, ri) —
-    the single source for the center formula (oracles previously
-    re-derived it in three places; a drifted copy would silently break
-    the bit-identity the oracles prove)."""
-    e = edge_m(res)
-    return (
-        f"({lit_sql(e * SQRT3)} * ({qi} + ({ri}) * 0.5))",
-        f"({lit_sql(e * 1.5)} * ({ri}))",
-    )

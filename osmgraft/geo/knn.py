@@ -19,7 +19,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmgraft.geo.cells import GridSpec, kring_cells_col, with_cell
+from osmgraft.geo.cells import GridSpec, kring_cells_sql, with_cell
 
 
 def dwithin_semi_join(
@@ -106,7 +106,7 @@ def _expand_small(
         cells.withColumn(
             "_kcell",
             F.explode(
-                kring_cells_col(F.col("_scell_ix"), F.col("_scell_iy"), res, k)
+                F.expr(kring_cells_sql("_scell_ix", "_scell_iy", res, k, dialect="spark"))
             ),
         )
         .withColumn("_sx", F.col(sx))

@@ -57,7 +57,7 @@ class STRtree:
         cx = (boxes[:, 0] + boxes[:, 2]) / 2
         nslices = max(1, int(np.ceil(np.sqrt(n))))
         order = np.argsort(cx, kind="stable")
-        size = int(np.ceil(n / nslices))
+        size = max(1, int(np.ceil(n / nslices)))
         perm = []
         slice_bounds = []
         for s in range(0, n, size):
@@ -73,6 +73,11 @@ class STRtree:
         self.boxes = boxes[self.perm] if n else boxes
         self.slice_bounds = np.array(slice_bounds).reshape(-1, 4)
         self.slice_size = size if n else 0
+        # union bbox; (inf, inf, -inf, -inf) when empty, so nothing is in it
+        self.bbox = (
+            *boxes[:, :2].min(axis=0, initial=np.inf),
+            *boxes[:, 2:].max(axis=0, initial=-np.inf),
+        )
 
     def query_points(self, x: np.ndarray, y: np.ndarray):
         """Return (point_idx, ring_idx) candidate pairs (bbox hits)."""
@@ -196,8 +201,8 @@ def _ray_cast(ring: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
 
 def _edges(rings: list[np.ndarray]):
     """All edges of `rings` as flat arrays (x1, y1, x2, y2, ring position)."""
-    a = np.concatenate([r[:-1] for r in rings])
-    b = np.concatenate([r[1:] for r in rings])
+    a = np.concatenate([r[:-1] for r in rings] or [np.empty((0, 2))])
+    b = np.concatenate([r[1:] for r in rings] or [np.empty((0, 2))])
     pos = np.repeat(np.arange(len(rings)), [len(r) - 1 for r in rings])
     return a[:, 0], a[:, 1], b[:, 0], b[:, 1], pos
 
@@ -276,12 +281,12 @@ def _outer_border_cells(tree: STRtree, spec: GridSpec, res: int) -> np.ndarray:
     ray cast even when their open interior is uncrossed."""
     n = 1 << res
     gx, gy = np.divmod(np.arange(n * n), n)
-    lo, hi = tree.boxes[:, :2].min(axis=0), tree.boxes[:, 2:].max(axis=0)
+    x0, y0, x1, y1 = tree.bbox
     return (
-        ((gx == 0) & (lo[0] < spec.x0))
-        | ((gx == n - 1) & (hi[0] > spec.x1))
-        | ((gy == 0) & (lo[1] < spec.y0))
-        | ((gy == n - 1) & (hi[1] > spec.y1))
+        ((gx == 0) & (x0 < spec.x0))
+        | ((gx == n - 1) & (x1 > spec.x1))
+        | ((gy == 0) & (y0 < spec.y0))
+        | ((gy == n - 1) & (y1 > spec.y1))
     )
 
 
@@ -398,8 +403,6 @@ class PipIndex:
         self.res = res
         self.cellmap = cellmap
         self.any_boundary_cells = any_boundary_cells
-        # union bbox of the rings: no point outside it has an owner
-        self.bbox = (*tree.boxes[:, :2].min(axis=0), *tree.boxes[:, 2:].max(axis=0))
 
     @classmethod
     def build(
@@ -419,8 +422,8 @@ class PipIndex:
         if res > 8:
             # the cell map is a dense 4^res classification — ~1M rows at
             # res 10 stalls the driver for minutes (the round-1
-            # createDataFrame lesson). Finer grids should go executor-side
-            # (hexgrid.hex_polyfill_df pattern).
+            # createDataFrame lesson). Finer grids should classify their
+            # cells executor-side (a spark.range over the grid).
             raise ValueError(
                 f"pip_join: res={res} materializes a 4^{res}-cell driver "
                 "map; use res <= 8 or an executor-side cover"
@@ -441,7 +444,7 @@ class PipIndex:
     def covers(self, px: Column, py: Column) -> Column:
         """False (or NULL) where no ring can contain the point: NULL or NaN
         coordinates, or outside the rings' union bbox."""
-        x0, y0, x1, y1 = (float(v) for v in self.bbox)
+        x0, y0, x1, y1 = (float(v) for v in self.tree.bbox)
         return (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
 
 

@@ -17,7 +17,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osmgraft.geo.cells import GridSpec, grid_ix_col, grid_iy_col
+from osmgraft.geo.cells import GridSpec, grid_ix_sql, grid_iy_sql
 from osmgraft.geo.geometry import polygon_wkb
 
 
@@ -31,8 +31,8 @@ def cell_rollup(
 ) -> DataFrame:
     """Distributed per-cell aggregate: (ix, iy, n[, sum_value])."""
     keyed = points.select(
-        grid_ix_col(F.col(x), spec, res).alias("ix"),
-        grid_iy_col(F.col(y), spec, res).alias("iy"),
+        F.expr(grid_ix_sql(x, spec, res)).alias("ix"),
+        F.expr(grid_iy_sql(y, spec, res)).alias("iy"),
         *( [F.col(value).alias("_v")] if value else [] ),
     )
     aggs = [F.count("*").alias("n")]

@@ -20,7 +20,11 @@ exploits — osmgraft/geo/cells.py), and a cell range
 ⇒ bbox covers become min-max-prunable range predicates.
 
 Everything here is O(1) numpy passes per 4-bit Hilbert chunk (8 iterations
-for 30 levels) — no per-row Python.
+for 30 levels) — no per-row Python. Spark assigns cells through one path,
+the Arrow UDF over `cell_np` (`with_s2_cell`); the DuckDB oracle recomputes
+the same ids in SQL (contract_cells._s2_assign_cte). Work on assigned ids —
+parents (`s2_parent_sql`) and cover predicates (`s2_range_predicate`) — is
+SQL text that Spark parses and the oracles embed unchanged.
 
 Derivation is from the published algorithm (s2geometry docs; Hilbert
 lookup-table construction); no third-party s2 library exists in this
@@ -33,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -430,104 +434,11 @@ def with_s2_cell(
     return df.withColumn(out, s2_cell_udf(level)(F.col(lat), F.col(lng)))
 
 
-def s2_cell_col(lat: Column, lng: Column, level: int) -> Column:
-    """S2 cell id as a PURE JVM Column expression — no Python anywhere.
-
-    Same construction the DuckDB oracle uses (contract_cells._s2_assign_cte):
-    chart algebra (trig + CASE chains) for (face, i, j), then the Hilbert
-    walk as 8 unrolled element_at lookups into the 1024-entry ij→pos table,
-    which constant-folds to a single array Literal in codegen. Catalyst's
-    subexpression elimination computes the (face, i, j) chain once even
-    though 8 iterations reference it.
-
-    vs the Arrow UDF (s2_cell_udf): identical math in java.lang.Math
-    instead of numpy — measured BIT-IDENTICAL over 20M rows (equal modular
-    checksums) and on the fixtures (tests/test_cellindexes.py). Measured
-    throughput on this VM is ~0.8× the Arrow kernel (numpy's masked
-    vectorization beats the per-row CASE chains; Catalyst CSE does not
-    fully collapse the 16 references to the chart chain), so the UDF
-    remains the default. This form's value: zero Python-worker dependency,
-    and it fuses with adjacent JVM operators in whole-stage codegen.
-
-    Codegen caveats (the hex_polyfill janino lesson, extended): (a)
-    aggregating DIRECTLY through this expression fuses the whole chain
-    into the hash-agg stage and can overflow janino's generated class —
-    keep an exchange (repartition / checkpoint) between assignment and
-    any aggregate referencing it; (b) the expression TREE doubles per
-    Hilbert iteration (each iteration references the previous state
-    twice), so analysis+codegen cost ~10-15 s per compiled query — fine
-    for a long-running cluster job, wrong for interactive use (the Arrow
-    UDF has no such cost)."""
-    phi = F.radians(lat)
-    theta = F.radians(lng)
-    cosphi = F.cos(phi)
-    x = cosphi * F.cos(theta)
-    y = cosphi * F.sin(theta)
-    z = F.sin(phi)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face = (
-        F.when((ax >= ay) & (ax >= az), F.when(x < 0, 3).otherwise(0))
-        .when(ay >= az, F.when(y < 0, 4).otherwise(1))
-        .otherwise(F.when(z < 0, 5).otherwise(2))
-    )
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
-
-    def st(w: Column) -> Column:
-        return F.when(w >= 0, 0.5 * F.sqrt(1 + 3 * w)).otherwise(
-            1 - 0.5 * F.sqrt(1 - 3 * w)
-        )
-
-    max_ij = (1 << MAX_LEVEL) - 1
-
-    def ij(s: Column) -> Column:
-        raw = F.floor(F.lit(float(1 << MAX_LEVEL)) * s).cast("long")
-        return F.least(F.greatest(raw, F.lit(0)), F.lit(max_ij))
-
-    i = ij(st(u))
-    j = ij(st(v))
-    # direct array Literal (F.lit(list)) — a CreateArray of 1024 foldable
-    # children costs ~1 min of plan-time constant folding; the Literal is
-    # free
-    lut = F.lit([int(val) for val in _LOOKUP_POS])
-    bits = face.cast("long").bitwiseAND(F.lit(1))
-    # shifts, not multiplies: faces 4/5 reach bit 62 and the final leaf
-    # step touches bit 63 — signed multiply would overflow where the
-    # uint64 kernel wraps; shiftleft wraps bitwise identically
-    n = F.shiftleft(face.cast("long"), 60)
-    for k in range(7, -1, -1):
-        idx = (
-            bits
-            + F.shiftright(i, k * 4).bitwiseAND(F.lit(15)) * F.lit(64)
-            + F.shiftright(j, k * 4).bitwiseAND(F.lit(15)) * F.lit(4)
-        )
-        val = F.element_at(lut, (idx + 1).cast("int")).cast("long")
-        n = n.bitwiseOR(F.shiftleft(F.shiftright(val, 2), k * 8))
-        bits = val.bitwiseAND(F.lit(3))
-    leaf = F.shiftleft(n, 1).bitwiseOR(F.lit(1))
-    lsb = lsb_for_level(level)
-    return leaf.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
-
-
-def s2_parent_col(cell: Column, parent_level: int) -> Column:
-    """Parent cell id — pure JVM bit ops (no Python), so rollups from a
+def s2_parent_sql(cell: str, parent_level: int) -> str:
+    """Parent cell id as SQL bit ops (parent_np's twin), so rollups from a
     fine indexed level to coarser tiles stay in whole-stage codegen."""
     lsb = lsb_for_level(parent_level)
-    return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
+    return f"((({cell}) & ({-lsb})) | {lsb})"
 
 
 def merge_ranges(cover: np.ndarray) -> list[tuple[int, int]]:
@@ -551,52 +462,31 @@ def merge_ranges(cover: np.ndarray) -> list[tuple[int, int]]:
     return out
 
 
-def s2_range_predicate(cell: Column, cover: np.ndarray, max_ranges: int = 64) -> Column:
-    """Predicate `cell within any cover member's descendant range`.
+def s2_range_predicate(cell: str, cover: np.ndarray, max_ranges: int = 64) -> str:
+    """SQL predicate `cell within any cover member's descendant range`.
 
     Curve-contiguous cover cells are merged first; the result is an OR of
-    BETWEENs on the sorted cell column — min-max prunable at the parquet
+    range tests on the sorted cell column — min-max prunable at the parquet
     scan. If the merged cover is still wide (> max_ranges intervals, where
     a deep OR chain would bloat the plan), falls back to snapping the cell
     to the cover's level (pure bit ops) + a hash-set IN — not scan-prunable
     but O(1) per row and flat in the plan."""
     if len(cover) == 0:
-        return F.lit(False)
+        return "FALSE"
     ranges = merge_ranges(cover)
     if len(ranges) <= max_ranges:
-        pred = None
-        for a, b in ranges:
-            c = cell.between(F.lit(a), F.lit(b))
-            pred = c if pred is None else pred | c
-        return pred
+        return " OR ".join(f"(({cell}) >= {a} AND ({cell}) <= {b})" for a, b in ranges)
     # The wide-cover fallback must honor mixed-level covers (normalize_cover
     # emits them): snapping every cell to one member's level silently excludes
     # cells under coarser members. Group cover ids by level and OR one
-    # snapped-isin predicate per level.
+    # snapped IN predicate per level.
     cover_arr = np.asarray(cover)
     levels = level_np(cover_arr)
-    pred = None
-    for lvl in np.unique(levels):
-        members = cover_arr[levels == lvl]
-        c = s2_parent_col(cell, int(lvl)).isin(*[int(v) for v in members])
-        pred = c if pred is None else pred | c
-    return pred
-
-
-def cover_polygon(ring_latlng: np.ndarray, level: int) -> np.ndarray:
-    """Cells at `level` whose center lies inside a lat/lng polygon (S2
-    RegionCoverer-style polyfill, center-containment rule). Candidates come
-    from the polygon's bbox cover (single-face, UK-scale); containment is
-    the engine's even-odd ray cast treating (lng, lat) as planar — valid
-    for the sub-face windows this engine targets."""
-    from osmgraft.geo.pip import _ray_cast
-
-    ring = np.asarray(ring_latlng, dtype=float)  # columns: (lat, lng)
-    lat, lng = ring[:, 0], ring[:, 1]
-    cand = cover_rect(lat.min(), lat.max(), lng.min(), lng.max(), level)
-    clat, clng = cell_center_latlng(cand)
-    inside = _ray_cast(np.column_stack([lng, lat]), clng, clat)
-    return np.sort(cand[inside])
+    return " OR ".join(
+        f"({s2_parent_sql(cell, int(lvl))} IN "
+        f"({', '.join(str(int(v)) for v in cover_arr[levels == lvl])}))"
+        for lvl in np.unique(levels)
+    )
 
 
 def normalize_cover(cover: np.ndarray) -> np.ndarray:

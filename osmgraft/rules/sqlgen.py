@@ -191,23 +191,3 @@ def keywords_sql(blob: str, keywords: list[str], *, dialect: str) -> str:
     if dialect == "spark":
         return f"filter(array({lits}), _kw -> contains({blob}, _kw))"
     return f"list_filter([{lits}], _kw -> contains({blob}, _kw))"
-
-
-def morton_sql(ix_expr: str, iy_expr: str) -> str:
-    """Morton/Z-order interleave as portable SQL bit arithmetic — the exact
-    mirror of geo.cells.morton_col, so cell ids can be oracle-checked."""
-
-    def spread(e: str) -> str:
-        masks = (
-            (16, 0x0000FFFF0000FFFF),
-            (8, 0x00FF00FF00FF00FF),
-            (4, 0x0F0F0F0F0F0F0F0F),
-            (2, 0x3333333333333333),
-            (1, 0x5555555555555555),
-        )
-        out = f"CAST({e} AS BIGINT)"
-        for shift, mask in masks:
-            out = f"(({out} | ({out} << {shift})) & {mask})"
-        return out
-
-    return f"({spread(ix_expr)} | ({spread(iy_expr)} << 1))"

@@ -112,11 +112,11 @@ def streaming_hex_tile_counts(
     watermark — identical plan shape to streaming_tile_counts; the hex
     assignment is a pure JVM expression so it is streaming-safe with no
     extra state."""
-    from osmgraft.geo.hexgrid import hex_cell_col
+    from osmgraft.geo.hexgrid import hex_cell_sql
 
     feats = extract_features(pages)
     cells = feats.where(F.col("x").isNotNull()).withColumn(
-        "hex_cell", hex_cell_col(F.col("x"), F.col("y"), res)
+        "hex_cell", F.expr(hex_cell_sql("x", "y", res))
     )
     return (
         cells.withWatermark("warc_ts", watermark)

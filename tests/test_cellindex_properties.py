@@ -67,13 +67,11 @@ def test_hex_roundtrip_and_duckdb_equivalence(pts, res):
     # containment: point within circumradius of its cell center
     cx, cy = hg.center_np(ids)
     assert (np.hypot(cx - x, cy - y) <= hg.edge_m(res) * (1 + 1e-9) + 1e-6).all()
-    # DuckDB recomputes identical ids from the generated SQL
-    pre, qf, rf = hg.hex_qr_sql("x", "y", res)
-    pack = hg.hex_round_pack_sql(qf, rf, res)
+    # DuckDB recomputes identical ids from the emitted SQL
     con = duckdb.connect()
     con.register("pts", pd.DataFrame({"x": x, "y": y}))
     got = (
-        con.execute(f"WITH g AS ({pre} FROM pts) SELECT {pack} AS id FROM g")
+        con.execute(f"SELECT {hg.hex_cell_sql('x', 'y', res)} AS id FROM pts")
         .df()["id"]
         .to_numpy()
     )

@@ -1,9 +1,8 @@
-"""Property tests for the S2 and H3-style hex cell indexes.
+"""Property tests for the S2, H3-style hex and Z-order cell indexes.
 
-S2's Hilbert traversal has no SQL oracle (contract entry is rows-only), so
-this suite carries its correctness burden: structural invariants the cell-id
-format guarantees, plus cross-backend bit-equivalence for the hex grid
-(JVM Column vs numpy vs DuckDB SQL)."""
+Structural invariants the cell-id formats guarantee, plus one cross-engine
+test: each index's SQL-text emitter runs unchanged in Spark and in DuckDB,
+and both equal the numpy twin bit for bit."""
 
 from __future__ import annotations
 
@@ -13,8 +12,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osmgraft.geo import cells
 from osmgraft.geo import hexgrid as hg
 from osmgraft.geo import s2
+from osmgraft.geo.geometry import inv_mercator_np, inv_mercator_sql, mercator_np, mercator_sql
 
 RNG = np.random.default_rng(42)
 N = 5000
@@ -123,31 +124,18 @@ def test_s2_spark_udf_matches_numpy(spark):
     assert (np.sort(got) == np.sort(s2.cell_np(LAT[:1000], LNG[:1000], 12))).all()
 
 
-def test_s2_parent_col_matches_numpy(spark):
-    ids = s2.cell_np(LAT[:500], LNG[:500], 12)
-    sdf = spark.createDataFrame(pd.DataFrame({"c": ids}))
-    got = (
-        sdf.select(s2.s2_parent_col(F.col("c"), 8).alias("p"))
-        .toPandas()["p"]
-        .to_numpy()
-    )
-    assert (np.sort(got) == np.sort(s2.parent_np(ids, 8))).all()
-
-
 # ---------------------------------------------------------------------------
-# Hex grid: tri-backend bit-equivalence + invariants
+# Hex grid: numpy vs SQL text + invariants
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("res", [7, 8, 9, 10])
 def test_hex_numpy_vs_duckdb(res):
     ids = hg.cell_np(X, Y, res)
-    pre, qf, rf = hg.hex_qr_sql("x", "y", res)
-    pack = hg.hex_round_pack_sql(qf, rf, res)
     con = duckdb.connect()
     con.register("pts", pd.DataFrame({"x": X, "y": Y}))
     got = (
-        con.execute(f"WITH g AS ({pre} FROM pts) SELECT {pack} AS id FROM g")
+        con.execute(f"SELECT {hg.hex_cell_sql('x', 'y', res)} AS id FROM pts")
         .df()["id"]
         .to_numpy()
     )
@@ -159,37 +147,12 @@ def test_hex_jvm_vs_numpy(spark):
     sdf = spark.createDataFrame(pdf)
     for res in (7, 9):
         got = (
-            sdf.select("i", hg.hex_cell_col(F.col("x"), F.col("y"), res).alias("c"))
+            sdf.select("i", F.expr(hg.hex_cell_sql("x", "y", res)).alias("c"))
             .orderBy("i")
             .toPandas()["c"]
             .to_numpy()
         )
         assert (got == hg.cell_np(X, Y, res)).all()
-
-
-def test_hex_parent_col_vs_numpy(spark):
-    ids = hg.cell_np(X[:1000], Y[:1000], 9)
-    sdf = spark.createDataFrame(pd.DataFrame({"i": np.arange(1000), "c": ids}))
-    got = (
-        sdf.select("i", hg.hex_parent_col(F.col("c"), 9, 7).alias("p"))
-        .orderBy("i")
-        .toPandas()["p"]
-        .to_numpy()
-    )
-    assert (got == hg.parent_np(ids, 7)).all()
-
-
-def test_hex_kring_col_vs_numpy(spark):
-    ids = hg.cell_np(X[:200], Y[:200], 8)
-    sdf = spark.createDataFrame(pd.DataFrame({"i": np.arange(200), "c": ids}))
-    got = (
-        sdf.select("i", hg.hex_kring_col(F.col("c"), 8, 2).alias("kr"))
-        .orderBy("i")
-        .toPandas()["kr"]
-    )
-    want = hg.kring_np(ids, 2)
-    for row, w in zip(got, want):
-        assert sorted(row) == sorted(w.tolist())
 
 
 def test_hex_cell_contains_point():
@@ -246,7 +209,7 @@ def test_hex_hotspot_salted_rollup_matches_plain(spark):
     ys = np.where(np.arange(n) % 10 < 8, hot_y, Y[:n] if len(Y) >= n else hot_y)
     pdf = pd.DataFrame({"x": xs[:n], "y": ys[:n], "v": np.arange(n) % 97})
     sdf = spark.createDataFrame(pdf).withColumn(
-        "cell", hg.hex_cell_col(F.col("x"), F.col("y"), 8)
+        "cell", F.expr(hg.hex_cell_sql("x", "y", 8))
     )
     plain = {
         r["cell"]: (r["n"], r["s"])
@@ -268,46 +231,156 @@ def test_hex_hotspot_salted_rollup_matches_plain(spark):
     assert max(v[0] for v in plain.values()) > 0.5 * n  # skew was real
 
 
-def test_hex_polyfill_center_rule():
-    ring = np.array(
-        [[0, 0], [20000, 0], [20000, 10000], [10000, 10000],
-         [10000, 20000], [0, 20000], [0, 0]], dtype=float
-    )
-    ids = hg.polyfill_np(ring, 8)
-    assert len(ids) > 300
+# ---------------------------------------------------------------------------
+# One emitter per index: Spark and DuckDB run the same SQL text, and both
+# equal the numpy twin bit for bit (libm outputs: see _LIBM)
+# ---------------------------------------------------------------------------
+
+_SPEC = cells.GridSpec()
+_R = np.random.default_rng(10)
+_N = 20_000
+
+
+def _ties() -> tuple[np.ndarray, np.ndarray]:
+    """Exact half-cell ties: Z-order grid lines at res 7 (some past the
+    extent), hex cell vertices and midpoints between neighbouring hex
+    centres at res 8."""
+    w = _SPEC.cell_width(7)
+    gx = _SPEC.x0 + w * _R.integers(-3, 132, 1000).astype(float)
+    gy = _SPEC.y0 + w * _R.integers(-3, 132, 1000).astype(float)
+    ids = hg.cell_np(_R.uniform(-1e5, 8e5, 500), _R.uniform(-1e5, 8e5, 500), 8)
     cx, cy = hg.center_np(ids)
-    in_l = ((cx >= 0) & (cx < 20000) & (cy >= 0) & (cy < 10000)) | (
-        (cx >= 0) & (cx < 10000) & (cy >= 10000) & (cy < 20000)
+    nx, ny = hg.center_np(hg.kring_np(ids, 1)[:, 1])
+    vx, vy = hg.boundary_np(ids)[:, 0].T
+    return (
+        np.concatenate([gx, _R.uniform(-1e5, 8e5, 1000), (cx + nx) / 2, vx]),
+        np.concatenate([_R.uniform(-1e5, 8e5, 1000), gy, (cy + ny) / 2, vy]),
     )
-    assert in_l.all()
-    # exhaustive: membership of a point's cell == its cell center in polygon
-    px = RNG.uniform(0, 20000, 5000)
-    py = RNG.uniform(0, 20000, 5000)
-    pc = hg.cell_np(px, py, 8)
-    ccx, ccy = hg.center_np(pc)
-    center_in = ((ccx >= 0) & (ccx < 20000) & (ccy >= 0) & (ccy < 10000)) | (
-        (ccx >= 0) & (ccx < 10000) & (ccy >= 10000) & (ccy < 20000)
-    )
-    assert (np.isin(pc, ids) == center_in).all()
-    # count ≈ polygon area / hex area (within boundary jitter)
-    assert abs(len(ids) - 3e8 / hg.hex_area_m2(8)) < 0.15 * len(ids)
 
 
-def test_s2_cover_polygon_center_rule():
-    # concave L in lat/lng space over the UK window
-    ring = np.array(
-        [[51.0, -2.0], [53.5, -2.0], [53.5, -0.5], [52.2, -0.5],
-         [52.2, 1.0], [51.0, 1.0], [51.0, -2.0]], dtype=float
+_TX, _TY = _ties()
+# seeded points past the grid extent on every side, then the ties
+_PX = np.concatenate([_R.uniform(-1e5, 8e5, _N), _TX])
+_PY = np.concatenate([_R.uniform(-1e5, 8e5, _N), _TY])
+_LAT = _R.uniform(-85.0, 85.0, _N)
+_LNG = _R.uniform(-180.0, 180.0, _N)
+
+
+def _zorder_kring_np(ix: np.ndarray, iy: np.ndarray, res: int, k: int) -> list:
+    n = 1 << res
+    out = []
+    for a, b in zip(ix.tolist(), iy.tolist()):
+        jx = np.repeat(np.arange(a - k, a + k + 1), 2 * k + 1)
+        jy = np.tile(np.arange(b - k, b + k + 1), 2 * k + 1)
+        on = (jx >= 0) & (jx < n) & (jy >= 0) & (jy < n)
+        m = cells.morton_np(jx[on], jy[on])
+        out.append(((m << np.uint64(cells.RES_BITS)) | np.uint64(res)).astype(np.int64))
+    return out
+
+
+# outputs that go through tan/ln/exp/atan: the JVM, DuckDB's libm and
+# numpy's SIMD kernels each round those their own way (apart on 5-40 % of
+# rows), so they agree to two ulps of the column's largest magnitude
+_LIBM = {("mercator", 1), ("inv_mercator", 0)}
+
+
+def _case(name: str):
+    """(input columns, dialect -> output SQL expressions, numpy outputs)."""
+    xy = {"x": _PX, "y": _PY}
+    if name.startswith("zorder_cell"):
+        res = int(name.split("_")[-1])
+        return xy, lambda d: [cells.cell_sql("x", "y", _SPEC, res)], [
+            cells.cell_np(_PX, _PY, _SPEC, res)
+        ]
+    if name == "zorder_parent":
+        fine = cells.cell_np(_PX, _PY, _SPEC, 12)
+        return {"c": fine}, lambda d: [cells.parent_cell_sql("c", 12, 6)], [
+            cells.cell_np(_PX, _PY, _SPEC, 6)
+        ]
+    if name == "zorder_kring":
+        ix, iy = cells.grid_ix_np(_PX, _SPEC, 7), cells.grid_iy_np(_PY, _SPEC, 7)
+        return (
+            {"ix": ix, "iy": iy},
+            lambda d: [cells.kring_cells_sql("ix", "iy", 7, 2, dialect=d)],
+            [_zorder_kring_np(ix, iy, 7, 2)],
+        )
+    if name.startswith("hex_cell"):
+        res = int(name.split("_")[-1])
+        return xy, lambda d: [hg.hex_cell_sql("x", "y", res)], [hg.cell_np(_PX, _PY, res)]
+    if name == "hex_center":
+        ids = hg.cell_np(_PX, _PY, 8)
+        return {"c": ids}, lambda d: list(hg.hex_center_sql("c", 8)), list(hg.center_np(ids))
+    if name == "hex_parent":
+        ids = hg.cell_np(_PX, _PY, 9)
+        return {"c": ids}, lambda d: [hg.hex_parent_sql("c", 9, 7)], [hg.parent_np(ids, 7)]
+    if name == "hex_kring":
+        ids = hg.cell_np(_PX, _PY, 8)
+        return (
+            {"c": ids},
+            lambda d: [hg.hex_kring_sql("c", 2, dialect=d)],
+            [list(hg.kring_np(ids, 2))],
+        )
+    if name == "mercator":
+        return (
+            {"lat": _LAT, "lng": _LNG},
+            lambda d: list(mercator_sql("lat", "lng")),
+            list(mercator_np(_LAT, _LNG)),
+        )
+    if name == "inv_mercator":
+        mx, my = mercator_np(_LAT, _LNG)
+        lat, lng = inv_mercator_np(mx, my)
+        assert np.allclose(lat, _LAT, atol=1e-9) and np.allclose(lng, _LNG, atol=1e-9)
+        return {"x": mx, "y": my}, lambda d: list(inv_mercator_sql("x", "y")), [lat, lng]
+    assert name == "s2_parent"
+    ids = s2.cell_np(_LAT, _LNG, 12)
+    return {"c": ids}, lambda d: [s2.s2_parent_sql("c", 8)], [s2.parent_np(ids, 8)]
+
+
+_CASES = [
+    *(f"zorder_cell_{r}" for r in (0, 3, 7, 12, 26)),
+    "zorder_parent",
+    "zorder_kring",
+    *(f"hex_cell_{r}" for r in (7, 8, 9)),
+    "hex_center",
+    "hex_parent",
+    "hex_kring",
+    "mercator",
+    "inv_mercator",
+    "s2_parent",
+]
+
+
+def _bits(v) -> list:
+    """Exact comparison key: float64 bit patterns, int64 values, and
+    arrays element by element."""
+    if len(v) and np.ndim(v[0]):
+        return [_bits(e) for e in v]
+    a = np.asarray(v)
+    return (a.astype(np.float64).view(np.int64) if a.dtype.kind == "f" else a.astype(np.int64)).tolist()
+
+
+@pytest.mark.parametrize("name", _CASES)
+def test_emitter_spark_duckdb_numpy(spark, name):
+    cols, sql, want = _case(name)
+    pdf = pd.DataFrame({"i": np.arange(len(next(iter(cols.values())))), **cols})
+    outs = [f"o{k}" for k in range(len(want))]
+    got_spark = (
+        spark.createDataFrame(pdf)
+        .selectExpr("i", *(f"{e} AS {o}" for e, o in zip(sql("spark"), outs)))
+        .orderBy("i")
+        .toPandas()
     )
-    cover = s2.cover_polygon(ring, 10)
-    assert len(cover) > 50
-    clat, clng = s2.cell_center_latlng(cover)
-    in_l = ((clat >= 51.0) & (clat <= 53.5) & (clng >= -2.0) & (clng <= -0.5)) | (
-        (clat >= 51.0) & (clat <= 52.2) & (clng >= -2.0) & (clng <= 1.0)
-    )
-    assert in_l.all()
-    # subset of the bbox cover
-    assert np.isin(cover, s2.cover_rect(51.0, 53.5, -2.0, 1.0, 10)).all()
+    con = duckdb.connect()
+    con.register("t", pdf)
+    sel = ", ".join(f"{e} AS {o}" for e, o in zip(sql("duckdb"), outs))
+    got_duck = con.execute(f"SELECT i, {sel} FROM t ORDER BY i").df()
+    for k, (o, w) in enumerate(zip(outs, want)):
+        for engine, got in (("spark", got_spark[o]), ("duckdb", got_duck[o])):
+            if (name, k) in _LIBM:
+                tol = 2 * np.spacing(np.abs(w).max())
+                assert np.abs(got.to_numpy() - w).max() <= tol, f"{engine} {o}"
+            else:
+                assert _bits(got.tolist()) == _bits(w), f"{engine} {o}"
 
 
 def test_s2_normalize_cover_equivalent_and_smaller():
@@ -386,11 +459,11 @@ def test_s2_range_predicate_mixed_level_fallback(spark):
     ids = s2.cell_np(LAT, LNG, 12)
     sdf = spark.createDataFrame(pd.DataFrame({"c": ids}))
     via_ranges = (
-        sdf.select(s2.s2_range_predicate(F.col("c"), cover, max_ranges=10**6).alias("m"))
+        sdf.select(F.expr(s2.s2_range_predicate("c", cover, max_ranges=10**6)).alias("m"))
         .toPandas()["m"].to_numpy()
     )
     via_fallback = (
-        sdf.select(s2.s2_range_predicate(F.col("c"), cover, max_ranges=0).alias("m"))
+        sdf.select(F.expr(s2.s2_range_predicate("c", cover, max_ranges=0)).alias("m"))
         .toPandas()["m"].to_numpy()
     )
     assert via_fallback.any() and not via_fallback.all()
@@ -426,25 +499,6 @@ def test_s2_kring_k_for_radius():
         np.array([2]), np.array([10]), np.array([1 << 20])), 9)
     with _pytest.raises(ValueError):
         s2.kring_k_for_radius(edge, 25_000.0)
-
-
-def test_s2_cell_col_jvm_matches_numpy(spark):
-    """Round-2 third backend: the pure-JVM S2 expression (element_at walk
-    over the constant-folded lookup array) must match the numpy kernel
-    bit-for-bit across levels on UK-window points."""
-    rng = np.random.default_rng(21)
-    lat = rng.uniform(49.0, 60.0, 20000)
-    lng = rng.uniform(-8.0, 2.0, 20000)
-    sdf = spark.createDataFrame(pd.DataFrame({"lat": lat, "lng": lng}))
-    # one level: each distinct level pays ~1 min of plan-time constant
-    # folding over the 1024-literal lookup array (documented caveat);
-    # level 12 exercises every chunk of the walk
-    df = sdf.select(s2.s2_cell_col(F.col("lat"), F.col("lng"), 12).alias("c"))
-    got = df.toPandas()["c"].to_numpy()
-    assert (np.sort(got) == np.sort(s2.cell_np(lat, lng, 12))).all()
-    # plan stays JVM: no Python eval anywhere
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
 
 
 def test_s2_sql_oracle_all_faces():

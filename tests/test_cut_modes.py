@@ -88,3 +88,17 @@ def test_cut_is_the_only_materialization():
         if pattern.search(line)
     ]
     assert hits == [], "materialize through osmgraft.runtime.cut.cut"
+
+
+def test_geo_cell_ids_have_no_column_backend():
+    """Cell ids are SQL text (one emitter per index, parsed by Spark and
+    embedded by the DuckDB oracles); a Column bit-op builder under geo/
+    would be a second backend for the same formula."""
+    pattern = re.compile(r"F\.shiftleft|F\.shiftright|\.bitwiseOR|\.bitwiseAND")
+    hits = [
+        f"{path.relative_to(OSMGRAFT)}:{n}"
+        for path in sorted((OSMGRAFT / "geo").rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == [], "emit cell-id bit arithmetic as SQL text"

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osmgraft.geo.cells import GridSpec, cell_col, cell_np, parent_cell_col, with_cell
+from osmgraft.geo.cells import GridSpec, cell_sql, parent_cell_sql
 from osmgraft.geo.geometry import (
     XY_TYPE,
     parse_wkb,
@@ -25,32 +25,15 @@ from osmgraft.geo.pip import STRtree, _ray_cast, pip_join
 SPEC = GridSpec()
 
 
-def test_cell_jvm_numpy_parity(spark):
-    rng = np.random.default_rng(7)
-    x = rng.uniform(SPEC.x0, SPEC.x1, 5000)
-    y = rng.uniform(SPEC.y0, SPEC.y1, 5000)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(x, y)], "x double, y double"
-    )
-    for res in (0, 3, 7, 12, 26):
-        got = np.array(
-            [r[0] for r in df.select(cell_col(F.col("x"), F.col("y"), SPEC, res)).collect()]
-        )
-        exp = cell_np(x, y, SPEC, res)
-        assert (got == exp).all(), f"res {res}"
-
-
 def test_cell_parent_consistency(spark):
     rng = np.random.default_rng(8)
     pts = [(float(a), float(b)) for a, b in
            zip(rng.uniform(0, 7e5, 500), rng.uniform(0, 7e5, 500))]
     df = spark.createDataFrame(pts, "x double, y double")
-    fine = cell_col(F.col("x"), F.col("y"), SPEC, 12)
-    coarse_direct = cell_col(F.col("x"), F.col("y"), SPEC, 6)
-    coarse_via_parent = parent_cell_col(fine, 12, 6)
-    bad = df.select(
-        (coarse_direct == coarse_via_parent).alias("ok")
-    ).where("NOT ok").count()
+    fine = cell_sql("x", "y", SPEC, 12)
+    coarse_direct = cell_sql("x", "y", SPEC, 6)
+    coarse_via_parent = parent_cell_sql(fine, 12, 6)
+    bad = df.where(f"{coarse_direct} != {coarse_via_parent}").count()
     assert bad == 0
 
 
@@ -224,51 +207,6 @@ def test_pip_join_left_semantics(spark):
     assert rows == {(1, 7), (2, None)}
     rows = {(r.pid, r.boundary_id) for r in pip_join(p, b, how="inner").collect()}
     assert rows == {(1, 7)}
-
-
-def test_mercator_bridge_jvm_numpy_sql(spark):
-    """lat/lng -> EPSG:3857 must agree bit-for-bit across the JVM Column,
-    numpy, and DuckDB-SQL backends, and invert correctly (reference CRS,
-    05_import_data.sh:131)."""
-    import duckdb
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from osmgraft.geo.geometry import (
-        inv_mercator_cols,
-        mercator_cols,
-        mercator_np,
-        mercator_sql,
-    )
-
-    rng = np.random.default_rng(3)
-    lat = rng.uniform(-85.0, 85.0, 2000)
-    lng = rng.uniform(-180.0, 180.0, 2000)
-    nx, ny = mercator_np(lat, lng)
-
-    sdf = spark.createDataFrame(pd.DataFrame({"i": np.arange(2000), "lat": lat, "lng": lng}))
-    xc, yc = mercator_cols(F.col("lat"), F.col("lng"))
-    out = sdf.select("i", xc.alias("x"), yc.alias("y")).orderBy("i").toPandas()
-    assert np.allclose(out.x.to_numpy(), nx, rtol=0, atol=1e-6)
-    assert np.allclose(out.y.to_numpy(), ny, rtol=0, atol=1e-6)
-
-    xs, ys = mercator_sql("lat", "lng")
-    con = duckdb.connect()
-    con.register("g", pd.DataFrame({"lat": lat, "lng": lng}))
-    d = con.execute(f"SELECT {xs} AS x, {ys} AS y FROM g").df()
-    assert np.allclose(d.x.to_numpy(), nx, rtol=0, atol=1e-6)
-    assert np.allclose(d.y.to_numpy(), ny, rtol=0, atol=1e-6)
-
-    la, lo = inv_mercator_cols(F.col("x"), F.col("y"))
-    back = (
-        sdf.select("i", xc.alias("x"), yc.alias("y"))
-        .select("i", la.alias("lat"), lo.alias("lng"))
-        .orderBy("i")
-        .toPandas()
-    )
-    assert np.allclose(back.lat.to_numpy(), lat, atol=1e-9)
-    assert np.allclose(back.lng.to_numpy(), lng, atol=1e-9)
 
 
 def test_ray_cast_big_boundary_banded_path():
@@ -501,3 +439,16 @@ def test_pip_join_matches_strtree(spark, shape, res):
     assert (got == first).all(), np.flatnonzero(got != first)[:10]
     inner = pip_join(pts, how="inner", index=index).select("pid", "boundary_id").collect()
     assert sorted((r[0], r[1]) for r in inner) == sorted(zip(pi.tolist(), ids[ri].tolist()))
+
+
+def test_pip_join_empty_boundary_set(spark):
+    """No boundaries: `inner` returns no rows and `left` keeps every point
+    with a NULL owner (the STR packing, the union bbox and the border
+    cells all take an empty ring list)."""
+    pts = spark.createDataFrame(
+        [(1, 10.0, 20.0), (2, -5e4, 9e5), (3, None, 1.0)], "pid long, x double, y double"
+    )
+    bounds = spark.createDataFrame([], "boundary_id long, polygon_wkb binary")
+    assert pip_join(pts, bounds, how="inner").count() == 0
+    left = pip_join(pts, bounds, how="left").select("pid", "boundary_id").collect()
+    assert sorted(map(tuple, left)) == [(1, None), (2, None), (3, None)]

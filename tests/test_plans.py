@@ -160,22 +160,6 @@ def test_s2_bbox_refine_single_udf_pass(spark):
     assert "Filter" in plan
 
 
-def test_hex_polyfill_df_is_executor_side(spark):
-    """Distributed polyfill must generate candidates via Range (executor-
-    side), never a driver-materialized LocalTableScan, and stay JVM-only."""
-    import numpy as np
-
-    from osmgraft.geo.hexgrid import hex_polyfill_df
-
-    ring = np.array(
-        [[0, 0], [50000, 0], [50000, 50000], [0, 50000], [0, 0]], dtype=float
-    )
-    plan = plan_of(hex_polyfill_df(spark, ring, 8))
-    assert "Range" in plan
-    assert "LocalTableScan" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_coverage_report_broadcasts_known_side(spark):
     """Round-2 regression (VERDICT r1 item 2): the known-supplier coverage
     join must broadcast the 18-row known side (BuildLeft) and stream the

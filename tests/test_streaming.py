@@ -103,7 +103,7 @@ def test_streaming_scored_counts(spark, pages_dir, tmp_path):
 
 
 def test_streaming_hex_tile_counts_equal_batch(spark, pages_dir, tmp_path):
-    from osmgraft.geo.hexgrid import hex_cell_col
+    from osmgraft.geo.hexgrid import hex_cell_sql
     from osmgraft.streaming import streaming_hex_tile_counts
 
     stream = read_pages_stream(spark, pages_dir, max_files=2)
@@ -117,7 +117,7 @@ def test_streaming_hex_tile_counts_equal_batch(spark, pages_dir, tmp_path):
     }
     feats = extract_features(spark.read.parquet(pages_dir))
     cells = feats.where(F.col("x").isNotNull()).withColumn(
-        "hex_cell", hex_cell_col(F.col("x"), F.col("y"), 7)
+        "hex_cell", F.expr(hex_cell_sql("x", "y", 7))
     )
     exp = {
         (r.ws, r.hex_cell): r.n
