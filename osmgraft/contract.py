@@ -1690,12 +1690,12 @@ def pip_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def length_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship full-scan aggregate: per-kind SUM(ST_Length)
     over line features (verify_import.py:336-344, 12.95 s / 31.7 M rows on
-    the PG backend). Lines are per-user event tracks assembled executor-side
-    into LINESTRING WKB (one groupBy shuffle), measured by the vectorized
-    planar length kernel (geo/geometry.py:130 _length_udf), then rolled up
-    by kind. The oracle recomputes every segment with LAG arithmetic —
-    equality proves WKB assembly + kernel against pure SQL."""
-    from osmgraft.geo.geometry import planar_length_col
+    the PG backend). Lines are per-user event tracks sorted into a
+    coordinate array (one groupBy shuffle), measured by the planar length
+    SQL (geo/geometry.path_length_sql), then rolled up by kind. The oracle
+    recomputes every segment with LAG arithmetic — equality proves the
+    array assembly and the length fold against window SQL."""
+    from osmgraft.geo.geometry import path_length_sql
 
     ev = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -1705,25 +1705,7 @@ def length_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("event_id", "x", "y"))).alias("pts"),
         F.min_by("event_type", "event_id").alias("kind"),
     )
-
-    @F.pandas_udf("binary")
-    def _linestring(pts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from osmgraft.geo.geometry import linestring_wkb
-
-        return pd.Series(
-            [
-                linestring_wkb(
-                    np.array([[p["x"], p["y"]] for p in lst], dtype=float)
-                )
-                for lst in pts
-            ]
-        )
-
-    measured = tracks.withColumn("wkb", _linestring(F.col("pts"))).withColumn(
-        "track_len", planar_length_col("wkb")
-    )
+    measured = tracks.withColumn("track_len", F.expr(path_length_sql("pts")))
     return (
         measured.groupBy("kind")
         .agg(
@@ -1775,17 +1757,18 @@ def length_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wkb_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geometry validity audit (reference verify_import.py:223-231 runs
     ST_IsValid counts as an import-verification step; round-3 gap-close).
-    Per-user rings are assembled into polygon WKB with deliberately
+    Per-user rings are assembled as coordinate arrays with deliberately
     degenerate cases (ring left unclosed for user_id%7==0, too few points
     for short rings, a NaN coordinate for user_id%11==0, naturally
-    collinear zero-area tracks) and classified by the vectorized validity
-    kernel (geo/geometry.wkb_validity_col — parse, finite, closure, point
-    count, shoelace area). The oracle recomputes every check from the
-    construction parameters in pure SQL with the same precedence —
-    equality proves the WKB bytes round-trip every defect class."""
+    collinear zero-area tracks) and classified by the validity SQL with
+    polygon semantics (geo/geometry.xy_validity_sql — finite, point count,
+    closure, shoelace area; the twin of wkb_validity_reason). The oracle
+    recomputes every check from the construction parameters in pure SQL
+    with the same precedence — equality proves the array assembly and the
+    SQL reach every defect class."""
     from pyspark.sql.window import Window as W
 
-    from osmgraft.geo.geometry import wkb_validity_col
+    from osmgraft.geo.geometry import xy_validity_sql
 
     ev = t(spark, sf_dir, "events").select(
         "event_id", "user_id",
@@ -1811,23 +1794,11 @@ def wkb_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (~(F.first("user_id") % 7 == 0)).alias("closed"),
     )
 
-    @F.pandas_udf("binary")
-    def _ring_wkb(pts: pd.Series, closed: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from osmgraft.geo.geometry import polygon_wkb
-
-        out = []
-        for lst, cl in zip(pts, closed):
-            ring = np.array([[p["x"], p["y"]] for p in lst], dtype=float)
-            if cl:
-                ring = np.vstack([ring, ring[:1]])
-            out.append(polygon_wkb(ring))
-        return pd.Series(out)
-
+    # the ring is its own column: spliced into the validity text, it would
+    # be rebuilt at every vertex the lambdas read
     audited = rings.withColumn(
-        "reason", wkb_validity_col(_ring_wkb(F.col("pts"), F.col("closed")))
-    )
+        "ring", F.expr("IF(closed, concat(pts, slice(pts, 1, 1)), pts)")
+    ).withColumn("reason", F.expr(xy_validity_sql("ring", "'polygon'")))
     return (
         audited.groupBy("reason").agg(F.count("*").alias("n_geoms")).orderBy("reason")
     )

@@ -50,7 +50,7 @@ def _hits_sql(word: str) -> str:
     )
 
 
-def _lang_score_sql(lang: str) -> str:
+def _marker_hits_sql(lang: str) -> str:
     return "(" + " + ".join(_hits_sql(w) for w in LANG_MARKERS[lang]) + ")"
 
 
@@ -59,7 +59,7 @@ WITH p AS (SELECT doc_id,
                   ' ' || replace(lower(text), ' ', '  ') || ' ' AS padded
            FROM documents),
      s AS (SELECT doc_id,
-           {', '.join(f'{_lang_score_sql(lg)} AS score_{lg}' for lg in LANG_MARKERS)}
+           {', '.join(f'{_marker_hits_sql(lg)} AS score_{lg}' for lg in LANG_MARKERS)}
            FROM p),
      g AS (SELECT doc_id, GREATEST({', '.join(f'score_{lg}' for lg in LANG_MARKERS)}) AS best, *
            FROM s)

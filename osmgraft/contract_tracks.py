@@ -15,7 +15,8 @@ over the recursive frontier (lexicographic [c², -seq] == numpy first-max
 tiebreak), and the split test compares squared cross products against
 eps² * chord² (multiplication only — no sqrt/division ulp). The Spark
 side runs the identical arithmetic in a vectorized numpy kernel via
-applyInPandas (geo/simplify.py), one shuffle on user_id, Arrow-batched.
+mapInPandas (geo/simplify.simplify_partition), one shuffle on user_id,
+Arrow-batched.
 """
 
 from __future__ import annotations

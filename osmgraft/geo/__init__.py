@@ -4,7 +4,6 @@ from osmgraft.geo.geometry import (
     inv_mercator_sql,
     mercator_np,
     mercator_sql,
-    planar_length_col,
     polygon_wkb,
     point_wkb,
 )
@@ -22,7 +21,6 @@ __all__ = [
     "inv_mercator_sql",
     "mercator_np",
     "mercator_sql",
-    "planar_length_col",
     "polygon_wkb",
     "point_wkb",
     "STRtree",

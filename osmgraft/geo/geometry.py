@@ -6,15 +6,15 @@ ST_Area (07_pipeline_polygon.sh:143), ST_Length
 (scripts/verify/verify_import.py:339) — with planar (EPSG:3857-style) math,
 matching the reference's Mercator-planar semantics (SURVEY.md §7.3 item 6).
 
-Geometry travels in one of two forms:
-- WKB `binary` columns where the input is WKB (the registry tables); the
-  math runs as Arrow-batched pandas UDFs over numpy (never per-row Python).
-  WKB here is the standard OGC little-endian encoding (public format),
-  written/read with `struct`/numpy;
-- coordinate arrays `array<struct<x: double, y: double>>` where the JVM
-  builds the geometry (the pipeline's page footprints); area, centroid and
-  validity are higher-order-function SQL that repeats the numpy kernels'
-  floating-point operations in the same order, so no Python worker starts.
+All Spark-side geometry math is SQL over coordinate arrays
+`array<struct<x: double, y: double>>`: length, area, centroid and validity
+are higher-order-function SQL that repeats the numpy kernels' floating-point
+operations in the same order, so no Python worker starts.
+
+WKB (the standard OGC little-endian encoding, written and read with
+`struct`/numpy) exists only where a file holds it: the boundary
+`polygon_wkb` that `PipIndex.build` parses on the driver, the raster tiles
+and the fixtures.
 """
 
 from __future__ import annotations
@@ -23,10 +23,7 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from osmgraft.geo.hexgrid import lit_sql
 
@@ -100,39 +97,24 @@ def ring_centroid(ring: np.ndarray) -> tuple[float, float]:
 
 
 def path_length(coords: np.ndarray) -> float:
+    """Summed segment lengths, added in a left fold (path_length_sql's order)."""
     d = np.diff(coords, axis=0)
-    return float(np.sqrt((d * d).sum(axis=1)).sum())
-
-
-# ---------------------------------------------------------------------------
-# pandas UDFs over WKB (the registry tables' geometry)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(DoubleType())
-def _length_udf(wkb: pd.Series) -> pd.Series:
-    out = np.empty(len(wkb))
-    for i, buf in enumerate(wkb):
-        gtype, coords = parse_wkb(buf)
-        out[i] = path_length(coords) if gtype in (WKB_LINESTRING, WKB_POLYGON) else 0.0
-    return pd.Series(out)
-
-
-def planar_length_col(wkb_col: str | Column) -> Column:
-    """ST_Length equivalent (planar)."""
-    return _length_udf(F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col)
+    seg = np.sqrt((d * d).sum(axis=1))
+    return float(np.add.accumulate(seg)[-1]) if len(seg) else 0.0
 
 
 # ---------------------------------------------------------------------------
 # coordinate arrays: SQL mirrors of the numpy kernels
 # ---------------------------------------------------------------------------
-# Spark has no geometry area or centroid function. Over `xy` (a polygon's
-# closed outer ring, a line's path or a point's one vertex) these builders
-# emit SQL that is bit-equal to the numpy kernels because it adds in their
-# order: np.sum and np.mean fold left below 8 terms (from 8 terms numpy's
-# pairwise sum unrolls by 8, and the fold may differ in the last bits).
-# Every ring the pipeline and the fixtures build has at most 5 vertices.
-# The per-vertex terms are one `transform`, their sums one `aggregate`.
+# Spark has no geometry length, area or centroid function. Over `xy` (a
+# polygon's closed outer ring, a line's path or a point's one vertex) these
+# builders emit SQL that is bit-equal to the numpy kernels because it adds in
+# their order: np.sum and np.mean fold left below 8 terms (from 8 terms
+# numpy's pairwise sum unrolls by 8, and the fold may differ in the last
+# bits). Every ring the pipeline, the fixtures and the registry build has at
+# most 6 vertices; path_length folds left at any length, since tracks are
+# longer. The per-vertex terms are one `transform` (or `zip_with`), their
+# sums one `aggregate`.
 
 XY_TYPE = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
 
@@ -172,6 +154,17 @@ def path_centroid_sql(xy: str) -> str:
         "(_a, _p) -> named_struct('x', _a.x + _p.x, 'y', _a.y + _p.y), "
         f"_a -> named_struct('cx', try_divide(_a.x, size({xy})), "
         f"'cy', try_divide(_a.y, size({xy}))))"
+    )
+
+
+def path_length_sql(xy: str) -> str:
+    """path_length of the path `xy`: each segment is zipped with its start
+    vertex, and the lengths are added left to right (0.0 for one vertex)."""
+    head, tail = f"slice({xy}, 1, size({xy}) - 1)", f"slice({xy}, 2, size({xy}) - 1)"
+    return (
+        f"aggregate(zip_with({tail}, {head}, "
+        "(_b, _a) -> sqrt((_b.x - _a.x) * (_b.x - _a.x) + (_b.y - _a.y) * (_b.y - _a.y))), "
+        "0D, (_s, _d) -> _s + _d)"
     )
 
 
@@ -253,16 +246,6 @@ def wkb_validity_reason(buf: bytes) -> str:
     if shoelace_area(coords[:-1]) < ZERO_AREA_EPS:
         return "zero_area"
     return "valid"
-
-
-@F.pandas_udf(StringType())
-def _validity_udf(wkb: pd.Series) -> pd.Series:
-    return pd.Series([wkb_validity_reason(b) for b in wkb])
-
-
-def wkb_validity_col(wkb_col: "str | Column") -> Column:
-    """ST_IsValid-style audit reason per geometry (vectorized Arrow pass)."""
-    return _validity_udf(F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col)
 
 
 def xy_validity_sql(xy: str = "way_xy", kind: str = "geom_kind") -> str:

@@ -56,19 +56,6 @@ def dp_keep_mask(x: np.ndarray, y: np.ndarray, eps: float) -> np.ndarray:
     return keep
 
 
-def simplify_group(pdf, eps: float):
-    """applyInPandas kernel: one user's track (already delivered as a
-    group; sorted here by seq — Spark does not guarantee intra-group
-    order), returns only the kept rows."""
-    pdf = pdf.sort_values("seq").reset_index(drop=True)
-    mask = dp_keep_mask(
-        pdf["x"].to_numpy(dtype=np.float64),
-        pdf["y"].to_numpy(dtype=np.float64),
-        eps,
-    )
-    return pdf.loc[mask]
-
-
 def simplify_partition(batches, eps: float):
     """``mapInPandas`` kernel over one PARTITION hash-partitioned by
     user_id and sorted by (user_id, event_id): assigns each track's seq

@@ -114,8 +114,8 @@ def run_diagnostics(features: DataFrame, threshold: int = R.SCORE_THRESHOLD) -> 
     out["tags_nonempty"] = row["tags_nonempty"]
 
     # D13: geometry validity audit (verify_import.py:223-231 ST_IsValid
-    # counts; round-3 gap-close) — every geometry classified by the SQL twin
-    # of the WKB validity kernel (finite / point count / closure / area);
+    # counts; round-3 gap-close) — every geometry classified by the validity
+    # SQL over way_xy (finite / point count / closure / area);
     # reasons beyond 'valid' demand import investigation
     out["geometry_validity"] = {
         r["reason"]: r["n"]

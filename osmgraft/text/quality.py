@@ -70,14 +70,6 @@ def _word_hits(text: Column, word: str) -> Column:
     return _hits_in_padded(_padded(text), word)
 
 
-def lang_score(text: Column, lang: str) -> Column:
-    s = None
-    for wrd in LANG_MARKERS[lang]:
-        h = _word_hits(text, wrd)
-        s = h if s is None else s + h
-    return s
-
-
 def language_id(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

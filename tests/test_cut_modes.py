@@ -3,7 +3,9 @@
 ``cut`` takes a reliable checkpoint when the session has a checkpoint
 dir and a local checkpoint otherwise. Both kinds must give the same
 rows and truncate lineage, and the reliable kind must write under the
-dir. A source scan keeps every other materialization out of osmgraft/.
+dir. A source scan keeps every other materialization out of osmgraft/;
+two more keep geo/ to one form: cell ids as SQL text, and geometry math
+with no Python UDF.
 
 The queries exercised are real cut consumers: dup_span_stats (gram
 stream read by an agg and a join-back), dedup_clusters (iterative
@@ -102,3 +104,10 @@ def test_geo_cell_ids_have_no_column_backend():
         if pattern.search(line)
     ]
     assert hits == [], "emit cell-id bit arithmetic as SQL text"
+
+
+def test_geometry_has_no_python_udf():
+    """Planar geometry math is SQL over coordinate arrays; a pandas UDF in
+    geo/geometry.py would be a second form of the same kernels."""
+    text = (OSMGRAFT / "geo" / "geometry.py").read_text()
+    assert "pandas_udf" not in text and "import pandas" not in text

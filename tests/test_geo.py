@@ -13,6 +13,7 @@ from osmgraft.geo.geometry import (
     parse_wkb,
     path_centroid_sql,
     path_length,
+    path_length_sql,
     point_wkb,
     polygon_wkb,
     ring_centroid,
@@ -38,10 +39,12 @@ def test_cell_parent_consistency(spark):
 
 
 def test_xy_sql_bit_equals_numpy_kernels(spark):
-    """ring_sql and path_centroid_sql over `way_xy` equal the numpy kernels
-    bit for bit: the fixture's rings and paths, seeded rings of 3-7
-    vertices, and a collinear ring, whose zero area takes ring_centroid's
-    vertex-mean fallback."""
+    """ring_sql, path_centroid_sql and path_length_sql over `way_xy` equal
+    the numpy kernels bit for bit: the fixture's rings and paths, seeded
+    rings of 3-7 vertices, a collinear ring, whose zero area takes
+    ring_centroid's vertex-mean fallback, and seeded tracks of 2-120
+    vertices, past the 8 terms where numpy's pairwise sum stops folding
+    left. One vertex has length 0.0 and a NULL array a NULL length."""
     from osmgraft.datagen import gen_osm_features
 
     feats = gen_osm_features(2000)
@@ -62,7 +65,8 @@ def test_xy_sql_bit_equals_numpy_kernels(spark):
 
     def frame(geoms):
         return spark.createDataFrame(
-            [(i, [tuple(map(float, p)) for p in g]) for i, g in enumerate(geoms)],
+            [(i, None if g is None else [tuple(map(float, p)) for p in g])
+             for i, g in enumerate(geoms)],
             f"i int, xy {XY_TYPE.simpleString()}",
         )
 
@@ -81,6 +85,12 @@ def test_xy_sql_bit_equals_numpy_kernels(spark):
     for i, path in enumerate(paths):
         assert bits(got[i].cx) == bits(path[:, 0].mean()), path
         assert bits(got[i].cy) == bits(path[:, 1].mean()), path
+    tracks = paths + [rng.uniform(3e5, 7e5, size=(n, 2)) for n in range(2, 121)]
+    tracks += [np.array([[351000.1, 402000.3]]), None]
+    got = stats(tracks, path_length_sql("xy"))
+    assert got[len(tracks) - 2] == 0.0 and got[len(tracks) - 1] is None
+    for i, track in enumerate(tracks[:-1]):
+        assert bits(got[i]) == bits(path_length(track)), track
 
 
 def test_xy_validity_sql_matches_wkb_kernel(spark):

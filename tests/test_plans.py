@@ -190,12 +190,15 @@ def test_yaml_scorer_single_scan_no_python(spark):
     assert opt.count("Relation") == 1
 
 
-def test_length_rollup_single_python_stage(spark):
-    """WKB assembly + length kernel must fuse into one Arrow batch; the
+def test_geometry_queries_plan_no_python(spark):
+    """The track length and the ring validity are SQL over the sorted
+    coordinate arrays: neither plan has a Python node, and the length
     rollup keeps map-side partial aggregation."""
-    plan = plan_of(QUERIES["length_rollup"](spark, SF_CORRECT))
-    assert plan.count("ArrowEvalPython") == 1
-    assert "partial_" in plan
+    plans = {n: plan_of(QUERIES[n](spark, SF_CORRECT)) for n in ("length_rollup", "wkb_validity")}
+    for name, plan in plans.items():
+        for node in ("EvalPython", "InPandas", "InArrow"):
+            assert node not in plan, (name, node)
+    assert "partial_" in plans["length_rollup"]
 
 
 def test_mode_profile_partial_agg(spark):
