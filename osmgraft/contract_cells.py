@@ -7,15 +7,15 @@ scripts/verify/verify_import.py:316) and tile-aggregation outputs.
 
 Oracle discipline (same as osmgraft.contract): the hex oracles embed the
 *same SQL text* the Spark plan parses (osmgraft.geo.hexgrid's emitters),
-so DuckDB recomputes bit-identical cell ids. Spark assigns S2 cells with
-the Arrow UDF; the oracle walks the Hilbert curve in SQL through the
-inlined lookup table (`_s2_assign_cte`), and `s2_bbox_refine` checks the
-cover's superset guarantee against a plain SQL bbox count.
+so DuckDB recomputes bit-identical cell ids. S2 follows the same rule
+with step lists (osmgraft.geo.s2's `s2_cell_steps`, `s2_corner_steps`):
+Spark runs the steps as columns, the oracles as a CTE chain
+(`_s2_assign_cte`), and `s2_bbox_refine` checks the cover's superset
+guarantee against a plain SQL bbox count.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -96,81 +96,30 @@ def _geo_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _duck_steps(src: str, steps: list[tuple[str, str]], name: str) -> str:
+    """CTEs `{name}1` … `{name}N` adding one (column, SQL) step each to
+    the rows of CTE `src`; the last is `{name}N`."""
+    ctes, prev = [], src
+    for n, (col, sql) in enumerate(steps, 1):
+        ctes.append(f"{name}{n} AS (SELECT *, {sql} AS {col} FROM {prev})")
+        prev = f"{name}{n}"
+    return ",\n         ".join(ctes)
+
+
 def _s2_assign_cte(
     level: int, lat_expr: str | None = None, lng_expr: str | None = None
 ) -> str:
-    """DuckDB CTE chain assigning every event point its S2 cell: the
-    algebraic chart math (xyz → face → u,v → s,t → i,j) in plain SQL, then
-    the Hilbert curve as 8 unrolled lookup-table iterations — the
-    1024-entry ij→pos table (geo/s2.py:_build_lookups) inlined as a VALUES
-    list. Round-2 upgrade from rows-only (the traversal IS SQL-expressible
-    once the lookup table is data). Final CTE `asgn` has
+    """DuckDB CTE chain assigning every event point its S2 cell with the
+    step texts Spark runs (s2.s2_cell_steps). The final CTE `asgn` has
     (event_id, face, i, j, s2_cell). `lat_expr`/`lng_expr` default to the
     fixture window; tests override them to exercise all six faces."""
-    lat_expr = lat_expr or LAT_EXPR
-    lng_expr = lng_expr or LNG_EXPR
-    lut = ", ".join(f"({i}, {int(v)})" for i, v in enumerate(s2._LOOKUP_POS))
-    max_ij = (1 << s2.MAX_LEVEL) - 1
-    lsb = s2.lsb_for_level(level)
-    sql = f"""lut(idx, val) AS (VALUES {lut}),
-         pts AS ({_pts_cte()}),
-         g AS (SELECT event_id, {lat_expr} AS lat, {lng_expr} AS lng FROM pts),
-         xyz AS (SELECT event_id,
-                        COS(RADIANS(lat)) * COS(RADIANS(lng)) AS x,
-                        COS(RADIANS(lat)) * SIN(RADIANS(lng)) AS y,
-                        SIN(RADIANS(lat)) AS z
-                 FROM g),
-         fc AS (SELECT event_id, x, y, z,
-                       CASE WHEN ABS(x) >= ABS(y) AND ABS(x) >= ABS(z)
-                            THEN CASE WHEN x < 0 THEN 3 ELSE 0 END
-                            WHEN ABS(y) >= ABS(z)
-                            THEN CASE WHEN y < 0 THEN 4 ELSE 1 END
-                            ELSE CASE WHEN z < 0 THEN 5 ELSE 2 END END AS face
-                FROM xyz),
-         uv AS (SELECT event_id, face,
-                       CASE face WHEN 0 THEN y / x WHEN 1 THEN -x / y
-                                 WHEN 2 THEN -x / z WHEN 3 THEN z / x
-                                 WHEN 4 THEN z / y ELSE -y / z END AS u,
-                       CASE face WHEN 0 THEN z / x WHEN 1 THEN z / y
-                                 WHEN 2 THEN -y / z WHEN 3 THEN y / x
-                                 WHEN 4 THEN -x / y ELSE -x / z END AS v
-                FROM fc),
-         st AS (SELECT event_id, face,
-                       CASE WHEN u >= 0 THEN 0.5 * SQRT(1 + 3 * u)
-                            ELSE 1 - 0.5 * SQRT(1 - 3 * u) END AS s,
-                       CASE WHEN v >= 0 THEN 0.5 * SQRT(1 + 3 * v)
-                            ELSE 1 - 0.5 * SQRT(1 - 3 * v) END AS t
-                FROM uv),
-         ij AS (SELECT event_id, face,
-                       LEAST(GREATEST(CAST(FLOOR(1073741824 * s) AS BIGINT), 0), {max_ij}) AS i,
-                       LEAST(GREATEST(CAST(FLOOR(1073741824 * t) AS BIGINT), 0), {max_ij}) AS j
-                FROM st),
-         h8 AS (SELECT event_id, i, j,
-                       CAST(face AS BIGINT) << 60 AS n,
-                       CAST(face & 1 AS BIGINT) AS bits
-                FROM ij)"""
-    for k in range(7, -1, -1):
-        sql += f""",
-         h{k} AS (SELECT p.event_id, p.i, p.j,
-                         p.n | ((CAST(l.val AS BIGINT) >> 2) << {k * 8}) AS n,
-                         (l.val & 3) AS bits
-                  FROM h{k + 1} p JOIN lut l
-                    ON l.idx = p.bits + (((p.i >> {k * 4}) & 15) << 6)
-                               + (((p.j >> {k * 4}) & 15) << 2))"""
-    sql += f""",
-         -- the leaf step sets bit 63 for faces 4/5; DuckDB raises on BOTH
-         -- signed multiply AND left-shift overflow, so wrap explicitly
-         -- through HUGEINT (2's-complement, exactly like the uint64 kernel)
-         lf AS (SELECT event_id, i, j, (h0.n >> 60) AS face,
-                       CAST(h0.n AS HUGEINT) * 2 + 1 AS leaf_h
-                FROM h0),
-         asgn AS (SELECT event_id, i, j, face,
-                         ((CAST(CASE WHEN leaf_h >= 9223372036854775808
-                                     THEN leaf_h - 18446744073709551616
-                                     ELSE leaf_h END AS BIGINT)
-                           & -{lsb}) | {lsb}) AS s2_cell
-                  FROM lf)"""
-    return sql
+    steps = s2.s2_cell_steps("lat", "lng", level, dialect="duckdb")
+    return f"""pts AS ({_pts_cte()}),
+         g AS (SELECT event_id, {lat_expr or LAT_EXPR} AS lat,
+                      {lng_expr or LNG_EXPR} AS lng FROM pts),
+         {_duck_steps("g", steps, "s2_")},
+         asgn AS (SELECT event_id, _s2_face AS face, _s2_i AS i, _s2_j AS j, _s2_cell AS s2_cell
+                  FROM s2_{len(steps)})"""
 
 
 def _s2_counts_oracle(level: int) -> str:
@@ -183,13 +132,10 @@ def _s2_counts_oracle(level: int) -> str:
 
 @q("s2_cell_counts", oracle=_s2_counts_oracle(S2_LEVEL))
 def s2_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 cell assignment (level 12, quadratic-projection Hilbert ids) via
-    the vectorized Arrow UDF, + per-cell rollup. Round-2: now fully
-    oracle-paired — the DuckDB oracle recomputes the chart algebra in SQL
-    and walks the Hilbert curve through the inlined lookup table
-    (_s2_oracle_sql), so every id is cross-engine verified, replacing the
-    rows-only check (property suite still covers the structural
-    invariants)."""
+    """S2 cell assignment (level 12, quadratic-projection Hilbert ids) as
+    JVM expressions (s2.with_s2_cell), + per-cell rollup. The DuckDB
+    oracle runs the same step texts (_s2_assign_cte), so every id is
+    cross-engine verified."""
     pts = _geo_points(spark, sf_dir)
     return (
         s2.with_s2_cell(pts, "lat", "lng", S2_LEVEL, out="s2_cell")
@@ -476,55 +422,19 @@ def hex_polyfill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s2_vec_oracle(level: int) -> str:
-    """Oracle for the S2 vector tiles: forward-assign cells (shared
-    _s2_assign_cte — every point carries its face/i/j), group, then derive
-    the 4 corner lat/lngs algebraically (st → uv quadratic inverse → face
-    chart → xyz → asin/atan2). Round-2 upgrade from rows-only."""
+    """Oracle for the S2 vector tiles: the shared assignment chain, the
+    per-cell rollup, then the corner steps Spark runs."""
     size = 1 << (s2.MAX_LEVEL - level)
-    inv = "9.313225746154785e-10"  # exact 2^-30 (power of two ⇒ * == /)
-    third = hg.lit_sql(1.0 / 3.0)
-
-    def st2uv(e: str) -> str:
-        return (
-            f"CASE WHEN {e} >= 0.5 THEN {third} * (4*({e})*({e}) - 1) "
-            f"ELSE {third} * (1 - 4*(1-({e}))*(1-({e}))) END"
-        )
-
-    corners = [(0, 0), (1, 0), (1, 1), (0, 1)]  # ij order (ll, lr, ur, ul)
-    ucols = []
-    for c, (di, dj) in enumerate(corners):
-        se = f"((i0 + {di * size}) * {inv})"
-        te = f"((j0 + {dj * size}) * {inv})"
-        ucols.append(f"{st2uv(se)} AS u{c}, {st2uv(te)} AS v{c}")
-    # face charts (geo/s2.py cell_boundary_latlng)
-    xyz = {
-        "x": ["1", "-u{c}", "-u{c}", "-1", "v{c}", "v{c}"],
-        "y": ["u{c}", "1", "-v{c}", "-v{c}", "-1", "u{c}"],
-        "z": ["v{c}", "v{c}", "1", "-u{c}", "-u{c}", "-1"],
-    }
-    outs = []
-    for c in range(4):
-        def cf(axis: str) -> str:
-            branches = " ".join(
-                f"WHEN {f} THEN {xyz[axis][f].format(c=c)}" for f in range(6)
-            )
-            return f"(CASE face {branches} END)"
-
-        xe, ye, ze = cf("x"), cf("y"), cf("z")
-        nrm = f"SQRT({xe}*{xe} + {ye}*{ye} + {ze}*{ze})"
-        # "+ 0.0" maps -0.0 to +0.0 (ATAN2 of a tiny negative y rounds to
-        # -0.0 here while the numpy kernel lands on +0.0)
-        outs.append(f"ROUND(DEGREES(ASIN({ze} / {nrm})), 6) + 0.0 AS vlat{c}")
-        outs.append(f"ROUND(DEGREES(ATAN2({ye}, {xe})), 6) + 0.0 AS vlng{c}")
+    corners = s2.s2_corner_steps("face", "i0", "j0", level)
     return f"""
     WITH {_s2_assign_cte(level)},
          cells AS (SELECT s2_cell, MIN(face) AS face,
                           MIN(i & -{size}) AS i0, MIN(j & -{size}) AS j0,
                           CAST(COUNT(*) AS BIGINT) AS n
                    FROM asgn GROUP BY s2_cell),
-         cor AS (SELECT s2_cell, n, face, {", ".join(ucols)} FROM cells)
-    SELECT s2_cell, n, {", ".join(outs)}
-    FROM cor ORDER BY s2_cell
+         {_duck_steps("cells", corners, "cor")}
+    SELECT s2_cell, n, {", ".join(f"vlat{c}, vlng{c}" for c in range(4))}
+    FROM cor{len(corners)} ORDER BY s2_cell
     """
 
 
@@ -532,37 +442,21 @@ def _s2_vec_oracle(level: int) -> str:
 def s2_tile_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 raster→vector tiles: per-cell page counts + the cell's 4 corner
     vertices (cell_to_boundary) — GeoJSON-ready quad polygons, the S2
-    counterpart of hex_tile_vectors. Corner derivation runs in the same
-    Arrow batch as a grouped pandas pass over the (small) aggregated cell
-    set. Round-2: fully oracle-paired — assignment via the Hilbert lookup
-    chain, corners via the algebraic chart inverse (_s2_vec_oracle)."""
-    from pyspark.sql.functions import pandas_udf
-
-    pts = _geo_points(spark, sf_dir)
-    agg = (
-        s2.with_s2_cell(pts, "lat", "lng", 10, out="s2_cell")
-        .groupBy("s2_cell")
-        .agg(F.count("*").alias("n"))
+    counterpart of hex_tile_vectors. The rollup carries each cell's face
+    and min leaf i/j, and the corners are SQL steps over those
+    (s2.s2_corner_steps) that the oracle runs too."""
+    size = 1 << (s2.MAX_LEVEL - 10)
+    pts = s2.with_s2_cell(_geo_points(spark, sf_dir), "lat", "lng", 10, keep_face_ij=True)
+    w = pts.groupBy("s2_cell").agg(
+        F.expr("MIN(s2_cell_face)").alias("face"),
+        F.expr(f"MIN(s2_cell_i & -{size})").alias("i0"),
+        F.expr(f"MIN(s2_cell_j & -{size})").alias("j0"),
+        F.count("*").alias("n"),
     )
-
-    @pandas_udf("array<double>")
-    def corners(cells: pd.Series) -> pd.Series:
-        import numpy as np
-
-        blat, blng = s2.cell_boundary_latlng(cells.to_numpy())
-        return pd.Series(list(np.concatenate([blat, blng], axis=1)))
-
-    w = agg.withColumn("c", corners(F.col("s2_cell")))
-    cols = [F.col("s2_cell"), F.col("n")]
-    for k in range(4):
-        # + 0.0: normalize -0.0 (see _s2_vec_oracle)
-        cols.append(
-            (F.round(F.col("c")[k], 6) + F.lit(0.0)).alias(f"vlat{k}")
-        )
-        cols.append(
-            (F.round(F.col("c")[k + 4], 6) + F.lit(0.0)).alias(f"vlng{k}")
-        )
-    return w.select(*cols).orderBy("s2_cell")
+    corners = s2.s2_corner_steps("face", "i0", "j0", 10)
+    w = w.selectExpr("*", *(f"{sql} AS {col}" for col, sql in corners))
+    vertices = [f"{a}{c}" for c in range(4) for a in ("vlat", "vlng")]
+    return w.select("s2_cell", "n", *vertices).orderBy("s2_cell")
 
 
 _S2_COARSE = 10
@@ -582,9 +476,9 @@ def s2_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiresolution S2 pyramid — index at level 12, roll up to level-10
     parents (the S2 twin of hex_parent_rollup; S2 parenthood is PREFIX
     nesting, so the hop is two bit-ops on the id: clear below the parent's
-    lsb, set the lsb — pure JVM, zero extra kernel work). One partial-agg
-    shuffle on the coarse id; the oracle reuses the full Hilbert SQL
-    assignment CTE and applies the same bit arithmetic."""
+    lsb, set the lsb). Assignment and hop are JVM expressions; one
+    partial-agg shuffle on the coarse id. The oracle reuses the assignment
+    CTE and applies the same parent text."""
     pts = _geo_points(spark, sf_dir)
     fine = s2.with_s2_cell(pts, "lat", "lng", S2_LEVEL, out="s2_cell")
     return (

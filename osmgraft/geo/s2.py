@@ -1,10 +1,9 @@
 """S2 cell indexing — faithful, from-scratch, fully vectorized.
 
 Implements the public S2 cell-id scheme (quadratic ST projection + Hilbert
-curve on the 6 cube faces, 64-bit ids, levels 0..30) as numpy kernels
-suitable for Arrow/pandas UDFs — the north-star requirement that H3/S2
-indexing be "vectorized pandas/Arrow UDFs" (BASELINE.json north_star) and
-the Spark replacement for the reference's GiST spatial index
+curve on the 6 cube faces, 64-bit ids, levels 0..30) for the north-star
+requirement of S2 indexing on Spark (BASELINE.json north_star), as the
+Spark replacement for the reference's GiST spatial index
 (07_pipeline_point.sh:215) and bbox window queries
 (scripts/verify/verify_import.py:316).
 
@@ -19,12 +18,17 @@ exploits — osmgraft/geo/cells.py), and a cell range
 ``[range_min(p), range_max(p)]`` contains exactly the descendants of ``p``
 ⇒ bbox covers become min-max-prunable range predicates.
 
-Everything here is O(1) numpy passes per 4-bit Hilbert chunk (8 iterations
-for 30 levels) — no per-row Python. Spark assigns cells through one path,
-the Arrow UDF over `cell_np` (`with_s2_cell`); the DuckDB oracle recomputes
-the same ids in SQL (contract_cells._s2_assign_cte). Work on assigned ids —
-parents (`s2_parent_sql`) and cover predicates (`s2_range_predicate`) — is
-SQL text that Spark parses and the oracles embed unchanged.
+Two bit-identical forms, as for the other cell indexes:
+
+- **SQL text**: cell assignment (`s2_cell_steps`) and cell corners
+  (`s2_corner_steps`) are ordered (column, SQL) step lists; Spark runs
+  them as JVM expressions (`with_s2_cell`) and the DuckDB oracles embed
+  the same texts (contract_cells._s2_assign_cte). Work on assigned ids —
+  parents (`s2_parent_sql`) and cover predicates (`s2_range_predicate`)
+  — is one SQL text each.
+- **numpy** (`cell_np`, `from_face_ij`, …): the reference in tests and
+  the driver-side code (covers, k-rings, boundaries). O(1) passes per
+  4-bit Hilbert chunk (8 iterations for 30 levels), no per-row Python.
 
 Derivation is from the published algorithm (s2geometry docs; Hilbert
 lookup-table construction); no third-party s2 library exists in this
@@ -36,10 +40,9 @@ round-trip center containment, monotone curve locality.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from osmgraft.geo.hexgrid import lit_sql
 
 MAX_LEVEL = 30
 _LOOKUP_BITS = 4
@@ -108,24 +111,10 @@ def _xyz_to_face_uv(x, y, z):
     face = np.where(ax >= ay, np.where(ax >= az, 0, 2), np.where(ay >= az, 1, 2))
     comp = np.choose(face, [x, y, z])
     face = np.where(comp < 0, face + 3, face).astype(np.int64)
-    # Per-face (u, v) from the public face chart.
-    u = np.empty_like(x)
-    v = np.empty_like(x)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for f, (uf, vf) in enumerate(
-            [
-                (lambda: y / x, lambda: z / x),
-                (lambda: -x / y, lambda: z / y),
-                (lambda: -x / z, lambda: -y / z),
-                (lambda: z / x, lambda: y / x),
-                (lambda: z / y, lambda: -x / y),
-                (lambda: -y / z, lambda: -x / z),
-            ]
-        ):
-            m = face == f
-            if m.any():
-                u[m] = uf()[m]
-                v[m] = vf()[m]
+    # per-face (u, v) from the public face chart
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        u = np.choose(face, [y / x, -x / y, -x / z, z / x, z / y, -y / z])
+        v = np.choose(face, [z / x, z / y, -y / z, y / x, -x / y, -x / z])
     return face, u, v
 
 
@@ -201,13 +190,18 @@ def lsb_for_level(level: int) -> int:
 
 
 def cell_np(lat_deg: np.ndarray, lng_deg: np.ndarray, level: int) -> np.ndarray:
-    """lat/lng degrees -> S2 cell id at `level`. The engine's main kernel."""
-    x, y, z = _latlng_to_xyz(np.asarray(lat_deg, float), np.asarray(lng_deg, float))
+    """lat/lng degrees -> S2 cell id at `level`: the reference for
+    s2_cell_steps. A NaN or ±inf lat or lng gives 0, S2's invalid id
+    (every valid id ends in a 1 bit); the SQL steps give NULL."""
+    lat = np.asarray(lat_deg, float)
+    lng = np.asarray(lng_deg, float)
+    ok = np.isfinite(lat) & np.isfinite(lng)
+    x, y, z = _latlng_to_xyz(np.where(ok, lat, 0.0), np.where(ok, lng, 0.0))
     face, u, v = _xyz_to_face_uv(x, y, z)
     i = _st_to_ij(_uv_to_st(u))
     j = _st_to_ij(_uv_to_st(v))
     leaf = from_face_ij(face, i, j)
-    return parent_np(leaf, level)
+    return np.where(ok, parent_np(leaf, level), 0)
 
 
 def parent_np(ids: np.ndarray, level: int) -> np.ndarray:
@@ -240,6 +234,21 @@ def range_max_np(ids: np.ndarray) -> np.ndarray:
     return (u + lsb - np.uint64(1)).astype(np.int64)
 
 
+def _face_uv_to_latlng(face, u, v):
+    """(face, u, v) -> (lat, lng) degrees through the public face charts."""
+    x, y, z = np.empty_like(u), np.empty_like(u), np.empty_like(u)
+    one = np.ones_like(u)
+    charts = [
+        (one, u, v), (-u, one, v), (-u, -v, one),
+        (-one, -v, -u), (v, -one, -u), (v, u, -one),
+    ]
+    for f, (xf, yf, zf) in enumerate(charts):
+        m = face == f
+        x[m], y[m], z[m] = xf[m], yf[m], zf[m]
+    norm = np.sqrt(x * x + y * y + z * z)
+    return np.degrees(np.arcsin(z / norm)), np.degrees(np.arctan2(y, x))
+
+
 def cell_center_latlng(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Cell id -> (lat, lng) of the cell center, degrees."""
     ids = np.asarray(ids)
@@ -247,30 +256,9 @@ def cell_center_latlng(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     face, i, j = to_face_ij(ids)
     size = (np.int64(1) << (MAX_LEVEL - lvl)).astype(np.int64)
     # exact st center of the cell's ij block
-    ci = (i & ~(size - 1)) + size * 0.5
-    cj = (j & ~(size - 1)) + size * 0.5
-    u = _st_to_uv(ci / (1 << MAX_LEVEL))
-    v = _st_to_uv(cj / (1 << MAX_LEVEL))
-    x = np.empty_like(u)
-    y = np.empty_like(u)
-    z = np.empty_like(u)
-    charts = [
-        (lambda u, v: (np.ones_like(u), u, v)),
-        (lambda u, v: (-u, np.ones_like(u), v)),
-        (lambda u, v: (-u, -v, np.ones_like(u))),
-        (lambda u, v: (-np.ones_like(u), -v, -u)),
-        (lambda u, v: (v, -np.ones_like(u), -u)),
-        (lambda u, v: (v, u, -np.ones_like(u))),
-    ]
-    for f, chart in enumerate(charts):
-        m = face == f
-        if m.any():
-            xf, yf, zf = chart(u[m], v[m])
-            x[m], y[m], z[m] = xf, yf, zf
-    norm = np.sqrt(x * x + y * y + z * z)
-    lat = np.degrees(np.arcsin(z / norm))
-    lng = np.degrees(np.arctan2(y, x))
-    return lat, lng
+    ci = ((i & ~(size - 1)) + size * 0.5) / (1 << MAX_LEVEL)
+    cj = ((j & ~(size - 1)) + size * 0.5) / (1 << MAX_LEVEL)
+    return _face_uv_to_latlng(face, _st_to_uv(ci), _st_to_uv(cj))
 
 
 def kring_np(ids: np.ndarray, k: int) -> np.ndarray:
@@ -414,24 +402,160 @@ def cover_rect(
 
 
 # ---------------------------------------------------------------------------
-# Spark surface
+# SQL text — one step list that Spark runs (with_s2_cell) and the DuckDB
+# oracles embed (contract_cells._s2_assign_cte)
 # ---------------------------------------------------------------------------
 
+# face << 61 as signed 64-bit literals: shifting a face into bit 63 raises
+# in DuckDB, and 4 << 61 is -2^63, whose literal does not parse as BIGINT
+_FACE_BITS = ("0", str(1 << 61), str(2 << 61), str(3 << 61),
+              "-9223372036854775807 - 1", str((5 << 61) - (1 << 64)))
+# face chart (_xyz_to_face_uv): u and v share the face's major axis as
+# their denominator, so each is one division
+_CHART_U = ("_s2_y", "-_s2_x", "-_s2_x", "_s2_z", "_s2_z", "-_s2_y")
+_CHART_V = ("_s2_z", "_s2_z", "-_s2_y", "_s2_y", "-_s2_x", "-_s2_x")
+_MAJOR = ("_s2_x", "_s2_y", "_s2_z") * 2
 
-def s2_cell_udf(level: int):
-    """Vectorized Arrow UDF: (lat, lng) -> S2 cell id at `level`."""
 
-    @pandas_udf("long")
-    def _s2(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        return pd.Series(cell_np(lat.to_numpy(), lng.to_numpy(), level))
+def _by_face(face: str, branches) -> str:
+    """CASE over the six faces, NULL for a NULL face."""
+    return f"CASE {face} " + " ".join(f"WHEN {f} THEN {b}" for f, b in enumerate(branches)) + " END"
 
-    return _s2
+
+def _uv_to_st_sql(u: str) -> str:
+    return (
+        f"CASE WHEN {u} >= 0 THEN 0.5e0 * SQRT(1.0e0 + 3.0e0 * {u}) "
+        f"ELSE 1.0e0 - 0.5e0 * SQRT(1.0e0 - 3.0e0 * {u}) END"
+    )
+
+
+def _st_to_ij_sql(s: str) -> str:
+    n = 1 << MAX_LEVEL
+    return f"CAST(LEAST(GREATEST(FLOOR({n} * {s}), 0), {n - 1}) AS INT)"
+
+
+def s2_cell_steps(lat: str, lng: str, level: int, *, dialect: str) -> list[tuple[str, str]]:
+    """cell_np as ordered (column, SQL) steps over the lat/lng degree
+    columns; each reads the columns before it, and the last, `_s2_cell`,
+    is the id. Steps, not one text: every Hilbert step reads i and j, and
+    the id reads every Hilbert step, so one text would repeat the chain
+    dozens of times. The only dialect split is the lookup array and its
+    accessor.
+
+    A NULL, NaN or ±inf lat or lng gives a NULL cell: `_s2_ok` is false
+    for NaN and ±inf in both engines and NULL for NULL, and no later step
+    reads the raw value (DuckDB raises on COS(±inf) and on NaN to BIGINT)."""
+    vals = ",".join(str(int(v)) for v in _LOOKUP_POS)
+    if dialect == "spark":
+        # one string literal: Spark folds it to the same constant array,
+        # and analyses it faster than an array() of 1,024 literals
+        lut, get = f"CAST(split('{vals}', ',') AS ARRAY<INT>)", "element_at"
+    else:
+        lut, get = f"[{vals}]", "list_extract"
+    steps = [
+        ("_s2_ok", f"{lat} - {lat} = 0 AND {lng} - {lng} = 0"),
+        ("_s2_phi", f"CASE WHEN _s2_ok THEN RADIANS({lat}) END"),
+        ("_s2_theta", f"CASE WHEN _s2_ok THEN RADIANS({lng}) END"),
+        ("_s2_x", "COS(_s2_phi) * COS(_s2_theta)"),
+        ("_s2_y", "COS(_s2_phi) * SIN(_s2_theta)"),
+        ("_s2_z", "SIN(_s2_phi)"),
+        (
+            "_s2_face",
+            "CASE WHEN _s2_ok THEN "
+            "CASE WHEN ABS(_s2_x) >= ABS(_s2_y) AND ABS(_s2_x) >= ABS(_s2_z) "
+            "THEN CASE WHEN _s2_x < 0 THEN 3 ELSE 0 END "
+            "WHEN ABS(_s2_y) >= ABS(_s2_z) THEN CASE WHEN _s2_y < 0 THEN 4 ELSE 1 END "
+            "ELSE CASE WHEN _s2_z < 0 THEN 5 ELSE 2 END END END",
+        ),
+        ("_s2_d", _by_face("_s2_face", _MAJOR)),
+        ("_s2_u", f"{_by_face('_s2_face', _CHART_U)} / _s2_d"),
+        ("_s2_v", f"{_by_face('_s2_face', _CHART_V)} / _s2_d"),
+        ("_s2_s", _uv_to_st_sql("_s2_u")),
+        ("_s2_t", _uv_to_st_sql("_s2_v")),
+        ("_s2_i", _st_to_ij_sql("_s2_s")),
+        ("_s2_j", _st_to_ij_sql("_s2_t")),
+        ("_s2_lut", lut),
+        ("_s2_p8", "_s2_face & 1"),
+    ]
+    # The Hilbert walk, 4 bits of i and j per step: p = lookup value, its
+    # position bits << 2 | the orientation the next step reads. INT
+    # shifts and ors, so Spark emits no overflow checks: the whole chain
+    # is generated into one Java method, which HotSpot leaves interpreted
+    # above 8,000 bytes of bytecode. Shifts bind tighter than `&` and `|`
+    # in Spark, while DuckDB groups `>> << & |` left to right: the
+    # parentheses make both read these texts alike.
+    for k in range(7, -1, -1):
+        steps.append((
+            f"_s2_p{k}",
+            f"{get}(_s2_lut, ((_s2_p{k + 1} & 3) | ((_s2_i >> {4 * k} & 15) << 6) "
+            f"| ((_s2_j >> {4 * k} & 15) << 2)) + 1)",
+        ))
+    pos = " | ".join(f"(CAST(_s2_p{k} >> 2 AS BIGINT) << {8 * k + 1})" for k in range(7, -1, -1))
+    leaf = f"{pos} | {_by_face('_s2_face', _FACE_BITS)} | 1"
+    steps.append(("_s2_cell", s2_parent_sql(leaf, level)))
+    return steps
 
 
 def with_s2_cell(
-    df: DataFrame, lat: str, lng: str, level: int, out: str = "s2_cell"
+    df: DataFrame, lat: str, lng: str, level: int, out: str = "s2_cell", keep_face_ij: bool = False
 ) -> DataFrame:
-    return df.withColumn(out, s2_cell_udf(level)(F.col(lat), F.col(lng)))
+    """Attach the S2 cell id at `level` (s2_cell_steps, run as JVM
+    expressions). With `keep_face_ij`, the face and leaf i/j are kept as
+    `{out}_face`, `{out}_i`, `{out}_j` (what the cell corners read)."""
+    steps = s2_cell_steps(lat, lng, level, dialect="spark")
+    kept = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    if keep_face_ij:
+        kept += [f"_s2_face AS {out}_face", f"_s2_i AS {out}_i", f"_s2_j AS {out}_j"]
+    # one projection: each step reads the ones before it as lateral aliases
+    steps_df = df.selectExpr("*", *(f"{sql} AS {col}" for col, sql in steps))
+    # The id leaves through a one-element explode: a Generate, which a
+    # filter on `out` cannot be pushed below. Without it Catalyst pushes
+    # such a filter through the step projections and inlines every step
+    # into each reference, repeating the chain dozens of times (where each
+    # step reads the one before twice, an `isin` of two ids took 23 s to
+    # optimize into a 6 MB plan).
+    return steps_df.selectExpr(*kept, f"explode(array(_s2_cell)) AS {out}")
+
+
+# face charts (_face_uv_to_latlng): the (x, y, z) of face point (u, v)
+_CHART_XYZ = (
+    ("1", "-{u}", "-{u}", "-1", "{v}", "{v}"),
+    ("{u}", "1", "-{v}", "-{v}", "-1", "{u}"),
+    ("{v}", "{v}", "1", "-{u}", "-{u}", "-1"),
+)
+
+
+def _st_to_uv_sql(s: str) -> str:
+    third = lit_sql(1.0 / 3.0)
+    return (
+        f"CASE WHEN {s} >= 0.5e0 THEN {third} * (4.0e0 * {s} * {s} - 1.0e0) "
+        f"ELSE {third} * (1.0e0 - 4.0e0 * (1.0e0 - {s}) * (1.0e0 - {s})) END"
+    )
+
+
+def s2_corner_steps(face: str, i0: str, j0: str, level: int) -> list[tuple[str, str]]:
+    """The 4 corner vertices of level-`level` cells as ordered (column,
+    SQL) steps, from the face and the cell's min leaf i/j (`i & -size`):
+    st -> uv -> face chart -> xyz -> ASIN/ATAN2, cell_boundary_latlng in
+    ij order (ll, lr, ur, ul). Outputs `vlat{c}`, `vlng{c}` in degrees,
+    rounded to 6 places; `+ 0.0` turns -0.0 into 0.0 (ATAN2 of a tiny
+    negative y gives -0.0 in SQL where numpy gives 0.0). The same text
+    runs in Spark and DuckDB."""
+    size = 1 << (MAX_LEVEL - level)
+    inv = lit_sql(1.0 / (1 << MAX_LEVEL))  # 2^-30: `*` equals numpy's `/`
+    steps = []
+    for c, (di, dj) in enumerate([(0, 0), (1, 0), (1, 1), (0, 1)]):
+        steps.append((f"_s2_u{c}", _st_to_uv_sql(f"(({i0} + {di * size}) * {inv})")))
+        steps.append((f"_s2_v{c}", _st_to_uv_sql(f"(({j0} + {dj * size}) * {inv})")))
+    for c in range(4):
+        x, y, z = (f"_s2_{a}{c}" for a in "xyz")
+        for col, chart in zip((x, y, z), _CHART_XYZ):
+            uv = (e.format(u=f"_s2_u{c}", v=f"_s2_v{c}") for e in chart)
+            steps.append((col, _by_face(face, uv)))
+        norm = f"SQRT({x} * {x} + {y} * {y} + {z} * {z})"
+        steps.append((f"vlat{c}", f"ROUND(DEGREES(ASIN({z} / {norm})), 6) + 0.0e0"))
+        steps.append((f"vlng{c}", f"ROUND(DEGREES(ATAN2({y}, {x})), 6) + 0.0e0"))
+    return steps
 
 
 def s2_parent_sql(cell: str, parent_level: int) -> str:
@@ -538,31 +662,9 @@ def cell_boundary_latlng(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lvl = level_np(ids)
     face, i, j = to_face_ij(ids)
     size = (np.int64(1) << (MAX_LEVEL - lvl)).astype(np.int64)
-    i0 = (i & ~(size - 1)).astype(np.float64)
-    j0 = (j & ~(size - 1)).astype(np.float64)
+    i0 = (i & ~(size - 1)).astype(np.float64)[:, None]
+    j0 = (j & ~(size - 1)).astype(np.float64)[:, None]
     scale = float(1 << MAX_LEVEL)
-    lats = np.empty((len(ids), 4))
-    lngs = np.empty((len(ids), 4))
-    corners = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
-    for c, (di, dj) in enumerate(corners):
-        u = _st_to_uv((i0 + di * size) / scale)
-        v = _st_to_uv((j0 + dj * size) / scale)
-        x = np.empty_like(u)
-        y = np.empty_like(u)
-        z = np.empty_like(u)
-        charts = [
-            (lambda u, v: (np.ones_like(u), u, v)),
-            (lambda u, v: (-u, np.ones_like(u), v)),
-            (lambda u, v: (-u, -v, np.ones_like(u))),
-            (lambda u, v: (-np.ones_like(u), -v, -u)),
-            (lambda u, v: (v, -np.ones_like(u), -u)),
-            (lambda u, v: (v, u, -np.ones_like(u))),
-        ]
-        for f, chart in enumerate(charts):
-            m = face == f
-            if m.any():
-                x[m], y[m], z[m] = chart(u[m], v[m])
-        norm = np.sqrt(x * x + y * y + z * z)
-        lats[:, c] = np.degrees(np.arcsin(z / norm))
-        lngs[:, c] = np.degrees(np.arctan2(y, x))
-    return lats, lngs
+    u = _st_to_uv((i0 + np.array([0.0, 1.0, 1.0, 0.0]) * size[:, None]) / scale)
+    v = _st_to_uv((j0 + np.array([0.0, 0.0, 1.0, 1.0]) * size[:, None]) / scale)
+    return _face_uv_to_latlng(np.repeat(face[:, None], 4, axis=1), u, v)

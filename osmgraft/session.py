@@ -49,6 +49,10 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark otherwise replaces `${…}` in every SQL text it parses,
+        # string literals included (`'${spark.app.name}'` reads the app
+        # name, an unknown `'${x}'` reads '')
+        .config("spark.sql.variable.substitute", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

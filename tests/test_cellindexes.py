@@ -112,18 +112,6 @@ def test_s2_locality_sorted_ids_are_spatially_near():
     assert np.median(d_sorted) < np.median(d_random) / 10
 
 
-def test_s2_spark_udf_matches_numpy(spark):
-    pdf = pd.DataFrame({"lat": LAT[:1000], "lng": LNG[:1000]})
-    sdf = spark.createDataFrame(pdf)
-    got = (
-        s2.with_s2_cell(sdf, "lat", "lng", 12, out="c")
-        .select("c")
-        .toPandas()["c"]
-        .to_numpy()
-    )
-    assert (np.sort(got) == np.sort(s2.cell_np(LAT[:1000], LNG[:1000], 12))).all()
-
-
 # ---------------------------------------------------------------------------
 # Hex grid: numpy vs SQL text + invariants
 # ---------------------------------------------------------------------------
@@ -331,9 +319,44 @@ def _case(name: str):
         lat, lng = inv_mercator_np(mx, my)
         assert np.allclose(lat, _LAT, atol=1e-9) and np.allclose(lng, _LNG, atol=1e-9)
         return {"x": mx, "y": my}, lambda d: list(inv_mercator_sql("x", "y")), [lat, lng]
+    if name.startswith("s2_cell"):
+        level = int(name.split("_")[-1])
+        lat, lat0, a = _with_odd(_LAT, _ODD_A)
+        lng, lng0, b = _with_odd(_LNG, _ODD_B)
+
+        def steps(d):
+            return [
+                ("lat", _odd_sql("lat0", "a")),
+                ("lng", _odd_sql("lng0", "b")),
+                *s2.s2_cell_steps("lat", "lng", level, dialect=d),
+                ("o", "COALESCE(_s2_cell, 0)"),
+            ]
+
+        return {"lat0": lat0, "a": a, "lng0": lng0, "b": b}, steps, [s2.cell_np(lat, lng, level)]
     assert name == "s2_parent"
     ids = s2.cell_np(_LAT, _LNG, 12)
     return {"c": ids}, lambda d: [s2.s2_parent_sql("c", 8)], [s2.parent_np(ids, 8)]
+
+
+# NULL, NaN, ±inf, ±0.0 and a finite value, each paired with each (NaN
+# stands for NULL in numpy). The first four reach SQL by a code column:
+# pandas hands NaN to both engines as NULL.
+_ODD = np.array([np.nan, np.nan, np.inf, -np.inf, -0.0, 0.0, 51.5])
+_ODD_SQL = ["NULL", "CAST('NaN' AS DOUBLE)", "CAST('Infinity' AS DOUBLE)", "CAST('-Infinity' AS DOUBLE)"]
+_ODD_A, _ODD_B = (g.ravel() for g in np.meshgrid(np.arange(len(_ODD)), np.arange(len(_ODD))))
+
+
+def _with_odd(v: np.ndarray, k: np.ndarray):
+    """`v` plus the _ODD[k] rows: (numpy values, raw column, code column);
+    code c > 0 stands for _ODD_SQL[c - 1]."""
+    vals = np.concatenate([v, _ODD[k]])
+    code = np.concatenate([np.zeros(len(v), int), np.where(k < len(_ODD_SQL), k + 1, 0)])
+    return vals, np.where(code > 0, 0.0, vals), code
+
+
+def _odd_sql(v: str, code: str) -> str:
+    branches = " ".join(f"WHEN {c + 1} THEN {e}" for c, e in enumerate(_ODD_SQL))
+    return f"CASE {code} {branches} ELSE {v} END"
 
 
 _CASES = [
@@ -347,6 +370,7 @@ _CASES = [
     "mercator",
     "inv_mercator",
     "s2_parent",
+    *(f"s2_cell_{r}" for r in (0, 12, 30)),
 ]
 
 
@@ -361,19 +385,30 @@ def _bits(v) -> list:
 
 @pytest.mark.parametrize("name", _CASES)
 def test_emitter_spark_duckdb_numpy(spark, name):
+    """Each emitter gives output expressions, or (column, SQL) steps whose
+    last column is the one output; both engines run the same texts."""
     cols, sql, want = _case(name)
     pdf = pd.DataFrame({"i": np.arange(len(next(iter(cols.values())))), **cols})
     outs = [f"o{k}" for k in range(len(want))]
-    got_spark = (
-        spark.createDataFrame(pdf)
-        .selectExpr("i", *(f"{e} AS {o}" for e, o in zip(sql("spark"), outs)))
-        .orderBy("i")
-        .toPandas()
-    )
     con = duckdb.connect()
     con.register("t", pdf)
-    sel = ", ".join(f"{e} AS {o}" for e, o in zip(sql("duckdb"), outs))
-    got_duck = con.execute(f"SELECT i, {sel} FROM t ORDER BY i").df()
+    if isinstance(sql("spark")[0], tuple):
+        sdf, src = spark.createDataFrame(pdf), "t"
+        for col, e in sql("spark"):
+            sdf = sdf.withColumn(col, F.expr(e))
+        for col, e in sql("duckdb"):
+            src = f"(SELECT *, {e} AS {col} FROM {src})"
+        got_spark = sdf.select("i", F.col(col).alias("o0")).orderBy("i").toPandas()
+        got_duck = con.execute(f"SELECT i, {col} AS o0 FROM {src} ORDER BY i").df()
+    else:
+        got_spark = (
+            spark.createDataFrame(pdf)
+            .selectExpr("i", *(f"{e} AS {o}" for e, o in zip(sql("spark"), outs)))
+            .orderBy("i")
+            .toPandas()
+        )
+        sel = ", ".join(f"{e} AS {o}" for e, o in zip(sql("duckdb"), outs))
+        got_duck = con.execute(f"SELECT i, {sel} FROM t ORDER BY i").df()
     for k, (o, w) in enumerate(zip(outs, want)):
         for engine, got in (("spark", got_spark[o]), ("duckdb", got_duck[o])):
             if (name, k) in _LIBM:
@@ -502,10 +537,10 @@ def test_s2_kring_k_for_radius():
 
 
 def test_s2_sql_oracle_all_faces():
-    """Round-2 review fix: the S2 SQL oracle must work on ALL six faces —
-    faces 4/5 set bit 63 in the leaf step, where DuckDB raises on signed
-    shift/multiply overflow; the HUGEINT wrap must reproduce the kernel's
-    uint64 two's-complement ids exactly (negative int64 for faces 4/5)."""
+    """The S2 oracle chain works on all six faces. Faces 4 and 5 set bit
+    63, where DuckDB raises on a signed shift or multiply overflow; the
+    steps place the face bits as signed 64-bit constants instead, so their
+    ids come out negative, equal to the kernel's uint64 ids read as int64."""
     import duckdb
 
     from osmgraft.contract_cells import _s2_assign_cte

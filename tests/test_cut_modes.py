@@ -4,8 +4,8 @@
 dir and a local checkpoint otherwise. Both kinds must give the same
 rows and truncate lineage, and the reliable kind must write under the
 dir. A source scan keeps every other materialization out of osmgraft/;
-two more keep geo/ to one form: cell ids as SQL text, and geometry math
-with no Python UDF.
+three more keep geo/ to one form: cell ids as SQL text, and geometry
+and S2 math with no Python UDF.
 
 The queries exercised are real cut consumers: dup_span_stats (gram
 stream read by an agg and a join-back), dedup_clusters (iterative
@@ -110,4 +110,11 @@ def test_geometry_has_no_python_udf():
     """Planar geometry math is SQL over coordinate arrays; a pandas UDF in
     geo/geometry.py would be a second form of the same kernels."""
     text = (OSMGRAFT / "geo" / "geometry.py").read_text()
+    assert "pandas_udf" not in text and "import pandas" not in text
+
+
+def test_s2_has_no_python_udf():
+    """S2 cells and cell corners are SQL steps that Spark and the DuckDB
+    oracles both run; a pandas UDF in geo/s2.py would be a second form."""
+    text = (OSMGRAFT / "geo" / "s2.py").read_text()
     assert "pandas_udf" not in text and "import pandas" not in text

@@ -152,12 +152,56 @@ def test_hex_kring_join_broadcasts_ring(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_s2_bbox_refine_single_udf_pass(spark):
-    """S2 assignment is one vectorized Arrow UDF evaluation; cover + refine
-    predicates are JVM Filters on top (no second Python hop)."""
-    plan = plan_of(QUERIES["s2_bbox_refine"](spark, SF_CORRECT))
-    assert plan.count("ArrowEvalPython") == 1
-    assert "Filter" in plan
+_S2_QUERIES = ("s2_cell_counts", "s2_bbox_refine", "s2_dwithin_count", "s2_tile_vectors", "s2_parent_rollup")
+
+
+def test_s2_queries_plan_no_python(spark):
+    """S2 cells and cell corners are SQL steps: none of the S2 plans has a
+    Python node, and the cover + refine predicates stay JVM Filters."""
+    plans = {n: plan_of(QUERIES[n](spark, SF_CORRECT)) for n in _S2_QUERIES}
+    for name, plan in plans.items():
+        for node in ("EvalPython", "InPandas", "InArrow"):
+            assert node not in plan, (name, node)
+    assert "Filter" in plans["s2_bbox_refine"]
+
+
+def test_s2_cell_filter_stays_above_steps(spark):
+    """A filter on with_s2_cell's output is not pushed into the step
+    projections: there each step would be inlined into every reference,
+    and each Hilbert step reads the one before twice, so the optimized
+    plan would double per step (MBs and tens of seconds to optimize)."""
+    from osmgraft.geo import s2
+
+    df = spark.range(100).selectExpr("50.0e0 + id * 1.0e-3 AS lat", "-1.0e0 + id * 1.0e-3 AS lng")
+    cells = s2.with_s2_cell(df, "lat", "lng", 12, out="c")
+    ids = [int(v) for v in s2.cell_np([50.0, 50.05], [-1.0, -0.95], 12)]
+    base = len(optimized_of(cells))
+    for filtered in (cells.where(F.col("c").isin(ids)), cells.where(F.col("c").between(*sorted(ids)))):
+        assert len(optimized_of(filtered)) <= 2 * base
+    assert cells.where(F.col("c").isin(ids)).count() > 0
+
+
+def test_s2_generated_methods_stay_jit_compilable(spark):
+    """Spark generates each S2 step chain into one Java method, and HotSpot
+    leaves a method above 8,000 bytes of bytecode interpreted: a chain
+    past that ran s2_dwithin_count's scan about twice as slow."""
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name in _S2_QUERIES:
+            nodes = [QUERIES[name](spark, SF_CORRECT)._jdf.queryExecution().executedPlan()]
+            sizes = []
+            while nodes:
+                node = nodes.pop()
+                if node.nodeName().startswith("WholeStageCodegen"):
+                    sizes.append(codegen.compile(node.doCodeGen()._2())._2().maxMethodCodeSize())
+                children = node.children().iterator()
+                while children.hasNext():
+                    nodes.append(children.next())
+            assert sizes and max(sizes) < 8000, (name, sizes)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_coverage_report_broadcasts_known_side(spark):

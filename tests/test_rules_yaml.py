@@ -464,3 +464,14 @@ def test_raw_sql_with_variable_reference_is_refused(monkeypatch):
     monkeypatch.setitem(R.IDENTITY_PREDICATE, "point", "name = '${spark.app.name}'")
     with pytest.raises(ValueError, match=r"\$\{"):
         candidate_sql("point")
+
+
+def test_session_leaves_variable_references_alone(spark):
+    """get_spark turns Spark's `${...}` substitution off: a literal that
+    carries one reads back unchanged through F.expr and selectExpr alike
+    (with it on, the first reads the app name and the second '')."""
+    texts = ["${spark.app.name}", "${x}"]
+    row = spark.range(1).select(*(F.expr(f"'{t}'").alias(f"e{k}") for k, t in enumerate(texts))).first()
+    assert list(row) == texts
+    row = spark.range(1).selectExpr(*(f"'{t}' AS s{k}" for k, t in enumerate(texts))).first()
+    assert list(row) == texts

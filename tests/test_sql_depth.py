@@ -72,6 +72,12 @@ def _texts() -> dict[str, list[str]]:
         "hex_parent_sql": hg.hex_parent_sql("c", 9, 7),
         **{f"hex_kring_sql_{d}": hg.hex_kring_sql("c", 2, dialect=d) for d in ("spark", "duckdb")},
         "s2_parent_sql": s2.s2_parent_sql("c", 8),
+        **{
+            f"s2_cell_steps_{d}_{lvl}": [t for _, t in s2.s2_cell_steps("lat", "lng", lvl, dialect=d)]
+            for d in ("spark", "duckdb")
+            for lvl in (0, 30)
+        },
+        "s2_corner_steps": [t for _, t in s2.s2_corner_steps("face", "i0", "j0", 10)],
         "mercator_sql": mercator_sql("lat", "lng"),
         "inv_mercator_sql": inv_mercator_sql("x", "y"),
         "ring_sql": ring_sql("way_xy"),
